@@ -94,13 +94,13 @@ object Bench {
       "bm25_persisted", "bm25_incremental", "bm25_compacted",
       "dedup_incremental", "dedup_incremental_bloom",
       "dedup_incremental_compacted",
-      // round-14/15: per-rep sketch-layout persist / containment-layout
-      // rebuild+append(+compact) / uncached Bloom build — maintenance,
-      // not query latency. containment_incremental_bloom itself moved
-      // to the MAIN set in round 15: its Bloom now comes from the
-      // process memo (built once per history release in production),
-      // so its lane grades probe cost; the build stays visible here
-      // via containment_bloom_build (round-14 verdict #4)
+      // per-rep sketch-layout persist / containment-layout
+      // rebuild+append(+compact) / uncached history-artifact build —
+      // maintenance, not query latency. containment_incremental_bloom
+      // sits in the MAIN set: it probes a layout the process memo builds
+      // once (once per history release in production), so its lane
+      // grades probe cost; the build stays visible here via
+      // containment_bloom_build
       "icws_persisted", "icws_compacted", "containment_bloom_build",
       "containment_incremental_persisted",
       "containment_incremental_compacted")

@@ -44,8 +44,9 @@ object DeterminismProbe {
     "containment_incremental", "dedup_savings_drift",
     "source_weighted_jaccard_icws", "lsh_recall_curve",
     // round-14 additions: the gate's single-direction cost dial, its
-    // Bloom-pruned variant (must stay bit-identical under any layout)
-    // and the persisted ICWS probe (parquet round-trip + argmin)
+    // probe over the memoized persisted layout (must stay bit-identical
+    // under any layout) and the persisted ICWS probe (parquet
+    // round-trip + argmin)
     "containment_incremental_batch", "containment_incremental_bloom",
     "icws_persisted", "containment_incremental_persisted",
     "source_weighted_containment",

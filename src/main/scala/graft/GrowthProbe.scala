@@ -188,16 +188,6 @@ object GrowthProbe {
     probe("boilerplate_removal")(d => TextAnalysis.removeBoilerplate(d).count())
     probe("dsir_weights")(d => Sampling.dsirWeights(d).count())
     probe("normalized_dedup")(d => TextAnalysis.normalizedDedup(d).count())
-    // bloom-prefiltered incremental dedup: the probe pays the bloom
-    // BUILD per call too (honest one-shot cost; a real ingest builds
-    // once and amortizes across batches) — both build and probe must
-    // stay linear in their own axis
-    probe("dedup_incremental_bloom")(d => {
-      val hist = d.filter(col("doc_id") % 3 =!= 0)
-      val blooms = Dedup.historyBlooms(hist, expectedItems = 200000L)
-      Dedup.incrementalFlagsBloomed(d.filter(col("doc_id") % 3 === 0),
-        hist, 0.5, blooms).count()
-    })
     probe("bigram_lm")(d => TextAnalysis.bigramLm(d).count())
     // classifier evaluation: ONE sample-capped fit shared across both
     // sizes (the pqModel discipline — fit cost is constant in n by
@@ -860,27 +850,6 @@ object GrowthProbe {
       val (r1, a1) = run(full, "/tmp/growth_icws_app_100k")
       val (r2, a2) = run(x2, "/tmp/growth_icws_app_200k")
       println(f"$a1%7.2f  $a2%7.2f  append ratio=${a2 / a1}%5.2f  (rebuild $r1%.2f → $r2%.2f, ${r2 / r1}%4.2fx)  ${if (a2 / a1 > 3.0) "SLOW " else "ok   "}icws_append fixed batch (hist=100k→200k)")
-    }
-    // bloomed incremental gate with a PRE-BUILT Bloom (the production
-    // steady state and the graded shape since r15): history doubles,
-    // batch fixed — per-hit cost must track candidate pairs
-    if (!skipProbe("containment_bloom_2x")) locally {
-      def run(hist: org.apache.spark.sql.DataFrame, items: Long): (Double, Long) = {
-        val h = hist.filter(col("doc_id") % 40 =!= 0)
-        val bloom = Dedup.containmentHistoryVocabBloom(h, expectedItems = items)
-        val batch = full.filter(col("doc_id") % 40 === 0)
-          .select(col("doc_id") + 10000000L as "doc_id", col("text"))
-        var hits = 0L
-        val t = bestOf2 {
-          hits = Dedup.containmentGateIncrementalBloomed(batch, h, 0.9,
-            bloom, maxJoinMass = 4000000000L)
-            .agg(sum(col("n_hits"))).head().getLong(0); hits }
-        (t, hits)
-      }
-      val (t1, h1) = run(full, 4000000L)
-      val (t2, h2) = run(x2, 8000000L)
-      val norm = (t2 / h2.max(1L)) / (t1 / h1.max(1L))
-      println(f"$t1%7.2f  $t2%7.2f  raw=${t2 / t1}%5.2f  hits: $h1%,d → $h2%,d  per-hit ratio=$norm%5.2f  ${if (norm > 1.5) "SLOW " else "ok   "}containment_incremental_bloom prebuilt (hist=100k→200k, fixed batch)")
     }
     // persisted containment gate: layout built+appended ONCE per
     // history size (untimed), then the fixed batch probes it — the

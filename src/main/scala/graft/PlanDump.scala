@@ -1,6 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
-/** Regenerates PLANS.md — formatted physical plans for flagship queries. */
+/** Regenerates PLANS.md — formatted physical plans for flagship
+  * queries (no arguments). With arguments,
+  * `PlanDump <suffix> <query[,query...]> [outDir]` instead writes each
+  * named query's `.explain("formatted")` plan to
+  * `<outDir>/<query>_<suffix>.txt` (default outDir `plans/r15`) — the
+  * before/after plan evidence of an optimization change; env
+  * SPARK_GRAFT_SF_DIR (required) and SPARK_GRAFT_CPUS (default: the
+  * machine's cores) pick the data and the local core count.
+  */
 object PlanDump {
   /** Nested-loop tripwire allowlist (round-9 verdict #7), shared by
     * the PLANS.md dump and the full-board PlanAuditSpec: a plan
@@ -98,7 +106,36 @@ object PlanDump {
     "triplet_mining" -> ("bounded query-set × corpus scoring (hard " +
       "positive/negative mining over the anchor set, like hard_negatives)"),
     "vocab_coverage" -> "broadcast 1-row token-total cross onto the top-K frame")
-  def main(args: Array[String]): Unit = {
+  private def snapshot(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: PlanDump <suffix> <q1,q2,...> [outDir]")
+    val suffix = args(0)
+    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val outDir = if (args.length > 2) args(2) else "plans/r15"
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("PlanDump <suffix> ...: set SPARK_GRAFT_SF_DIR to the data directory"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    for (name <- names) {
+      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
+        plan.getBytes("UTF-8"))
+      spark.sharedState.cacheManager.clearCache()
+      println(s"wrote $outDir/${name}_$suffix.txt")
+    }
+    spark.stop()
+  }
+
+  def main(args: Array[String]): Unit = if (args.nonEmpty) snapshot(args) else {
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -219,7 +256,6 @@ object PlanDump {
       "source_weighted_jaccard_icws" -> "ICWS weighted Jaccard: the corpus-sized pass is the (group, elem) weight aggregate (map-side combined); the k-sample expansion and its five md5 draws run over the AGGREGATED vocabulary domain, never raw rows; the sketch table is groups x k and pairs via an i-keyed equi-join under the in-plan group-domain gate; the exact side is one elem-keyed equi-join (per-key multiplicity = group count) plus the totals identity - no dense group x vocab grid, nothing collected to the driver.",
       "lsh_recall_curve" -> "LSH operating-point sweep: ONE shared docShingles frame, ONE exact ground-truth pass (unsorted core) and ONE 16-row signature pass feed all three band-layout arms - per-arm digests derive from the cached signature arrays, so the k x md5-per-shingle work is never repeated; each arm adds only its banded candidate equi-join + exact verify (pair-table-sized), folding into a 1-row aggregate; no Sort under any union, no nested loop.",
       "containment_incremental_batch" -> "The directions cost dial: the plan contains EXACTLY ONE prefix direction (batch prefix x history inverted index, one mass sentinel) - no history-prefix explode anywhere; the verify carries the na <= nb size guard that makes the single pass lossless for its restricted predicate.",
-      "containment_incremental_bloom" -> "Bloomed incremental gate: both batch-side candidate inputs pass the broadcast Bloom's might-contain filter BEFORE any exchange, so history-novel shingles die map-side; otherwise the plan is containment_incremental's and the verdicts are bit-identical (spec-pinned).",
       "icws_persisted" -> "Persisted ICWS probe: every scan reads the bounded parquet layout (sketches = groups x k rows, totals, weights) - no documents scan, no tokenization anywhere in the probe; the pair work is the i-keyed sketch join and the elem-keyed exact join under the re-applied in-plan group-domain gate.",
       "containment_incremental_persisted" -> "Persisted containment probe over base + one COMMITTED append batch: the history side is parquet scans of the layout's committed view (base df + batch df re-aggregated per shingle - the exact additive fold - and the base+batch sorted arrays unioned) - no history text scan, no history shingle UDF anywhere; only the batch is shingled, and the candidate/verify joins are the from-text gate's (verdicts spec-pinned identical to the full-history gate, append lane included).",
       "source_weighted_containment" -> "Exact weighted directional containment: the corpus-sized work is ONE (group, elem) decimal weight aggregate (map-side combined) plus the elem-keyed shared-mass equi-join (per-key multiplicity = group count); the pair DOMAIN is the gated totals self-join - inequality-only BY NATURE (a.g < b.g exists to emit explicit 0.0 rows for disjoint pairs), <= maxGroups rows on BOTH sides via the in-plan requireBoundedDomain sentinels, hence the allowlisted BNLJ; every fold is DECIMAL(28,9), order-free under any task layout.")
@@ -266,16 +302,6 @@ object PlanDump {
           docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0),
           docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
           0.9, directions = "batch", eager = false)
-      } else if (name == "containment_incremental_bloom") {
-        val docs = sources.Tables.table(spark, dir, "documents")
-        val hist = docs.filter(
-          org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0)
-        operators.Dedup.containmentGateIncrementalBloomed(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0),
-          hist, 0.9,
-          operators.Dedup.containmentHistoryVocabBloom(hist,
-            expectedItems = 2000000L),
-          eager = false)
       } else if (name == "containment_incremental_persisted") {
         val docs = sources.Tables.table(spark, dir, "documents")
         val path = operators.Dedup.containmentIndexDumpPath

@@ -443,12 +443,12 @@ object SqlSurface {
       "bm25_incremental" -> annLifecycle,
       "bm25_compacted" -> annLifecycle,
       "dedup_incremental_compacted" -> annLifecycle,
-      "dedup_incremental_bloom" -> ("bloom-filter prefilter state over " +
-        "the committed dedup history; the filter is fitted state"),
-      "containment_incremental_bloom" -> ("bloom-filter prefilter state " +
-        "over history's shingle vocabulary; the filter is fitted state " +
-        "— the join-form SQL parity is containment_incremental's " +
-        "(verdicts bit-identical, spec-pinned)"),
+      "dedup_incremental_bloom" -> ("legacy lane name: the same " +
+        "from-text check as dedup_incremental, whose SQL parity covers it"),
+      "containment_incremental_bloom" -> (annLifecycle +
+        "; the probe over the memoized persisted layout — the SQL " +
+        "parity is containment_incremental's (verdict-identical, " +
+        "spec-pinned)"),
       "icws_persisted" -> (annLifecycle +
         "; the probe's SQL parity is source_weighted_jaccard_icws's " +
         "(row-for-row identical, spec-pinned)"),
@@ -463,9 +463,9 @@ object SqlSurface {
         "; base + committed appends folded by compactContainmentIndex, " +
         "then the same probe — SQL parity is containment_incremental's " +
         "(verdict-identical, spec-pinned)"),
-      "containment_bloom_build" -> ("the UNCACHED bloom-build lifecycle " +
-        "lane of containment_incremental_bloom (same fitted-state " +
-        "residue; verdicts bit-identical to containment_incremental)"),
+      "containment_bloom_build" -> ("legacy lifecycle lane name: the " +
+        "uncached from-text gate of containment_incremental, whose SQL " +
+        "parity covers it"),
       "stream_contamination_gate" -> ("streaming-safe stateless gate " +
         "over a driver-built broadcast vocabulary set (the " +
         "fit-then-score lifecycle applied to an eval suite); the " +

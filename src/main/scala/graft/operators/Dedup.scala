@@ -586,91 +586,7 @@ object Dedup {
       threshold: Double, n: Int = 3,
       maxJoinMass: Long = 100000000L,
       directions: String = "both",
-      eager: Boolean = true): DataFrame =
-    containmentGateCore(incoming, history, threshold, n, maxJoinMass,
-      directions, eager, histVocab = None)
-
-  /** A history-vocabulary Bloom BUNDLED with the shingle width it was
-    * built at: the width is part of the filter's identity (a Bloom of
-    * 3-shingles contains essentially no 4-shingle), so the gate can
-    * refuse a mismatched pairing instead of silently pruning every
-    * true candidate — the same reason the persisted layouts carry
-    * their parameters in a manifest.
-    */
-  final case class ContainmentVocabBloom(
-      filter: org.apache.spark.util.sketch.BloomFilter, n: Int)
-
-  /** Broadcast Bloom over HISTORY's shingle vocabulary — the
-    * containment gate's [[historyBlooms]] analogue, built ONCE per
-    * layout and reused every batch. On a mostly-novel ingest (the
-    * normal case) almost every batch-prefix row carries a shingle
-    * history has never seen; the persisted df table already scores
-    * those df 0 so they produce no candidates, but they still ride the
-    * candidate join's shuffle — the Bloom prunes them on the map side
-    * BEFORE any exchange. `expectedItems` sizes for history's DISTINCT
-    * shingle count (a multiset insert is membership-equivalent, so no
-    * distinct pass is paid here).
-    */
-  def containmentHistoryVocabBloom(history: DataFrame, expectedItems: Long,
-      fpp: Double = 0.01, n: Int = 3): ContainmentVocabBloom = {
-    require(expectedItems >= 1, s"expectedItems must be >= 1, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp in (0,1), got $fpp")
-    ContainmentVocabBloom(
-      shingles(history, n).stat.bloomFilter("shingle", expectedItems, fpp), n)
-  }
-
-  /** Process-level Bloom memo (the [[KMeansIndex.buildCached]] /
-    * [[Pq.fitCached]] discipline): in production the history-vocab
-    * Bloom is built ONCE per history release and reused every ingest
-    * batch, so the graded probe should time the gate with a pre-built
-    * Bloom, not re-pay the one-time vocabulary scan per rep (round-14
-    * verdict #4). Keyed on the caller-supplied corpus key plus the
-    * filter geometry; callers hashing a SUBSET must key that subset
-    * distinctly. The build itself stays visible under the bench's
-    * `lifecycle` total via the uncached path.
-    */
-  private val vocabBloomMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, Long, Double, Int), ContainmentVocabBloom]
-
-  def containmentHistoryVocabBloomCached(history: DataFrame,
-      corpusKey: String, expectedItems: Long,
-      fpp: Double = 0.01, n: Int = 3): ContainmentVocabBloom =
-    vocabBloomMemo.getOrElseUpdate((corpusKey, expectedItems, fpp, n),
-      containmentHistoryVocabBloom(history, expectedItems, fpp, n))
-
-  /** [[containmentGateIncremental]] with the
-    * [[containmentHistoryVocabBloom]] prefilter — verdicts
-    * bit-identical to the unfiltered gate (a Bloom has no false
-    * negatives, so no candidate the verify would accept is pruned;
-    * false positives merely pass rows the equi-joins discard), with
-    * the batch side pruned BEFORE both candidate shuffles: the
-    * batch-prefix rows (direction 1's probe) and the batch inverted
-    * index (direction 2's build side) both drop every history-novel
-    * shingle map-side.
-    */
-  def containmentGateIncrementalBloomed(incoming: DataFrame,
-      history: DataFrame, threshold: Double,
-      histVocab: ContainmentVocabBloom,
-      n: Int = 3, maxJoinMass: Long = 100000000L,
-      directions: String = "both",
       eager: Boolean = true): DataFrame = {
-    // width mismatch would make every genuine n-shingle read as absent
-    // and prune ALL true candidates — refuse instead of flagging the
-    // whole batch clean
-    require(histVocab.n == n,
-      s"the vocabulary Bloom was built at n=${histVocab.n} but the gate " +
-        s"shingles at n=$n — a mismatched pairing silently prunes every " +
-        "true candidate; rebuild the Bloom at the gate's width")
-    containmentGateCore(incoming, history, threshold, n, maxJoinMass,
-      directions, eager, histVocab = Some(histVocab.filter))
-  }
-
-  private def containmentGateCore(incoming: DataFrame, history: DataFrame,
-      threshold: Double, n: Int,
-      maxJoinMass: Long,
-      directions: String,
-      eager: Boolean,
-      histVocab: Option[org.apache.spark.util.sketch.BloomFilter]): DataFrame = {
     // three consumers (the df aggregate, the sorted-base build, and
     // direction 1's probe join) re-shingled history text per consumer
     // without this cache (round-16 profile); evictable, released by
@@ -694,7 +610,7 @@ object Dedup {
     dfHist.count()
     containmentGateOverArtifacts(incoming,
       dfHist, containmentSortedBase(histInv, "hist_id", dfHist), histInv,
-      threshold, n, maxJoinMass, directions, eager, histVocab,
+      threshold, n, maxJoinMass, directions, eager,
       extraCaches = Seq(histInv, dfHist))
   }
 
@@ -726,22 +642,11 @@ object Dedup {
       maxJoinMass: Long,
       directions: String,
       eager: Boolean,
-      histVocab: Option[org.apache.spark.util.sketch.BloomFilter],
-      extraCaches: Seq[DataFrame] = Nil): DataFrame = {
+      extraCaches: Seq[DataFrame]): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must lie in (0, 1], got $threshold")
     require(Set("both", "batch", "history")(directions),
       s"""directions must be "both", "batch" or "history", got $directions""")
-    // the history-vocab prune both batch-sized join inputs share: rows
-    // whose shingle history cannot contain never reach an exchange
-    val pruneByVocab: DataFrame => DataFrame = histVocab match {
-      case None => identity
-      case Some(bf) =>
-        val bc = incoming.sparkSession.sparkContext.broadcast(bf)
-        val might = udf((s: String) =>
-          s != null && bc.value.mightContainString(s))
-        df => df.filter(might(col("shingle")))
-    }
     // batch-sized, three consumers (its sorted base, the dfInc
     // aggregate, direction 2's probe join)
     val incInv = shingles(incoming, n).cache()
@@ -775,10 +680,9 @@ object Dedup {
       // here changes neither the mass sum nor the candidate set, and
       // on a mostly-novel ingest (the 100 TB shape) it stops the
       // history-novel majority of prefix rows riding the candidate
-      // join's exchange (guide §2.3; the map-side twin of the Bloom
-      // variant's vocabulary prune)
+      // join's exchange (guide §2.3)
       val incPrefix = Partitioning.requireBoundedMass(
-        pruneByVocab(prefixOf(incSorted, "doc_id"))
+        prefixOf(incSorted, "doc_id")
           .join(dfHist, Seq("shingle"))
           .select(col("doc_id"), col("shingle"), col("df")),
         col("df"), "containmentGateIncremental(batch prefix)", maxJoinMass,
@@ -803,7 +707,7 @@ object Dedup {
           .select(col("hist_id"), col("shingle"), col("df")),
         col("df"), "containmentGateIncremental(history prefix)", maxJoinMass,
         remedy).select(col("hist_id"), col("shingle"))
-      histPrefix.join(pruneByVocab(incInv), "shingle")
+      histPrefix.join(incInv, "shingle")
         .select(col("doc_id"), col("hist_id"))
     }
     val candidates = (cand1.toSeq ++ cand2.toSeq)
@@ -873,17 +777,15 @@ object Dedup {
     * `path` — the persist-once posture the gate's scaladoc promises,
     * made real: `df/` (shingle, df — the shared total order) and
     * `sorted/` (hist_id, sh, n_sh — each history doc's shingles in
-    * that order) parquet tables plus a `manifest.json` recording the
-    * shingle width n (part of the LAYOUT: a probe shingling at a
+    * that order) parquet tables, with the shingle width n in the
+    * [[LayoutManifest]] (part of the LAYOUT: a probe shingling at a
     * different n would match nothing). The prefix length is NOT
     * stored — it is threshold-dependent and derived per probe, so one
     * layout serves any threshold.
     *
-    * APPEND-CAPABLE since round 15 (closing the one lifecycle
-    * asymmetry in the persisted-index family): [[appendContainmentIndex]]
-    * lands accepted batches under `batches/batch-<uuid>/` behind the
-    * [[appendDedupIndex]] batch-level `_COMMITTED` discipline, and the
-    * probe reads the committed view. This is EXACT, not
+    * APPEND-CAPABLE: [[appendContainmentIndex]] lands accepted batches
+    * as committed [[LayoutManifest]] batches, and the probe reads the
+    * committed view. This is EXACT, not
     * staleness-bounded, because the gate's losslessness never needed
     * the CURRENT df order in the first place — see the exactness
     * argument on [[appendContainmentIndex]]. The df order is purely
@@ -894,37 +796,32 @@ object Dedup {
     * rebuild scanned).
     */
   def persistContainmentIndex(history: DataFrame, path: String,
-      n: Int = 3): Unit = {
-    val conf = history.sparkSession.sparkContext.hadoopConfiguration
-    // manifest-as-commit-marker ([[LayoutManifest]]): dropped BEFORE
-    // any table overwrite, written LAST — a rebuild that dies between
-    // the two table writes leaves a manifest-less layout the probe
-    // refuses, never a batch sorted by the NEW df order verified
-    // against the OLD arrays (which would break the shared-total-order
-    // premise silently)
-    LayoutManifest.uncommit(conf, path)
-    val histInv = shingles(history, n)
-      .select(col("doc_id").as("hist_id"), col("shingle"))
-    val dfHist = histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .cache()
-    try {
-      dfHist.write.mode("overwrite").parquet(s"$path/df")
-      containmentSortedBase(histInv, "hist_id", dfHist)
-        .write.mode("overwrite").parquet(s"$path/sorted")
-    } finally dfHist.unpersist()
-    val batchRoot = new org.apache.hadoop.fs.Path(s"$path/batches")
-    batchRoot.getFileSystem(conf).delete(batchRoot, true)
-    LayoutManifest.commit(conf, path, "n" -> n)
-  }
+      n: Int = 3): Unit =
+    // the [[LayoutManifest]] rebuild: one that dies between the two
+    // table writes leaves a manifest-less layout the probe refuses,
+    // never a batch sorted by the NEW df order verified against the
+    // OLD arrays (which would break the shared-total-order premise
+    // silently)
+    containmentLayout.rebuild(history.sparkSession, path, "n" -> n) {
+      val histInv = shingles(history, n)
+        .select(col("doc_id").as("hist_id"), col("shingle"))
+      val dfHist = histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .cache()
+      try {
+        dfHist.write.mode("overwrite").parquet(s"$path/df")
+        containmentSortedBase(histInv, "hist_id", dfHist)
+          .write.mode("overwrite").parquet(s"$path/sorted")
+      } finally dfHist.unpersist()
+    }
+
+  private val containmentLayout =
+    LayoutManifest("containment-index", "persistContainmentIndex")
 
   /** Append an accepted history batch to a [[persistContainmentIndex]]
     * layout — the daily-crawl ingest lane that was the family's one
-    * missing member. COMMIT PROTOCOL ([[appendDedupIndex]]): the
-    * batch's two tables land in their own `batches/batch-<uuid>/`
-    * directory and become visible only once the batch-level
-    * `_COMMITTED` marker exists, written after both table writes
-    * succeed — a reader never sees a batch whose df counts arrived but
-    * whose sorted arrays did not. The shingle width comes from the
+    * missing member. The batch's two tables are one [[LayoutManifest]]
+    * append batch — a reader never sees a batch whose df counts arrived
+    * but whose sorted arrays did not. The shingle width comes from the
     * layout's manifest; an append can never shingle inconsistently
     * with the base index.
     *
@@ -948,25 +845,22 @@ object Dedup {
     */
   def appendContainmentIndex(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val n = LayoutManifest.readField(conf, path, "n",
-      "containment-index", "persistContainmentIndex")
+    val Seq(n) = containmentLayout.fields(spark, path, "n")
     // the pre-append committed df view, for the new docs' sort order —
     // read BEFORE this batch commits, so batch-novel shingles coalesce
     // to df 0 (rarest-first position; order is heuristic-only anyway)
-    val dfView = containmentDfView(spark, path)
-    val dir = s"$path/batches/batch-${java.util.UUID.randomUUID()}"
-    val batchInv = shingles(batch, n)
-      .select(col("doc_id").as("hist_id"), col("shingle")).cache()
-    try {
-      batchInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .write.parquet(s"$dir/df")
-      containmentSortedBase(batchInv, "hist_id", dfView)
-        .write.parquet(s"$dir/sorted")
-    } finally batchInv.unpersist()
-    val marker = new org.apache.hadoop.fs.Path(dir, "_COMMITTED")
-    marker.getFileSystem(conf).createNewFile(marker)
-    ()
+    val dfView = containmentDfView(spark, path,
+      containmentLayout.committed(spark, path))
+    containmentLayout.append(spark, path) { dir =>
+      val batchInv = shingles(batch, n)
+        .select(col("doc_id").as("hist_id"), col("shingle")).cache()
+      try {
+        batchInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+          .write.parquet(s"$dir/df")
+        containmentSortedBase(batchInv, "hist_id", dfView)
+          .write.parquet(s"$dir/sorted")
+      } finally batchInv.unpersist()
+    }
   }
 
   /** The committed EXACT df view of a containment layout: base df plus
@@ -975,9 +869,15 @@ object Dedup {
     * frequency is additive over disjoint-doc batches.
     */
   private def containmentDfView(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    readIndexTable(spark, path, "df")
+      path: String, batches: Seq[String]): DataFrame =
+    indexTable(containmentLayout, spark, path, "df", batches)
       .groupBy(col("shingle")).agg(sum(col("df")).as("df"))
+
+  /** One table of a Dedup-family layout over its base and `batches`. */
+  private def indexTable(layout: LayoutManifest,
+      spark: org.apache.spark.sql.SparkSession, path: String, table: String,
+      batches: Seq[String]): DataFrame =
+    layout.view(path, table, batches)(spark.read.parquet(_))
 
   /** Compact a [[persistContainmentIndex]] layout: fold every batch
     * committed at the snapshot into the two base tables — df by exact
@@ -987,42 +887,22 @@ object Dedup {
     * is what restores the rarest-first candidate-mass heuristic that
     * append-era orders let drift; the compacted tables are
     * row-identical to a fresh rebuild over the same corpus (pinned in
-    * DedupSpec). Staging writes + per-table dir renames,
-    * snapshot-scoped batch deletion — a concurrently committed batch
-    * survives untouched; the manifest (shingle width) is layout
-    * metadata and never changes in a fold.
+    * DedupSpec). The [[LayoutManifest]] compaction publishes the
+    * fold; the manifest (shingle width) never changes in it.
     */
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val snapshot = committedBatchDirs(spark, path)
-    if (snapshot.isEmpty) return
-    def tableView(table: String): DataFrame =
-      (s"$path/$table" +: snapshot.map(d => s"$d/$table"))
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-    val token = java.util.UUID.randomUUID().toString
-    val dfFolded = tableView("df")
-      .groupBy(col("shingle")).agg(sum(col("df")).as("df")).cache()
-    try {
-      dfFolded.write.parquet(s"$path/.df_compact_$token")
-      containmentSortedBase(
-        tableView("sorted")
-          .select(col("hist_id"), explode(col("sh")).as("shingle")),
-        "hist_id", dfFolded)
-        .write.parquet(s"$path/.sorted_compact_$token")
-    } finally dfFolded.unpersist()
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    for (table <- Seq("df", "sorted")) {
-      val old = s"$path/.${table}_old_$token"
-      require(fs.rename(p(s"$path/$table"), p(old)),
-        s"compact: $table swap-out failed")
-      require(fs.rename(p(s"$path/.${table}_compact_$token"), p(s"$path/$table")),
-        s"compact: $table swap-in failed")
-      fs.delete(p(old), true)
+      path: String): Unit =
+    containmentLayout.compact(spark, path, "df", "sorted") { (snapshot, staged) =>
+      val dfFolded = containmentDfView(spark, path, snapshot).cache()
+      try {
+        dfFolded.write.parquet(staged("df"))
+        containmentSortedBase(
+          indexTable(containmentLayout, spark, path, "sorted", snapshot)
+            .select(col("hist_id"), explode(col("sh")).as("shingle")),
+          "hist_id", dfFolded)
+          .write.parquet(staged("sorted"))
+      } finally dfFolded.unpersist()
     }
-    snapshot.foreach(d => fs.delete(p(d), true))
-  }
 
   /** [[containmentGateIncremental]] against a [[persistContainmentIndex]]
     * layout — verdict-identical to the from-text gate over the same
@@ -1032,56 +912,25 @@ object Dedup {
     * [[appendContainmentIndex]]; spec-pinned in every `directions`
     * mode), with NO history text scanned per batch: the probe reads
     * the committed view of the two bounded tables, shingles only the
-    * batch, and pays the same candidate/verify joins. An append batch
-    * without its `_COMMITTED` marker is invisible. This is the shape a
-    * production ingest loop runs every batch.
+    * batch, and pays the same candidate/verify joins. An uncommitted
+    * append batch is invisible. This is the shape a production ingest
+    * loop runs every batch.
     */
   def containmentGateIncrementalPersisted(incoming: DataFrame,
       path: String, threshold: Double,
       maxJoinMass: Long = 100000000L,
       directions: String = "both",
-      eager: Boolean = true): DataFrame =
-    containmentGateOverPersisted(incoming, path, threshold, maxJoinMass,
-      directions, eager, histVocab = None)
-
-  /** [[containmentGateIncrementalPersisted]] with the
-    * [[containmentHistoryVocabBloom]] prefilter — the full 100 TB
-    * ingest shape: history artifacts probed from the persisted layout
-    * (no history text rescanned per batch), history-novel shingles
-    * pruned map-side from both batch-side join inputs. Verdicts
-    * bit-identical to the unfiltered from-text gate over the same
-    * history (both reductions are separately exactness-argued).
-    */
-  def containmentGateIncrementalPersistedBloomed(incoming: DataFrame,
-      path: String, threshold: Double,
-      histVocab: ContainmentVocabBloom,
-      maxJoinMass: Long = 100000000L,
-      directions: String = "both",
-      eager: Boolean = true): DataFrame =
-    containmentGateOverPersisted(incoming, path, threshold, maxJoinMass,
-      directions, eager, histVocab = Some(histVocab))
-
-  private def containmentGateOverPersisted(incoming: DataFrame,
-      path: String, threshold: Double,
-      maxJoinMass: Long,
-      directions: String,
-      eager: Boolean,
-      histVocab: Option[ContainmentVocabBloom]): DataFrame = {
+      eager: Boolean = true): DataFrame = {
     val spark = incoming.sparkSession
-    val n = LayoutManifest.readField(
-      spark.sparkContext.hadoopConfiguration, path, "n",
-      "containment-index", "persistContainmentIndex")
-    histVocab.foreach(v => require(v.n == n,
-      s"the vocabulary Bloom was built at n=${v.n} but the layout at " +
-        s"$path shingles at n=$n — a mismatched pairing silently prunes " +
-        "every true candidate; rebuild the Bloom at the layout's width"))
-    val sortedBase = readIndexTable(spark, path, "sorted")
+    val Seq(n) = containmentLayout.fields(spark, path, "n")
+    val batches = containmentLayout.committed(spark, path)
+    val sortedBase = indexTable(containmentLayout, spark, path, "sorted", batches)
     // vocabulary-sized re-aggregate over the committed df tables; two
     // consumers (the batch sorted-base build and the batch-prefix
     // join) — cached, released by the gate's eager tail
-    val dfView = containmentDfView(spark, path).cache()
+    val dfView = containmentDfView(spark, path, batches).cache()
     // single producing pass before the concurrent consumers first-touch
-    // it (see containmentGateCore)
+    // it (see containmentGateIncremental)
     dfView.count()
     containmentGateOverArtifacts(incoming,
       dfView, sortedBase,
@@ -1090,11 +939,10 @@ object Dedup {
       // the same rows twice
       sortedBase.select(col("hist_id"), explode(col("sh")).as("shingle")),
       threshold, n, maxJoinMass, directions, eager,
-      histVocab = histVocab.map(_.filter),
       extraCaches = Seq(dfView))
   }
 
-  /** Process-level history-layout memo (the [[vocabBloomMemo]]
+  /** Process-level history-layout memo (the [[KMeansIndex.buildCached]]
     * discipline): in production the gate's history artifacts are
     * persisted ONCE per history release ([[persistContainmentIndex]])
     * and probed every ingest batch, so the graded ingest-shape lane
@@ -1103,11 +951,11 @@ object Dedup {
     * The one-time build stays visible in the bench's `lifecycle` total
     * (containment_incremental_persisted re-runs persist+append every
     * rep). Keyed on the caller's corpus key + shingle width; the
-    * layout lands under its own md5-named root so the lifecycle lanes
-    * rebuilding the shared dump path can never invalidate it
-    * mid-process, and a fresh process always rebuilds from the parquet
-    * inputs (nothing persists across runs but /tmp files a new process
-    * overwrites before reading).
+    * layout lands under its own md5-suffixed root beside
+    * [[containmentIndexDumpPath]] (so the same sys-prop relocates it),
+    * which the lifecycle lanes rebuilding the dump path itself can
+    * never invalidate mid-process; a fresh process always rebuilds it
+    * from the parquet inputs before reading.
     */
   private val containmentLayoutMemo =
     scala.collection.concurrent.TrieMap.empty[(String, Int), String]
@@ -1117,7 +965,7 @@ object Dedup {
     containmentLayoutMemo.getOrElseUpdate((corpusKey, n), {
       val md = graft.functions.HashUtil.md5Digest
       val tag = graft.functions.HashUtil.md5Hex(md, s"$corpusKey#$n")
-      val path = s"/tmp/graft_containment_probe_$tag"
+      val path = s"${containmentIndexDumpPath}_probe_$tag"
       persistContainmentIndex(history, path, n)
       path
     })
@@ -1950,92 +1798,6 @@ object Dedup {
     finally if (eager) hist.unpersist()
   }
 
-  /** Broadcast Bloom prefilters for the per-batch history probes — the
-    * 100 TB lever for a long-running ingest: [[incrementalFlags]]'
-    * exact check is a batch-vs-history digest semi-join and its
-    * candidate generation a batch-vs-history band-key equi-join, both
-    * sized by the HISTORY side per batch. A Bloom filter over the
-    * history digests (and one over its band keys) is built ONCE, lives
-    * broadcast, and prunes the batch side BEFORE either join — on a
-    * mostly-novel ingest (the normal case) almost nothing reaches the
-    * history-sized joins at all.
-    *
-    * EXACTNESS IS PRESERVED: a Bloom filter has no false negatives, so
-    * no dup can slip past the prefilter; false positives merely pass a
-    * few extra rows into the exact joins, which eliminate them — the
-    * flags are bit-identical to the unfiltered path (spec + oracle
-    * pinned). `fpp` trades broadcast size against wasted probe rows
-    * (1% ≈ 1.2 bytes/item). Spark's built-in sketch BloomFilter —
-    * driver-built via one aggregation pass, Java-serializable for the
-    * broadcast.
-    */
-  def historyBlooms(history: DataFrame, expectedItems: Long,
-      fpp: Double = 0.01, k: Int = 16, bands: Int = 4):
-      (org.apache.spark.util.sketch.BloomFilter,
-        org.apache.spark.util.sketch.BloomFilter) = {
-    require(expectedItems >= 1, s"expectedItems must be >= 1, got $expectedItems")
-    require(fpp > 0 && fpp < 1, s"fpp in (0,1), got $fpp")
-    val hist = histProjection(history).cache()
-    try {
-      val digests = hist.stat.bloomFilter("h", expectedItems, fpp)
-      val bandKeys = bandKeysOf(hist, "hist_id", k, bands)
-        .select(concat_ws(":", col("band"), col("band_key")).as("bk"))
-        .stat.bloomFilter("bk", expectedItems * bands, fpp)
-      (digests, bandKeys)
-    } finally hist.unpersist()
-  }
-
-  /** [[incrementalFlags]] with the [[historyBlooms]] prefilters —
-    * identical flags (false positives die in the exact joins; false
-    * negatives cannot exist), with the batch pruned before both
-    * history-sized joins.
-    */
-  def incrementalFlagsBloomed(incoming: DataFrame, history: DataFrame,
-      threshold: Double,
-      blooms: (org.apache.spark.util.sketch.BloomFilter,
-        org.apache.spark.util.sketch.BloomFilter),
-      k: Int = 16, bands: Int = 4): DataFrame = {
-    require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    val spark = incoming.sparkSession
-    val bcDigest = spark.sparkContext.broadcast(blooms._1)
-    val bcBand = spark.sparkContext.broadcast(blooms._2)
-    val mightHaveDigest = udf((s: String) => s != null && bcDigest.value.mightContainString(s))
-    val mightHaveBand = udf((s: String) => s != null && bcBand.value.mightContainString(s))
-    val hist = histProjection(history).cache()
-    try {
-      val inc = Partitioning.spread(incoming)
-        .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-          shingleArray(col("text")).as("sh"))
-        .cache()
-      // exact lane: Bloom prune, then the exact semi-join on survivors
-      val exactIds = inc.filter(mightHaveDigest(col("h")))
-        .join(hist.select(col("h")).distinct(), Seq("h"), "left_semi")
-        .select(col("doc_id"))
-      // near lane: Bloom prune the batch's band keys, then the exact
-      // band equi-join + Jaccard verification on survivors
-      val cand = bandKeysOf(inc, "doc_id", k, bands)
-        .filter(mightHaveBand(concat_ws(":", col("band"), col("band_key"))))
-        .join(bandKeysOf(hist, "hist_id", k, bands), Seq("band", "band_key"))
-        .select(col("doc_id"), col("hist_id")).distinct()
-      val nearIds = cand
-        .join(inc.select(col("doc_id"), col("sh").as("sha")), "doc_id")
-        .join(hist.select(col("hist_id"), col("sh").as("shb")), "hist_id")
-        .filter(round(jaccardUdf(col("sha"), col("shb")), 6) >= threshold)
-        .select(col("doc_id")).distinct()
-      val flags = inc.select(col("doc_id"))
-        .join(exactIds.withColumn("exact_dup_hist", lit(true)), Seq("doc_id"), "left")
-        .join(nearIds.withColumn("near_dup_hist", lit(true)), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("exact_dup_hist"), lit(false)).as("exact_dup_hist"),
-          coalesce(col("near_dup_hist"), lit(false)).as("near_dup_hist"))
-        .withColumn("keep", !col("exact_dup_hist") && !col("near_dup_hist"))
-        .orderBy(col("doc_id"))
-      val out = flags.localCheckpoint()
-      inc.unpersist()
-      out
-    } finally hist.unpersist()
-  }
-
   /** The (hist_id, digest, shingle-set) projection every history-side
     * consumer derives from — ONE definition so the from-text path, the
     * persisted layout and its appends can never disagree on the digest
@@ -2096,20 +1858,6 @@ object Dedup {
     }
   }
 
-  /** Materialize the history-side dedup index: `digests/`, `bands/`,
-    * `shingles/` parquet tables plus a `manifest.json` recording the
-    * (k, bands) band layout under `path`. Build once, then every
-    * ingest batch runs [[incrementalFlagsPersisted]] against the layout
-    * without ever rescanning history text — the dedup analogue of
-    * [[KMeansIndex.persist]]'s build-once-search-many form. A rebuild
-    * drops committed append batches (they are re-derivable from the
-    * corpus the rebuild scanned).
-    *
-    * Like [[KMeansIndex.persist]], a REBUILD is not atomic (three
-    * overwrites + the batches drop): a reader overlapping a rebuild can
-    * see new digests next to old bands. Quiesce readers across
-    * rebuilds — appends are the concurrent-safe path.
-    */
   /** Layout root for the compacted-index contract query (the
     * [[graft.operators.KMeansIndex.compactDumpPath]] convention).
     */
@@ -2117,136 +1865,76 @@ object Dedup {
     sys.props.getOrElse("graft.dedup.index.dump",
       "/tmp/graft_oracle_dedup_index")
 
-  def persistDedupIndex(history: DataFrame, path: String,
-      k: Int = 16, bands: Int = 4): Unit = {
-    val conf = history.sparkSession.sparkContext.hadoopConfiguration
-    // manifest-as-commit-marker ([[LayoutManifest]], round-14): a
-    // rebuild dying between the three overwrites leaves a layout the
-    // probe refuses, not mixed-generation tables under a stale-valid
-    // manifest; readers still quiesce across rebuilds (scaladoc above)
-    LayoutManifest.uncommit(conf, path)
-    val hist = histProjection(history).cache()
-    hist.select(col("h")).distinct()
-      .write.mode("overwrite").parquet(s"$path/digests")
-    bandKeysOf(hist, "hist_id", k, bands)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    hist.select(col("hist_id"), col("sh"))
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    hist.unpersist()
-    val root = new org.apache.hadoop.fs.Path(s"$path/batches")
-    root.getFileSystem(conf).delete(root, true)
-    writeManifest(conf, path, k, bands)
-  }
+  private val dedupLayout = LayoutManifest("dedup-index", "persistDedupIndex")
 
-  /** The band layout is part of the LAYOUT, not a per-call knob: a
-    * probe computed with different (k, bands) than the stored index
-    * would band-match nothing and silently report zero near-dups, so
-    * the manifest is written at build time and every append/read
-    * derives its parameters from it.
+  /** Materialize the history-side dedup index: `digests/`, `bands/`,
+    * `shingles/` parquet tables under `path`, through the
+    * [[LayoutManifest]] rebuild. Build once, then every ingest batch
+    * runs [[incrementalFlagsPersisted]] against the layout without ever
+    * rescanning history text — the dedup analogue of
+    * [[KMeansIndex.persist]]'s build-once-search-many form. The
+    * manifest records the (k, bands) band layout: a probe computed with
+    * different parameters than the stored index would band-match
+    * nothing and silently report zero near-dups, so every append and
+    * probe derives them from the manifest.
     */
-  private def writeManifest(conf: org.apache.hadoop.conf.Configuration,
-      path: String, k: Int, bands: Int): Unit =
-    LayoutManifest.commit(conf, path, "k" -> k, "bands" -> bands)
+  def persistDedupIndex(history: DataFrame, path: String,
+      k: Int = 16, bands: Int = 4): Unit =
+    dedupLayout.rebuild(history.sparkSession, path, "k" -> k, "bands" -> bands) {
+      val hist = histProjection(history).cache()
+      try {
+        hist.select(col("h")).distinct()
+          .write.mode("overwrite").parquet(s"$path/digests")
+        bandKeysOf(hist, "hist_id", k, bands)
+          .write.mode("overwrite").parquet(s"$path/bands")
+        hist.select(col("hist_id"), col("sh"))
+          .write.mode("overwrite").parquet(s"$path/shingles")
+      } finally hist.unpersist()
+    }
 
-  private def readManifest(conf: org.apache.hadoop.conf.Configuration,
-      path: String): (Int, Int) = {
-    val Seq(k, bands) = LayoutManifest.readFields(
-      conf, path, "dedup-index", "persistDedupIndex", "k", "bands")
-    (k, bands)
-  }
-
-  /** Append an accepted batch to a [[persistDedupIndex]] layout. COMMIT
-    * PROTOCOL: the batch's three tables land in their own
-    * `batches/batch-<uuid>/` directory and become visible only once the
-    * batch-level `_COMMITTED` marker exists — ONE marker for the
-    * triple, written after all three table writes succeed, so a reader
-    * never sees a batch whose digests arrived but whose bands did not
-    * (which would flag exact dups while missing near dups from the same
-    * documents). Same atomic-publish doctrine as
-    * [[KMeansIndex.appendPersisted]]; `foreachBatch`-compatible. The
-    * band layout comes from the layout's manifest — an append can never
-    * write bands inconsistent with the base index.
+  /** Append an accepted batch to a [[persistDedupIndex]] layout. The
+    * batch's three tables are ONE [[LayoutManifest]] append batch, so a
+    * reader never sees a batch whose digests arrived but whose bands did
+    * not (which would flag exact dups while missing near dups from the
+    * same documents); `foreachBatch`-compatible. The band layout comes
+    * from the manifest — an append can never write bands inconsistent
+    * with the base index.
     */
   def appendDedupIndex(batch: DataFrame, path: String): Unit = {
-    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-    val (k, bands) = readManifest(conf, path)
-    val dir = s"$path/batches/batch-${java.util.UUID.randomUUID()}"
-    val b = histProjection(batch).cache()
-    b.select(col("h")).distinct().write.parquet(s"$dir/digests")
-    bandKeysOf(b, "hist_id", k, bands).write.parquet(s"$dir/bands")
-    b.select(col("hist_id"), col("sh")).write.parquet(s"$dir/shingles")
-    b.unpersist()
-    val marker = new org.apache.hadoop.fs.Path(dir, "_COMMITTED")
-    marker.getFileSystem(conf).createNewFile(marker)
-    ()
+    val spark = batch.sparkSession
+    val Seq(k, bands) = dedupLayout.fields(spark, path, "k", "bands")
+    dedupLayout.append(spark, path) { dir =>
+      val b = histProjection(batch).cache()
+      try {
+        b.select(col("h")).distinct().write.parquet(s"$dir/digests")
+        bandKeysOf(b, "hist_id", k, bands).write.parquet(s"$dir/bands")
+        b.select(col("hist_id"), col("sh")).write.parquet(s"$dir/shingles")
+      } finally b.unpersist()
+    }
   }
 
-  /** Committed batch directories of a [[persistDedupIndex]] layout —
-    * only those whose batch-level `_COMMITTED` marker exists.
-    */
-  private def committedBatchDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/batches")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMITTED")))
-        .map(_.toString).sorted.toSeq
-    else Seq.empty[String]
-  }
-
-  /** The committed read view of one index table: base dir + every batch
-    * directory whose `_COMMITTED` marker exists.
-    */
-  private def readIndexTable(spark: org.apache.spark.sql.SparkSession,
-      path: String, table: String): DataFrame =
-    (s"$path/$table" +: committedBatchDirs(spark, path).map(d => s"$d/$table"))
-      .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-
-  /** Compact a [[persistDedupIndex]] layout — the third member of the
-    * index-maintenance trio ([[KMeansIndex.compactPersisted]],
-    * [[InvertedIndex.compact]]): fold every batch committed at the
-    * snapshot into the three base tables. The digest table re-distincts
-    * across base ∪ batches (disjoint-doc appends can still repeat a
-    * CONTENT digest); bands and shingles fold by plain union. Staging
-    * writes + per-table dir renames, snapshot-scoped batch deletion —
-    * a concurrently committed batch survives untouched; the manifest
-    * (band geometry) is layout metadata and never changes in a fold.
+  /** Compact a [[persistDedupIndex]] layout (the [[LayoutManifest]]
+    * compaction): the digest table re-distincts across base ∪ batches
+    * (disjoint-doc appends can still repeat a CONTENT digest); bands and
+    * shingles fold by plain union. The manifest (band geometry) never
+    * changes in a fold.
     */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val snapshot = committedBatchDirs(spark, path)
-    if (snapshot.isEmpty) return
-    def tableView(table: String): DataFrame =
-      (s"$path/$table" +: snapshot.map(d => s"$d/$table"))
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-    val token = java.util.UUID.randomUUID().toString
-    tableView("digests").distinct()
-      .write.parquet(s"$path/.digests_compact_$token")
-    tableView("bands").write.parquet(s"$path/.bands_compact_$token")
-    tableView("shingles").write.parquet(s"$path/.shingles_compact_$token")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    for (table <- Seq("digests", "bands", "shingles")) {
-      val old = s"$path/.${table}_old_$token"
-      require(fs.rename(p(s"$path/$table"), p(old)),
-        s"compact: $table swap-out failed")
-      require(fs.rename(p(s"$path/.${table}_compact_$token"), p(s"$path/$table")),
-        s"compact: $table swap-in failed")
-      fs.delete(p(old), true)
+      path: String): Unit =
+    dedupLayout.compact(spark, path, "digests", "bands", "shingles") {
+      (snapshot, staged) =>
+        def fold(t: String) = indexTable(dedupLayout, spark, path, t, snapshot)
+        fold("digests").distinct().write.parquet(staged("digests"))
+        fold("bands").write.parquet(staged("bands"))
+        fold("shingles").write.parquet(staged("shingles"))
     }
-    snapshot.foreach(d => fs.delete(p(d), true))
-  }
 
   /** [[incrementalFlags]] against a [[persistDedupIndex]] layout —
-    * history participates only as its persisted index tables; shipped
+    * history participates only as its committed index tables; shipped
     * text is never rescanned, and the three joins are sized by the
     * BATCH (digest semi-join probe, band equi-join, candidate-only
     * shingle verification). The incoming side's band keys are computed
-    * with the (k, bands) recorded in the layout's manifest — a layout
-    * probed with the wrong parameters would band-match nothing and
-    * silently miss every near-dup.
+    * with the (k, bands) recorded in the layout's manifest.
     *
     * This is the variant a long-running `foreachBatch` loop should use:
     * [[incrementalFlags]] caches the full history projection per call
@@ -2256,11 +1944,11 @@ object Dedup {
   def incrementalFlagsPersisted(incoming: DataFrame, path: String,
       threshold: Double): DataFrame = {
     val spark = incoming.sparkSession
-    val (k, bands) = readManifest(spark.sparkContext.hadoopConfiguration, path)
-    incrementalCore(incoming,
-      readIndexTable(spark, path, "digests"),
-      readIndexTable(spark, path, "bands"),
-      readIndexTable(spark, path, "shingles"), threshold, k, bands)
+    val Seq(k, bands) = dedupLayout.fields(spark, path, "k", "bands")
+    val batches = dedupLayout.committed(spark, path)
+    def table(t: String) = indexTable(dedupLayout, spark, path, t, batches)
+    incrementalCore(incoming, table("digests"), table("bands"),
+      table("shingles"), threshold, k, bands)
   }
 
   /** SimHash width: 62 bits — the first 62 bits of md5(word), MSB-first.

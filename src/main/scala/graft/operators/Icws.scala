@@ -224,6 +224,8 @@ object Icws {
     sys.props.getOrElse("graft.icws.sketch.dump",
       "/tmp/graft_oracle_icws_sketch")
 
+  private val layout = LayoutManifest("ICWS-sketch", "persistSketches")
+
   /** Materialize the ICWS layout under `path`: `sketches/` (g, i, se,
     * st — groups × k rows, the compact probe artifact), `totals/`
     * (g, tot) and `weights/` (g, e, w — the exact side's index, the
@@ -244,28 +246,24 @@ object Icws {
       weightCol: String, path: String, k: Int = 32, maxGroups: Int = 1024,
       salt: String = "icws"): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val conf = rows.sparkSession.sparkContext.hadoopConfiguration
-    // manifest-as-commit-marker ([[LayoutManifest]]): dropped before
-    // the three table overwrites, written last — a rebuild dying
-    // mid-way leaves a layout the probe refuses instead of NEW
-    // sketches silently joined against OLD weights
-    LayoutManifest.uncommit(conf, path)
-    val wts = weightsOf(rows, groupCol, elemCol, weightCol).cache()
-    try {
-      // the gate rides the build: a layout that would blow the pair
-      // probe up refuses to materialize at all
-      Partitioning.requireBoundedDomain(
-        wts.groupBy(col("g")).agg(sum(col("w")).as("tot")),
-        groupCol, "persistSketches", maxGroups)
-        .write.mode("overwrite").parquet(s"$path/totals")
-      sketchOf(wts, k, salt)
-        .write.mode("overwrite").parquet(s"$path/sketches")
-      wts.write.mode("overwrite").parquet(s"$path/weights")
-    } finally wts.unpersist()
-    val batchRoot = new org.apache.hadoop.fs.Path(s"$path/batches")
-    batchRoot.getFileSystem(conf).delete(batchRoot, true)
-    writeSalt(conf, path, salt)
-    LayoutManifest.commit(conf, path, "k" -> k)
+    // the [[LayoutManifest]] rebuild: a rebuild dying mid-way leaves a
+    // layout the probe refuses instead of NEW sketches silently joined
+    // against OLD weights
+    layout.rebuild(rows.sparkSession, path, "k" -> k) {
+      val wts = weightsOf(rows, groupCol, elemCol, weightCol).cache()
+      try {
+        // the gate rides the build: a layout that would blow the pair
+        // probe up refuses to materialize at all
+        Partitioning.requireBoundedDomain(
+          wts.groupBy(col("g")).agg(sum(col("w")).as("tot")),
+          groupCol, "persistSketches", maxGroups)
+          .write.mode("overwrite").parquet(s"$path/totals")
+        sketchOf(wts, k, salt)
+          .write.mode("overwrite").parquet(s"$path/sketches")
+        wts.write.mode("overwrite").parquet(s"$path/weights")
+      } finally wts.unpersist()
+      writeSalt(rows.sparkSession.sparkContext.hadoopConfiguration, path, salt)
+    }
   }
 
   /** The sampling salt is layout state ([[persistSketches]] scaladoc);
@@ -291,22 +289,6 @@ object Icws {
     finally in.close()
   }
 
-  /** Committed append-batch directories under an ICWS layout — the
-    * [[Dedup.appendDedupIndex]] batch-level `_COMMITTED` protocol
-    * (Dedup's helpers are private to it; the four lines replicate
-    * rather than couple the families).
-    */
-  private def committedBatchDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/batches")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMITTED")))
-        .map(_.toString).sorted.toSeq
-    else Seq.empty[String]
-  }
-
   /** One layout table over base + the given batch dirs. `withSeq`
     * tags base rows seq 0 (batch tables store their own seq column) —
     * the latest-wins resolution key for the REPLACED tables (sketches,
@@ -315,10 +297,11 @@ object Icws {
   private def tableView(spark: org.apache.spark.sql.SparkSession,
       path: String, table: String, dirs: Seq[String],
       withSeq: Boolean): DataFrame = {
-    val base0 = spark.read.parquet(s"$path/$table")
-    val base = if (withSeq) base0.withColumn("seq", lit(0L)) else base0
-    (base +: dirs.map(d => spark.read.parquet(s"$d/$table")))
-      .reduce(_.unionByName(_))
+    val base = s"$path/$table"
+    layout.view(path, table, dirs) { d =>
+      val t = spark.read.parquet(d)
+      if (withSeq && d == base) t.withColumn("seq", lit(0L)) else t
+    }
   }
 
   /** Latest-batch-wins per group over a seq-tagged table view: the
@@ -356,11 +339,9 @@ object Icws {
   /** Append a weighted-rows batch to a [[persistSketches]] layout —
     * the lane that closes the persisted-index family's last lifecycle
     * asymmetry (dedup, BM25, IVF and the containment layout all take
-    * committed appends; ICWS was rebuild-only). COMMIT PROTOCOL
-    * ([[Dedup.appendDedupIndex]]): the batch's three tables land in
-    * their own `batches/batch-<uuid>/` directory and become visible
-    * only once the batch-level `_COMMITTED` marker exists, written
-    * after all three table writes succeed. k and the salt come from
+    * committed appends; ICWS was rebuild-only). The batch's three
+    * tables are one [[LayoutManifest]] append batch, visible only once
+    * all three are written. k and the salt come from
     * the layout, never from the caller — an append can neither sample
     * at a different k nor draw under a different salt.
     *
@@ -394,11 +375,9 @@ object Icws {
   def appendSketches(rows: DataFrame, groupCol: String, elemCol: String,
       weightCol: String, path: String, maxGroups: Int = 1024): Unit = {
     val spark = rows.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val k = LayoutManifest.readField(conf, path, "k",
-      "ICWS-sketch", "persistSketches")
-    val salt = readSalt(conf, path)
-    val prior = committedBatchDirs(spark, path)
+    val Seq(k) = layout.fields(spark, path, "k")
+    val salt = readSalt(spark.sparkContext.hadoopConfiguration, path)
+    val prior = layout.committed(spark, path)
     val seq = prior.size + 1L
     // raw batch contribution: per-(g, e) sums UNFILTERED — the
     // committed view filters once after re-aggregation, so a zero
@@ -406,34 +385,32 @@ object Icws {
     val batchWts = rows
       .groupBy(col(groupCol).as("g"), col(elemCol).as("e"))
       .agg(sum(col(weightCol)).cast("double").as("w"))
-    val dir = s"$path/batches/batch-${java.util.UUID.randomUUID()}"
-    batchWts.write.parquet(s"$dir/weights")
-    val written = spark.read.parquet(s"$dir/weights")
-    // merged weights of the TOUCHED groups: committed view ∪ this
-    // batch, re-aggregated — the re-sketch input
-    val merged = weightsView(spark, path, prior).unionByName(written)
-      .join(written.select(col("g")).distinct(), Seq("g"), "left_semi")
-      .groupBy(col("g"), col("e")).agg(sum(col("w")).as("w"))
-      .filter(col("w") > 0)
-      .cache()
-    try {
-      val newTot = merged.groupBy(col("g")).agg(sum(col("w")).as("tot"))
-      val untouched = resolvedView(spark, path, "totals", prior)
-        .join(written.select(col("g")).distinct(), Seq("g"), "left_anti")
-      // the batch's totals table IS the full post-append totals frame,
-      // so the domain gate rides exactly the written frame — the
-      // persistSketches pattern, giving appends the build's refusal
-      Partitioning.requireBoundedDomain(
-        untouched.unionByName(newTot), groupCol,
-        "appendSketches", maxGroups)
-        .withColumn("seq", lit(seq))
-        .write.parquet(s"$dir/totals")
-      sketchOf(merged, k, salt).withColumn("seq", lit(seq))
-        .write.parquet(s"$dir/sketches")
-    } finally merged.unpersist()
-    val marker = new org.apache.hadoop.fs.Path(dir, "_COMMITTED")
-    marker.getFileSystem(conf).createNewFile(marker)
-    ()
+    layout.append(spark, path) { dir =>
+      batchWts.write.parquet(s"$dir/weights")
+      val written = spark.read.parquet(s"$dir/weights")
+      // merged weights of the TOUCHED groups: committed view ∪ this
+      // batch, re-aggregated — the re-sketch input
+      val merged = weightsView(spark, path, prior).unionByName(written)
+        .join(written.select(col("g")).distinct(), Seq("g"), "left_semi")
+        .groupBy(col("g"), col("e")).agg(sum(col("w")).as("w"))
+        .filter(col("w") > 0)
+        .cache()
+      try {
+        val newTot = merged.groupBy(col("g")).agg(sum(col("w")).as("tot"))
+        val untouched = resolvedView(spark, path, "totals", prior)
+          .join(written.select(col("g")).distinct(), Seq("g"), "left_anti")
+        // the batch's totals table IS the full post-append totals frame,
+        // so the domain gate rides exactly the written frame — the
+        // persistSketches pattern, giving appends the build's refusal
+        Partitioning.requireBoundedDomain(
+          untouched.unionByName(newTot), groupCol,
+          "appendSketches", maxGroups)
+          .withColumn("seq", lit(seq))
+          .write.parquet(s"$dir/totals")
+        sketchOf(merged, k, salt).withColumn("seq", lit(seq))
+          .write.parquet(s"$dir/sketches")
+      } finally merged.unpersist()
+    }
   }
 
   /** Compact a [[persistSketches]] layout: fold every batch committed
@@ -445,41 +422,24 @@ object Icws {
     * row-identical to a fresh rebuild over the merged rows (pinned in
     * IcwsSpec): whichever batch last touched a group sketched it over
     * that group's FULL merged weights, and no later batch changed
-    * them. Staging writes + per-table dir renames, snapshot-scoped
-    * batch deletion — a concurrently committed batch survives
-    * untouched; the manifest (k) and salt are layout metadata and
-    * never change in a fold.
+    * them. The [[LayoutManifest]] compaction publishes the fold; the
+    * manifest (k) and salt are layout metadata and never change in it.
     */
   def compactSketches(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val snapshot = committedBatchDirs(spark, path)
-    if (snapshot.isEmpty) return
-    val token = java.util.UUID.randomUUID().toString
-    weightsView(spark, path, snapshot)
-      .write.parquet(s"$path/.weights_compact_$token")
-    resolveLatest(tableView(spark, path, "totals", snapshot, withSeq = true))
-      .write.parquet(s"$path/.totals_compact_$token")
-    resolveLatest(tableView(spark, path, "sketches", snapshot, withSeq = true))
-      .write.parquet(s"$path/.sketches_compact_$token")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    for (table <- Seq("weights", "totals", "sketches")) {
-      val old = s"$path/.${table}_old_$token"
-      require(fs.rename(p(s"$path/$table"), p(old)),
-        s"compact: $table swap-out failed")
-      require(fs.rename(p(s"$path/.${table}_compact_$token"),
-        p(s"$path/$table")), s"compact: $table swap-in failed")
-      fs.delete(p(old), true)
+      path: String): Unit =
+    layout.compact(spark, path, "weights", "totals", "sketches") {
+      (snapshot, staged) =>
+        weightsView(spark, path, snapshot).write.parquet(staged("weights"))
+        for (t <- Seq("totals", "sketches"))
+          resolveLatest(tableView(spark, path, t, snapshot, withSeq = true))
+            .write.parquet(staged(t))
     }
-    snapshot.foreach(d => fs.delete(p(d), true))
-  }
 
   /** Pair probe over a [[persistSketches]] layout — row-for-row
     * identical to [[weightedJaccardIcws]] on the rows the layout was
     * built from plus every COMMITTED [[appendSketches]] batch (the
     * readout is shared verbatim; parquet round-trips doubles exactly;
-    * an append batch without its `_COMMITTED` marker is invisible),
+    * an uncommitted append batch is invisible),
     * with NO corpus-sized work: the probe reads the committed view of
     * the three bounded tables — weights re-aggregated additively,
     * sketches and totals resolved latest-batch-wins per group — and
@@ -488,10 +448,8 @@ object Icws {
     */
   def weightedJaccardIcwsPersisted(spark: org.apache.spark.sql.SparkSession,
       path: String, maxGroups: Int = 1024): DataFrame = {
-    val k = LayoutManifest.readField(
-      spark.sparkContext.hadoopConfiguration, path, "k",
-      "ICWS-sketch", "persistSketches")
-    val dirs = committedBatchDirs(spark, path)
+    val Seq(k) = layout.fields(spark, path, "k")
+    val dirs = layout.committed(spark, path)
     // re-gate on read: the pair join is |groups|² no matter where the
     // layout came from
     val tot = Partitioning.requireBoundedDomain(

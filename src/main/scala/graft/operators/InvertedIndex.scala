@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *   stats/              one row (n_docs, sum_dl) over the WHOLE corpus
   *                        (BM25's idf and avgdl are corpus-global even
   *                        for docs matching no query term)
+  *   manifest.json, batches/  the [[LayoutManifest]] commit marker and
+  *                        committed append batches (postings + stats)
   *
   * Scale shape: the build is the tokenize → (w, doc, dl) count the
   * from-scratch path runs once per QUERY, paid once per CORPUS instead;
@@ -64,95 +66,56 @@ object InvertedIndex {
       .select(size(TextAnalysis.words(col("text"))).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
-  /** Build the base postings + corpus-stats layout for `docs`. A
-    * rebuild re-indexes the full corpus, so any previously appended
-    * batches are stale and dropped (same rebuild semantics as
-    * `KMeansIndex.persist`).
+  private val layout = LayoutManifest("BM25-index", "InvertedIndex.build")
+
+  private def postingsView(spark: SparkSession, dir: String,
+      batches: Seq[String]): DataFrame =
+    layout.view(dir, "postings", batches)(p =>
+      spark.read.schema(postingsSchema).option("basePath", p).parquet(p))
+
+  private def statsView(spark: SparkSession, dir: String,
+      batches: Seq[String]): DataFrame =
+    layout.view(dir, "stats", batches)(spark.read.parquet(_))
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+
+  /** Build the base postings + corpus-stats layout for `docs` through
+    * the [[LayoutManifest]] rebuild. A rebuild re-indexes the full
+    * corpus, so any previously appended batches are stale and dropped.
     */
-  def build(docs: DataFrame, dir: String = indexDir): Unit = {
-    val spark = docs.sparkSession
-    val batches = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = batches.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(batches)) fs.delete(batches, true)
-    postingsOf(docs)
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/postings")
-    statsOf(docs).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-  }
+  def build(docs: DataFrame, dir: String = indexDir): Unit =
+    layout.rebuild(docs.sparkSession, dir) {
+      postingsOf(docs)
+        .write.partitionBy("bucket").mode("overwrite").parquet(s"$dir/postings")
+      statsOf(docs).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    }
 
   /** Incrementally index a NEW document batch (disjoint doc_ids from
     * everything already indexed — BM25's df and corpus stats compose
     * additively over disjoint doc sets, so a search over base ∪ batches
-    * equals a from-scratch index of the union). The batch lands in its
-    * own `batches/batch-<uuid>` directory and becomes visible only once
-    * its `_COMMITTED` marker exists — written AFTER both the postings
-    * and stats jobs succeed (two writes, so Spark's per-job `_SUCCESS`
-    * alone cannot gate the pair). Same atomic-publish discipline as
-    * `KMeansIndex.appendPersisted`; `foreachBatch`-compatible.
+    * equals a from-scratch index of the union). The postings and stats
+    * tables land as one [[LayoutManifest]] append batch, visible only
+    * once both are written; `foreachBatch`-compatible.
     */
-  def appendBatch(docs: DataFrame, dir: String = indexDir): Unit = {
-    val spark = docs.sparkSession
-    val batchDir = s"$dir/batches/batch-${java.util.UUID.randomUUID()}"
-    postingsOf(docs).write.partitionBy("bucket").parquet(s"$batchDir/postings")
-    statsOf(docs).coalesce(1).write.parquet(s"$batchDir/stats")
-    val fs = new org.apache.hadoop.fs.Path(batchDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(batchDir, "_COMMITTED"), true).close()
-  }
-
-  /** Committed batch directories, oldest-first; uncommitted (in-flight
-    * or failed) batches are invisible to every reader.
-    */
-  private def committedBatches(spark: SparkSession, dir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$dir/batches")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(root))
-      fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-        .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMITTED")))
-        .map(_.toString).sorted.toSeq
-    else Seq.empty[String]
-  }
-
-  /** Compact the layout: fold every batch committed AT THE SNAPSHOT
-    * into the base postings/stats (the [[KMeansIndex.compactPersisted]]
-    * discipline, completing the index-maintenance pair) — a
-    * continuously-ingesting BM25 index accumulates one postings +
-    * stats directory pair per batch, and every search unions them all;
-    * compaction resets that read amplification without re-tokenizing
-    * anything (the fold is a file-layout rewrite of already-computed
-    * postings; stats fold additively into one row).
-    *
-    * Publish: staging writes + directory renames, snapshot-scoped
-    * batch deletion — a batch committed concurrently survives
-    * untouched. The postings and stats swaps are two renames (not one
-    * atomic pair), so like a [[build]] rebuild the swap window needs
-    * quiesced searches; batches never do (their publish is the single
-    * `_COMMITTED` create).
-    */
-  def compact(spark: SparkSession, dir: String = indexDir): Unit = {
-    val batches = committedBatches(spark, dir)
-    if (batches.isEmpty) return
-    val token = java.util.UUID.randomUUID().toString
-    (s"$dir/postings" +: batches.map(b => s"$b/postings"))
-      .map(p => spark.read.schema(postingsSchema).option("basePath", p).parquet(p))
-      .reduce(_.unionByName(_))
-      .write.partitionBy("bucket").parquet(s"$dir/.postings_compact_$token")
-    (s"$dir/stats" +: batches.map(b => s"$b/stats"))
-      .map(p => spark.read.parquet(p))
-      .reduce(_.unionByName(_))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .coalesce(1).write.parquet(s"$dir/.stats_compact_$token")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    for (part <- Seq("postings", "stats")) {
-      val old = s"$dir/.${part}_old_$token"
-      require(fs.rename(p(s"$dir/$part"), p(old)), s"compact: $part swap-out failed")
-      require(fs.rename(p(s"$dir/.${part}_compact_$token"), p(s"$dir/$part")),
-        s"compact: $part swap-in failed")
-      fs.delete(p(old), true)
+  def appendBatch(docs: DataFrame, dir: String = indexDir): Unit =
+    layout.append(docs.sparkSession, dir) { batch =>
+      postingsOf(docs).write.partitionBy("bucket").parquet(s"$batch/postings")
+      statsOf(docs).coalesce(1).write.parquet(s"$batch/stats")
     }
-    batches.foreach(b => fs.delete(p(b), true))
-  }
+
+  /** Compact the layout: fold every committed batch into the base
+    * postings/stats (the [[LayoutManifest]] compaction) — a
+    * continuously-ingesting BM25 index accumulates one postings + stats
+    * directory pair per batch, and every search unions them all;
+    * compaction resets that read amplification without re-tokenizing
+    * anything (postings are re-laid by bucket; stats fold additively
+    * into one row).
+    */
+  def compact(spark: SparkSession, dir: String = indexDir): Unit =
+    layout.compact(spark, dir, "postings", "stats") { (batches, staged) =>
+      postingsView(spark, dir, batches)
+        .write.partitionBy("bucket").parquet(staged("postings"))
+      statsView(spark, dir, batches).coalesce(1).write.parquet(staged("stats"))
+    }
 
   /** Search the persisted layout: same result as
     * `TextAnalysis.bm25TopDocs` on the indexed corpus, reading only the
@@ -162,18 +125,16 @@ object InvertedIndex {
       dir: String = indexDir, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "query must have at least one term")
     val terms = queryTerms.distinct
+    val batches = layout.committed(spark, dir)
     // bucket ids for the query terms, computed with the SAME hash the
     // writer used (a tiny Spark job over |terms| rows — the engine's
     // xxhash64, not a driver-side reimplementation that could drift)
     import spark.implicits._
     val buckets = terms.toDF("w").select(termBucket(col("w")).as("b"))
       .distinct().as[Int].collect().toSeq
-    val batches = committedBatches(spark, dir)
     // every branch keeps its own basePath, so bucket=N stays a partition
     // value and the bucket filter is STATIC pruning on each branch
-    val tf = (s"$dir/postings" +: batches.map(b => s"$b/postings"))
-      .map(p => spark.read.schema(postingsSchema).option("basePath", p).parquet(p))
-      .reduce(_.unionByName(_))
+    val tf = postingsView(spark, dir, batches)
       .filter(col("bucket").isin(buckets: _*)) // static partition pruning
       .filter(col("w").isin(terms: _*))
       .select(col("doc_id"), col("dl"), col("w"), col("tf"))
@@ -181,10 +142,7 @@ object InvertedIndex {
     // the pruned read equals the corpus df; batches hold disjoint docs,
     // so df and corpus stats compose additively over the union
     val df = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val stats = (s"$dir/stats" +: batches.map(b => s"$b/stats"))
-      .map(p => spark.read.parquet(p))
-      .reduce(_.unionByName(_))
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+    val stats = statsView(spark, dir, batches)
     TextAnalysis.bm25Rank(tf, df, stats, k, k1, b)
   }
 }

@@ -205,57 +205,35 @@ object KMeansIndex {
       .orderBy(col("query_id").asc, col("rank").asc)
   }
 
+  private val layout = LayoutManifest("IVF", "KMeansIndex.persist")
+
   /** Materialize the index as a cell-partitioned parquet layout — one
-    * directory per Voronoi cell plus the (tiny) centroid table. This is
-    * the "build once, search many" form: a probe search over the opened
-    * layout reads only the probed cells' directories (static partition
-    * pruning), i.e. nProbe/k of the data — the entire point of an IVF
-    * index at 100 TB, where re-assigning cells per query is a full scan.
+    * directory per Voronoi cell plus the (tiny) centroid table, written
+    * through the [[LayoutManifest]] rebuild. This is the "build once,
+    * search many" form: a probe search over the opened layout reads
+    * only the probed cells' directories (static partition pruning),
+    * i.e. nProbe/k of the data — the entire point of an IVF index at
+    * 100 TB, where re-assigning cells per query is a full scan. A
+    * rebuild re-trains the centroids, so batches appended under the OLD
+    * centroids carry stale cell assignments and are dropped with it.
     */
-  def persist(index: Index, path: String): Unit = {
-    index.assigned.write.partitionBy("cell").mode("overwrite")
-      .parquet(s"$path/cells")
-    index.centroids.coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/centroids")
-    // A rebuild re-trains the centroids, so batches appended under the
-    // OLD centroids carry stale cell assignments — drop them with the
-    // rebuild rather than leaving mis-assigned rows in the new layout.
-    val spark = index.assigned.sparkSession
-    val root = new org.apache.hadoop.fs.Path(s"$path/batches")
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(root, true)
-  }
+  def persist(index: Index, path: String): Unit =
+    layout.rebuild(index.assigned.sparkSession, path) {
+      index.assigned.write.partitionBy("cell").mode("overwrite")
+        .parquet(s"$path/cells")
+      index.centroids.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/centroids")
+    }
 
-  /** The committed read view of a persisted layout: the base `cells`
-    * directory plus every append batch whose `_SUCCESS` marker exists.
-    * The marker is written by Spark's file commit protocol AFTER all
-    * task outputs are moved into place, and its creation is a single
-    * atomic filesystem operation — so a reader either ignores an
-    * in-flight batch entirely (no marker yet) or sees it whole. This is
-    * the manifest gate that makes [[appendPersisted]] safe against
-    * concurrent readers without a table format.
-    */
-  private def committedDirs(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$path/batches")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val batches =
-      if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-          .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          .map(_.toString).sorted.toSeq
-      else Seq.empty[String]
-    s"$path/cells" +: batches
-  }
-
-  /** Union scan over the committed view. Each branch keeps its own
-    * `basePath`, so the `cell=N` directory names stay partition values
-    * and a cell filter is static partition pruning on every branch.
+  /** Union scan over the committed view (base `cells` + every
+    * committed append batch). Each branch keeps its own `basePath`, so
+    * the `cell=N` directory names stay partition values and a cell
+    * filter is static partition pruning on every branch.
     */
   private def readCells(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    committedDirs(spark, path)
-      .map(d => spark.read.option("basePath", d).parquet(d))
-      .reduce(_.unionByName(_))
+      path: String, batches: Seq[String]): DataFrame =
+    layout.view(path, "cells", batches)(d =>
+      spark.read.option("basePath", d).parquet(d))
 
   /** Incrementally add vectors to a [[persist]]ed layout: assign cells
     * with the SAME trained centroids (read back from the layout — the
@@ -265,69 +243,36 @@ object KMeansIndex {
     * only the affected cell partitions, searches keep pruning, and the
     * centroid quality degrades only as far as the data drifts (rebuild
     * cadence is a quality/cost dial, same trade as any IVF system).
-    * Works as a Structured Streaming `foreachBatch` sink body.
-    *
-    * COMMIT PROTOCOL: each append lands in its own
-    * `batches/batch-<uuid>` directory and becomes visible to readers
-    * only once its `_SUCCESS` marker exists (see [[committedDirs]]) —
-    * an atomic publish, so a concurrent search never scores a
-    * partially-written batch. Appends also never touch the base `cells`
-    * directories, so no in-flight scan loses files under itself. The
-    * one remaining unsafe overlap is a [[persist]] REBUILD concurrent
-    * with searches (mode=overwrite deletes the base dirs); quiesce
-    * searches across rebuilds, or use a transactional table format when
-    * that discipline can't be guaranteed.
+    * Works as a Structured Streaming `foreachBatch` sink body; each
+    * append is one [[LayoutManifest]] batch, so a concurrent search
+    * never scores a partially-written one.
     */
   def appendPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
       vectors: DataFrame): Unit = {
     val centers = spark.read.parquet(s"$path/centroids")
       .orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toArray)
-    val batchDir = s"$path/batches/batch-${java.util.UUID.randomUUID()}"
-    vectors.withColumn("cell", cellExpr(col("embedding"), centers))
-      .write.partitionBy("cell").parquet(batchDir)
+    layout.append(spark, path) { batch =>
+      vectors.withColumn("cell", cellExpr(col("embedding"), centers))
+        .write.partitionBy("cell").parquet(s"$batch/cells")
+    }
   }
 
-  /** Compact a [[persist]]ed layout: fold every batch committed AT THE
-    * SNAPSHOT back into a single base `cells` directory — the index-
-    * maintenance op a continuously-ingesting pipeline schedules between
-    * rebuilds. Appends accumulate one directory per batch; each search
-    * then unions base + every batch (small files, one scan branch per
-    * batch), so read amplification grows with ingest count until a
-    * compaction folds them. Unlike a [[persist]] rebuild this does NOT
-    * retrain centroids — assignments are already consistent, the fold
-    * is a pure file-layout rewrite (semantics-invisible, like
-    * [[Partitioning.zOrderLayout]]) — so batches are folded, not
-    * dropped.
-    *
-    * Publish discipline: the merged layout is written to a staging
-    * directory and swapped in with two directory renames (atomic on
-    * posix/HDFS); ONLY the batches in the starting snapshot are
-    * deleted, so a batch committed concurrently with the compaction
-    * survives untouched and stays visible. Like a rebuild, the swap
-    * window itself requires quiescing searches (a reader between the
-    * two renames would miss the base); a transactional table format
-    * lifts that constraint when the discipline can't be guaranteed.
+  /** Compact a [[persist]]ed layout: fold every committed batch back
+    * into the base `cells` directory (the [[LayoutManifest]]
+    * compaction) — appends accumulate one directory per batch, and each
+    * search unions base + every batch, so read amplification grows with
+    * ingest count until a compaction folds them. Unlike a rebuild this
+    * does NOT retrain centroids — assignments are already consistent,
+    * so the fold is a pure file-layout rewrite (semantics-invisible,
+    * like [[Partitioning.zOrderLayout]]).
     */
   def compactPersisted(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val snapshot = committedDirs(spark, path)
-    if (snapshot.size <= 1) return // nothing to fold
-    val merged = snapshot
-      .map(d => spark.read.option("basePath", d).parquet(d))
-      .reduce(_.unionByName(_))
-    val token = java.util.UUID.randomUUID().toString
-    val staging = s"$path/.cells_compact_$token"
-    merged.write.partitionBy("cell").parquet(staging)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val old = s"$path/.cells_old_$token"
-    require(fs.rename(p(s"$path/cells"), p(old)), "compact: base swap-out failed")
-    require(fs.rename(p(staging), p(s"$path/cells")), "compact: staging swap-in failed")
-    fs.delete(p(old), true)
-    snapshot.drop(1).foreach(d => fs.delete(p(d), true))
-  }
+      path: String): Unit =
+    layout.compact(spark, path, "cells") { (batches, staged) =>
+      readCells(spark, path, batches).write.partitionBy("cell")
+        .parquet(staged("cells"))
+    }
 
   /** Probe-then-scan over a [[persist]]ed layout. The probe list is a
     * bounded driver collect (≤ nProbe ints — NOT data-dependent), turned
@@ -338,13 +283,14 @@ object KMeansIndex {
     */
   def searchPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
       query: Array[Float], topK: Int, nProbe: Int): DataFrame = {
+    val batches = layout.committed(spark, path)
     val q = typedLit(query.toSeq.map(_.toDouble))
     val probeCells = spark.read.parquet(s"$path/centroids")
       .withColumn("cscore", VectorOps.cosineSimilarity(col("centroid"), q))
       .orderBy(col("cscore").desc, col("cell").asc)
       .limit(nProbe)
       .select(col("cell")).collect().map(_.getInt(0))
-    readCells(spark, path)
+    readCells(spark, path, batches)
       .filter(col("cell").isin(probeCells.map(Int.box): _*))
       .withColumn("score", round(VectorOps.cosineSimilarity(col("embedding"), q), 6))
       .filter(Search.rankable(col("score")))

@@ -1,58 +1,136 @@
 package graft.operators
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One `manifest.json` per persisted layout, integer fields only — the
-  * shared read/write every persisted-index family uses so encoding,
-  * parsing and error text cannot drift between layouts (they had
-  * started to: four inline copies before this).
+/** The ONE lifecycle every persisted, appendable layout follows — the
+  * dedup index, the containment index, the ICWS sketches, the BM25
+  * postings and the IVF cells. A family names its tables and says how
+  * to write and read them; the commit protocol lives only here:
   *
-  * The manifest doubles as the layout's COMMIT MARKER: a rebuild
-  * DELETES it first and writes it LAST, so a rebuild that dies between
-  * table overwrites leaves no valid manifest and the probe REFUSES
-  * (naming the manifest) instead of silently reading one table from
-  * the new generation next to another from the old — the torn-rebuild
-  * failure a stale-but-valid manifest would wave through. This
-  * protects crash-recovery only; concurrent READERS must still quiesce
-  * across rebuilds (each layout's scaladoc says so).
+  *  - REBUILD ([[rebuild]]): delete `manifest.json` (the layout's
+  *    commit marker) and every append batch (stale against the new
+  *    base), write the base tables, then write the manifest LAST. A
+  *    rebuild that dies between its table writes leaves no manifest,
+  *    and every reader REFUSES naming it instead of joining a table of
+  *    the new generation to one of the old — the torn-rebuild failure a
+  *    stale-but-valid manifest would wave through.
+  *  - APPEND ([[append]]): the batch's tables land in their own
+  *    `batches/batch-<uuid>/` directory, and the batch-level
+  *    `_COMMITTED` marker is created after ALL of them, so a reader
+  *    sees a batch whole or not at all (one marker for several tables,
+  *    which Spark's per-job `_SUCCESS` cannot give).
+  *  - READ ([[committed]]): refuses a layout without a manifest, and
+  *    lists only the batches whose marker exists.
+  *  - COMPACT ([[compact]]): fold the batches committed at the snapshot
+  *    into staging tables, swap each in with two renames, and delete
+  *    only the snapshot's batches — a batch committed concurrently
+  *    survives untouched and is folded next time.
+  *
+  * The manifest holds integer fields only: the parameters that are part
+  * of the layout (a probe at a different shingle width or band geometry
+  * would match nothing), so appends and probes read them from here,
+  * never from caller arguments. This protects crash recovery only;
+  * concurrent READERS must quiesce across a rebuild and across a
+  * compaction's rename window (appends never need that).
+  *
+  * `kind` and `builder` name the family in refusals, e.g. "no
+  * dedup-index manifest at … — not a persistDedupIndex layout".
   */
-private[graft] object LayoutManifest {
+private[graft] final case class LayoutManifest(kind: String, builder: String) {
 
-  /** Drop the commit marker before touching any table — step 1 of a
-    * rebuild. Idempotent when no manifest exists.
-    */
-  def uncommit(conf: Configuration, path: String): Unit = {
+  private def fs(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def manifestOf(spark: SparkSession, path: String): (FileSystem, Path) = {
     val p = new Path(path, "manifest.json")
-    p.getFileSystem(conf).delete(p, false)
-    ()
+    val f = fs(spark, p)
+    require(f.exists(p), s"no $kind manifest at $p — not a $builder layout")
+    (f, p)
   }
 
-  /** Write the commit marker — the LAST step of a rebuild. */
-  def commit(conf: Configuration, path: String,
-      fields: (String, Int)*): Unit = {
-    val p = new Path(path, "manifest.json")
-    val out = p.getFileSystem(conf).create(p, true)
+  /** Rebuild the base tables: uncommit, drop the batches, run
+    * `writeTables`, then commit `fields` as the new manifest.
+    */
+  def rebuild(spark: SparkSession, path: String, fields: (String, Int)*)(
+      writeTables: => Unit): Unit = {
+    val manifest = new Path(path, "manifest.json")
+    val f = fs(spark, manifest)
+    f.delete(manifest, false)
+    f.delete(new Path(path, "batches"), true)
+    writeTables
+    val out = f.create(manifest, true)
     try out.write(fields.map { case (k, v) => s""""$k": $v""" }
       .mkString("{", ", ", "}").getBytes("UTF-8"))
     finally out.close()
   }
 
-  /** All requested integer fields of a committed layout's manifest in
-    * ONE open+scan (multi-field readers used to reopen and re-scan the
-    * file per field); `kind` and `builder` name the layout family in
-    * the refusal message (e.g. "no dedup-index manifest at … — not a
-    * persistDedupIndex layout"). Integer-only by design (the schema
-    * [[commit]] writes); a present-but-non-integer value fails naming
-    * that restriction, not a bare "missing field".
+  /** Land one append batch on a committed layout: `writeTables` writes
+    * the batch's tables under the directory it is given; the
+    * `_COMMITTED` marker follows.
     */
-  def readFields(conf: Configuration, path: String, kind: String,
-      builder: String, names: String*): Seq[Int] = {
-    val p = new Path(path, "manifest.json")
-    val fs = p.getFileSystem(conf)
-    require(fs.exists(p),
-      s"no $kind manifest at $p — not a $builder layout")
-    val in = fs.open(p)
+  def append(spark: SparkSession, path: String)(
+      writeTables: String => Unit): Unit = {
+    manifestOf(spark, path)
+    val dir = s"$path/batches/batch-${java.util.UUID.randomUUID()}"
+    writeTables(dir)
+    val marker = new Path(dir, "_COMMITTED")
+    fs(spark, marker).createNewFile(marker)
+    ()
+  }
+
+  /** The committed batch directories of the layout at `path`, in name
+    * order; in-flight or failed batches are invisible to every reader.
+    */
+  def committed(spark: SparkSession, path: String): Seq[String] = {
+    manifestOf(spark, path)
+    val root = new Path(path, "batches")
+    val f = fs(spark, root)
+    if (!f.exists(root)) Nil
+    else f.listStatus(root).filter(_.isDirectory).map(_.getPath)
+      .filter(p => f.exists(new Path(p, "_COMMITTED")))
+      .map(_.toString).sorted.toSeq
+  }
+
+  /** One table over the base and the given batch directories, each
+    * directory opened by `read`.
+    */
+  def view(path: String, table: String, batches: Seq[String])(
+      read: String => DataFrame): DataFrame =
+    (s"$path/$table" +: batches.map(b => s"$b/$table"))
+      .map(read).reduce(_.unionByName(_))
+
+  /** Compact: `writeStaged` folds base + the snapshot's batches of each
+    * of `tables` into the staging directory it is given per table name;
+    * each is then renamed into place and the snapshot's batches are
+    * deleted. A no-op when nothing is committed.
+    */
+  def compact(spark: SparkSession, path: String, tables: String*)(
+      writeStaged: (Seq[String], String => String) => Unit): Unit = {
+    val snapshot = committed(spark, path)
+    if (snapshot.nonEmpty) {
+      val token = java.util.UUID.randomUUID().toString
+      def staged(t: String) = s"$path/.${t}_compact_$token"
+      writeStaged(snapshot, staged)
+      val f = fs(spark, new Path(path))
+      for (t <- tables) {
+        val old = new Path(path, s".${t}_old_$token")
+        require(f.rename(new Path(path, t), old), s"compact: $t swap-out failed")
+        require(f.rename(new Path(staged(t)), new Path(path, t)),
+          s"compact: $t swap-in failed")
+        f.delete(old, true)
+      }
+      snapshot.foreach(b => f.delete(new Path(b), true))
+    }
+  }
+
+  /** The requested integer fields of a committed layout's manifest, in
+    * one read. A present-but-non-integer value fails naming that
+    * restriction, not a bare "missing field".
+    */
+  def fields(spark: SparkSession, path: String, names: String*): Seq[Int] = {
+    val (f, p) = manifestOf(spark, path)
+    val in = f.open(p)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
     names.map { name =>
@@ -67,9 +145,4 @@ private[graft] object LayoutManifest {
       }
     }
   }
-
-  /** One integer field — [[readFields]] for the single-field layouts. */
-  def readField(conf: Configuration, path: String, name: String,
-      kind: String, builder: String): Int =
-    readFields(conf, path, kind, builder, name).head
 }

@@ -213,11 +213,11 @@ class AnnSpec extends AnyFunSuite {
     KMeansIndex.appendPersisted(spark, path, newVec)
     // simulate a reader racing a half-written batch: remove the commit
     // marker — the batch's data files are all present, but without
-    // _SUCCESS the committed view must not include them
+    // _COMMITTED the committed view must not include them
     val batches = new java.io.File(s"$path/batches").listFiles().filter(_.isDirectory)
     assert(batches.length == 1)
-    val marker = new java.io.File(batches.head, "_SUCCESS")
-    assert(marker.exists(), "Spark's commit protocol should have written _SUCCESS")
+    val marker = new java.io.File(batches.head, "_COMMITTED")
+    assert(marker.exists(), "the batch commit protocol should have written _COMMITTED")
     assert(marker.delete())
     val uncommitted = KMeansIndex.searchPersisted(spark, path, query, topK = 2, nProbe = 8)
       .collect().map(_.getLong(0)).toSeq
@@ -251,7 +251,7 @@ class AnnSpec extends AnyFunSuite {
     val uncommitted = batches.find { b =>
       spark.read.parquet(b.toString).filter($"vec_id" === 999997L).count() == 1
     }.get
-    assert(new java.io.File(uncommitted, "_SUCCESS").delete())
+    assert(new java.io.File(uncommitted, "_COMMITTED").delete())
     val query = emb.filter($"vec_id" === 0).select("embedding")
       .head().getSeq[Float](0).toArray
     val before = KMeansIndex.searchPersisted(spark, path, query, topK = 5, nProbe = 8)
@@ -277,6 +277,22 @@ class AnnSpec extends AnyFunSuite {
     val again = KMeansIndex.searchPersisted(spark, path, query, topK = 5, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).toSeq
     assert(again == before)
+  }
+
+  test("persist: a torn rebuild (no manifest) makes searchPersisted refuse") {
+    val idx = KMeansIndex.build(emb, k = 8)
+    val path = java.nio.file.Files.createTempDirectory("graft-ivf-torn").toString + "/idx"
+    KMeansIndex.persist(idx, path)
+    // a rebuild that died between its table writes leaves the tables
+    // of two generations and no manifest: the probe must refuse rather
+    // than score new cells against old centroids
+    assert(new java.io.File(path, "manifest.json").delete())
+    val query = emb.filter($"vec_id" === 0).select("embedding")
+      .head().getSeq[Float](0).toArray
+    val e = intercept[IllegalArgumentException] {
+      KMeansIndex.searchPersisted(spark, path, query, topK = 2, nProbe = 8)
+    }
+    assert(e.getMessage.contains("manifest"), e.getMessage)
   }
 
   test("SQL surface: whole search pipeline in pure SQL over a temp view") {

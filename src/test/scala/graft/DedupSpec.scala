@@ -143,31 +143,15 @@ class DedupSpec extends AnyFunSuite {
     assert(got.size == 4, "every incoming doc appears exactly once")
   }
 
-  test("incrementalFlagsBloomed: bit-identical flags to the unfiltered path") {
-    // the Bloom prefilter must be semantically invisible — no false
-    // negatives exist (no dup slips past), and false positives die in
-    // the exact joins downstream
-    val base = "the quick brown fox jumps over the lazy dog again and again today"
-    val history = Seq(
-      (1L, base, "s"),
-      (2L, "completely different content about database engines and joins", "s"))
-      .toDF("doc_id", "text", "source")
-    val incoming = Seq(
-      (10L, base, "s"),
-      (11L, base.replace("dog", "cat"), "s"),
-      (12L, "fresh unseen words nothing shared with either prior document", "s"),
-      (13L, base, "s"))
-      .toDF("doc_id", "text", "source")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), r.getBoolean(2), r.getBoolean(3))).toSeq
-    val blooms = Dedup.historyBlooms(history, expectedItems = 1000L)
-    assert(rows(Dedup.incrementalFlagsBloomed(incoming, history, 0.5, blooms))
-      == rows(Dedup.incrementalFlags(incoming, history, 0.5)))
-    // a tiny aggressive filter (fpp near max) still never loses a dup:
-    // false positives only add work, never change flags
-    val tight = Dedup.historyBlooms(history, expectedItems = 2L, fpp = 0.5)
-    assert(rows(Dedup.incrementalFlagsBloomed(incoming, history, 0.5, tight))
-      == rows(Dedup.incrementalFlags(incoming, history, 0.5)))
+  test("shingleArray emits distinct shingles, the jaccardUdf precondition") {
+    // the verify UDF counts |A∩B| by probing one side's hash set with
+    // the other side's elements and takes |A∪B| = |A| + |B| − |A∩B|, so
+    // a repeated shingle would be counted twice and inflate the score
+    val text = "a b c a b c a b c d"
+    val sh = Seq((1L, text)).toDF("doc_id", "text")
+      .select(Dedup.shingleArray(col("text"))).head().getSeq[String](0)
+    assert(sh.size == sh.distinct.size, s"repeated shingles: $sh")
+    assert(sh.toSet == Set("a b c", "b c a", "c a b", "b c d"))
   }
 
   test("persisted dedup index: parity, committed appends visible, uncommitted invisible") {
@@ -542,40 +526,21 @@ class DedupSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("manifest"))
   }
 
-  test("containmentGateIncrementalBloomed: verdicts bit-identical to the unbloomed gate") {
-    val quote = "alpha beta gamma delta epsilon"
+  test("containmentIndexCached: the memoized layout lives beside the dump path") {
+    // the probe layout follows the graft.containment.index.dump root,
+    // so a run that relocates the dump path relocates this layout too
     val history = Seq(
-      (1L, s"intro words here $quote closing words after"),
-      (2L, "totally unrelated content about rivers and stones ok"),
-      (4L, quote)).toDF("doc_id", "text")
-    // mostly-NOVEL batch — the prune's target shape: every shingle of
-    // 104/105 is absent from history and must die map-side without
-    // changing a single verdict
-    val incoming = Seq(
-      (100L, quote),
-      (103L, s"$quote and some trailing padding words here too"),
-      (104L, "entirely novel vocabulary one two three four five six"),
-      (105L, "more unseen words seven eight nine ten eleven twelve"))
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "totally unrelated content about rivers and stones ok"))
       .toDF("doc_id", "text")
-    val bloom = Dedup.containmentHistoryVocabBloom(history,
-      expectedItems = 100L)
-    for (mode <- Seq("both", "batch", "history")) {
-      val plain = Dedup.containmentGateIncremental(
-        incoming, history, 0.6, directions = mode)
-        .collect().map(_.toSeq).toSeq
-      val bloomed = Dedup.containmentGateIncrementalBloomed(
-        incoming, history, 0.6, bloom, directions = mode)
-        .collect().map(_.toSeq).toSeq
-      assert(bloomed == plain, s"$mode: bloomed $bloomed vs plain $plain")
-    }
-    // a Bloom built at a different shingle width contains essentially
-    // no gate-width shingle — the pairing must refuse, not flag the
-    // whole batch clean
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.containmentGateIncrementalBloomed(
-        incoming, history, 0.6, bloom, n = 4)
-    }
-    assert(ex.getMessage.contains("n=3") && ex.getMessage.contains("n=4"))
+    val path = Dedup.containmentIndexCached(history,
+      corpusKey = s"spec-${java.util.UUID.randomUUID()}")
+    assert(path.startsWith(Dedup.containmentIndexDumpPath + "_probe_"), path)
+    val incoming = Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    assert(Dedup.containmentGateIncrementalPersisted(incoming, path, 0.9)
+      .collect().map(_.toSeq).toSeq ==
+      Dedup.containmentGateIncremental(incoming, history, 0.9)
+        .collect().map(_.toSeq).toSeq)
   }
 
   test("appendContainmentIndex: probe over base+appends == from-text gate over full history; torn append invisible") {

@@ -103,6 +103,19 @@ class InvertedIndexSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq == before)
   }
 
+  test("build: a torn rebuild (no manifest) makes search refuse") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25torn").toString
+    InvertedIndex.build(docs, dir)
+    // a rebuild that died between its postings and stats writes leaves
+    // two generations and no manifest: search must refuse rather than
+    // score new postings against old corpus stats
+    assert(new java.io.File(dir, "manifest.json").delete())
+    val e = intercept[IllegalArgumentException] {
+      InvertedIndex.search(spark, Seq("query"), k = 5, dir = dir)
+    }
+    assert(e.getMessage.contains("manifest"), e.getMessage)
+  }
+
   test("df from the pruned read equals the corpus df") {
     val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
     InvertedIndex.build(docs, dir)
