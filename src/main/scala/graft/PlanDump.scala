@@ -92,11 +92,6 @@ object PlanDump {
     "mrl_truncation_recall" -> ("bounded query set crossed against the " +
       "full-dim and truncated scoring arms (recall evaluator)"),
     "phi_bands" -> "broadcast 1-row (min_norm, max_norm) span cross",
-    "vfdb_pipeline" -> ("the same broadcast 1-row (min_norm, max_norm) " +
-      "span cross as phi_bands, via autoClusterPhiBatch's withPhiBand — " +
-      "visible since round 15 because the banded frame is an evictable " +
-      "cache() instead of a lineage-severing localCheckpoint (the " +
-      "non-evictable-block OOM fix)"),
     "quality_buckets" -> "broadcast 1-row quartile-thresholds cross",
     "quality_percentiles" -> "broadcast 1-row n_total cross",
     "search_centroids_topk" -> "broadcast 1-row query-vector frame",

@@ -20,10 +20,19 @@ case class AuditRecord(action: String, timestamp: Timestamp,
   * State is two managed DataFrames (iglyphs, pglyphs) plus an append-only
   * audit log. DataFrames are immutable, so every mutation builds the new
   * plan and swaps the reference — serialized mutations exactly like the
-  * reference's single-threaded model. The reference's two inverted-list
-  * indexes (`vector_field.py:81-82`) have no materialized equivalent:
-  * they are predicate pushdown + (at scale) partitioning by
-  * outer_context_id.
+  * reference's single-threaded model. A write that puts a join or an
+  * aggregate into a table's plan (cluster formation, recompute, batch
+  * and JSONL inserts) materializes that table with an eager
+  * `localCheckpoint` before it returns, so later reads scan the result
+  * instead of re-running the work; cheap row-local writes (single adds,
+  * updates, deletes) stack on the plan until [[maybeCheckpoint]] cuts
+  * it. A write releases every temporary it cached once its tables are
+  * materialized; a superseded table checkpoint is left to Spark's
+  * ContextCleaner, since a caller may still hold the old frame.
+  *
+  * The reference's two inverted-list indexes (`vector_field.py:81-82`)
+  * have no materialized equivalent: they are predicate pushdown + (at
+  * scale) partitioning by outer_context_id.
   *
   * Deviations from the reference, documented per SURVEY.md §7.4:
   *  - membership hash is sha2-256 (JVM has no Blake2b built-in); the
@@ -245,7 +254,12 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
     pendingAudit.clear()
   }
 
-  /** Long mutation chains grow the logical plan; truncate lineage. */
+  /** Row-local writes (single adds, updates, deletes) stack cheap
+    * projections, filters and unions on the plan; every 16th write of
+    * any kind truncates that lineage. Writes that add a join or an
+    * aggregate have already materialized their tables when they get
+    * here, and still count toward the cadence.
+    */
   private def maybeCheckpoint(): Unit = {
     mutationsSinceCheckpoint += 1
     if (mutationsSinceCheckpoint >= 16) {
@@ -321,46 +335,50 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
     // frame, where an invalid string poisons every later action
     val stringMeta = rows.schema("meta").dataType ==
       org.apache.spark.sql.types.StringType
+    // cached for the validation job and the union; released once the
+    // store has materialized, or when the batch is rejected
     val df = rows.select(iglyphsDF.columns.map(col): _*).cache()
-    val badMeta =
-      if (stringMeta) $"meta".isNotNull && try_parse_json($"meta").isNull
-      else lit(false)
-    // all validation counts in one job: constraint violations, batch
-    // size, batch-internal dups, collisions with the existing store
-    val v = df
-      .join(iglyphsDF.select($"iglyph_id", lit(1).as("existing")), Seq("iglyph_id"), "left")
-      .withColumn("idh1", idHashCol1($"iglyph_id"))
-      .withColumn("idh2", idHashCol2($"iglyph_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        countDistinct($"iglyph_id").as("n_ids"),
-        // every constrained column checked isNull explicitly: a NULL
-        // comparison is NULL, which would otherwise fall through
-        // otherwise(0) and let the row pass as valid
-        sum(when(
-          $"embedding".isNull || size($"embedding") =!= dim ||
-            $"glyph_id".isNull || $"glyph_id" < 0 || $"glyph_id" > Validation.GlyphIdMax ||
-            $"outer_context_id".isNull ||
-            $"outer_context_id" < 0 || $"outer_context_id" > Validation.CtxMax ||
-            $"iglyph_id".isNull || badMeta, 1L).otherwise(0L)).as("bad"),
-        sum(when($"existing".isNotNull, 1L).otherwise(0L)).as("dups"),
-        // membership-hash lane deltas fused into the same job, applied
-        // only if the batch commits
-        coalesce(expr("bit_xor(idh1)"), lit(0L)).as("delta1"),
-        sumLane($"idh2").as("delta2"))
-      .head()
-    val n = v.getLong(0)
-    if (n == 0L) { df.unpersist(); return 0L } // sums are NULL on an empty batch
-    require(v.getLong(2) == 0L, s"${v.getLong(2)} rows violate schema constraints")
-    require(v.getLong(1) == n, "duplicate iglyph_id within batch")
-    require(v.getLong(3) == 0L, s"${v.getLong(3)} iglyph ids already exist")
-    iglyphsDF = iglyphsDF
-      .unionByName(if (stringMeta) withVariantMeta(df) else df)
-      .localCheckpoint(true)
-    iXor ^= v.getLong(4)
-    iSum += wrapped(v.getDecimal(5))
-    log("ADD_IGLYPH", "count" -> n.toString)
-    n
+    try {
+      val badMeta =
+        if (stringMeta) $"meta".isNotNull && try_parse_json($"meta").isNull
+        else lit(false)
+      // all validation counts in one job: constraint violations, batch
+      // size, batch-internal dups, collisions with the existing store
+      val v = df
+        .join(iglyphsDF.select($"iglyph_id", lit(1).as("existing")), Seq("iglyph_id"), "left")
+        .withColumn("idh1", idHashCol1($"iglyph_id"))
+        .withColumn("idh2", idHashCol2($"iglyph_id"))
+        .agg(
+          count(lit(1)).as("n"),
+          countDistinct($"iglyph_id").as("n_ids"),
+          // every constrained column checked isNull explicitly: a NULL
+          // comparison is NULL, which would otherwise fall through
+          // otherwise(0) and let the row pass as valid
+          sum(when(
+            $"embedding".isNull || size($"embedding") =!= dim ||
+              $"glyph_id".isNull || $"glyph_id" < 0 || $"glyph_id" > Validation.GlyphIdMax ||
+              $"outer_context_id".isNull ||
+              $"outer_context_id" < 0 || $"outer_context_id" > Validation.CtxMax ||
+              $"iglyph_id".isNull || badMeta, 1L).otherwise(0L)).as("bad"),
+          sum(when($"existing".isNotNull, 1L).otherwise(0L)).as("dups"),
+          // membership-hash lane deltas fused into the same job, applied
+          // only if the batch commits
+          coalesce(expr("bit_xor(idh1)"), lit(0L)).as("delta1"),
+          sumLane($"idh2").as("delta2"))
+        .head()
+      val n = v.getLong(0)
+      if (n == 0L) return 0L // sums are NULL on an empty batch
+      require(v.getLong(2) == 0L, s"${v.getLong(2)} rows violate schema constraints")
+      require(v.getLong(1) == n, "duplicate iglyph_id within batch")
+      require(v.getLong(3) == 0L, s"${v.getLong(3)} iglyph ids already exist")
+      iglyphsDF = iglyphsDF
+        .unionByName(if (stringMeta) withVariantMeta(df) else df)
+        .localCheckpoint(true)
+      iXor ^= v.getLong(4)
+      iSum += wrapped(v.getDecimal(5))
+      log("ADD_IGLYPH", "count" -> n.toString)
+      n
+    } finally df.unpersist()
   }
 
   /** Single insert convenience; generates a UUID when id not supplied. */
@@ -419,50 +437,41 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
 
   /** DataFrame-native cluster formation — the scale path: membership
     * stays distributed end-to-end. The driver sees only bounded values
-    * (the dim-length centroid, the member count, the inertia scalar);
-    * the member-id array is aggregated executor-side into the stored
-    * row, and proto_id back-pointers are written via a join against the
-    * member set — never an `isin` literal tree, never a collected array.
-    * Two-pass shape per the reference (`clustering.py:25-34,66-68`):
-    * one vector-mean aggregate, then one squared-distance pass against
-    * the broadcast centroid literal.
+    * (the dim-length centroid and the member count); the member-id
+    * array and the inertia are aggregated executor-side into the stored
+    * row. Both tables are materialized before the call returns.
     */
   def formClusterOf(memberIdsDF: DataFrame, anchorGlyphId: Int, ctx: Int,
       clusterTag: String = "", meta: String = "{}"): String = {
     Validation.requireGlyphId(anchorGlyphId)
     Validation.requireCtx(ctx)
     requireJsonMeta(meta)
-    // distinct: a duplicated input id must not duplicate member rows
-    val memDf = memberIdsDF.toDF("iglyph_id").distinct()
-    val members = iglyphsDF.join(memDf, Seq("iglyph_id"), "left_semi")
-    val agg1 = members.agg(
-      Clustering.vecMean($"embedding").as("centroid"),
-      count(lit(1)).as("n")).head()
-    val n = agg1.getLong(1)
-    if (n == 0L) throw new IllegalArgumentException("no valid member ids")
-    val centroid = agg1.getSeq[Double](0).map(_.toFloat).toArray
-    val inertia = members
-      .agg(sum(VectorOps.squaredDistance($"embedding", typedLit(centroid.toSeq))))
-      .head().getDouble(0)
     val pgId = UUID.randomUUID().toString
+    // back-pointers first (vector_field.py:256-257): an IN-subquery is
+    // an existence join against the member ids — never an `isin`
+    // literal tree — so a repeated id matches its row once and an
+    // unknown id matches none (the reference's silent drop). The
+    // checkpointed table then holds the member set as the rows that
+    // point at the new pglyph; it replaces the store only on success.
+    val tagged = iglyphsDF
+      .withColumn("proto_id",
+        when($"iglyph_id".isin(memberIdsDF.toDF("iglyph_id")), lit(pgId))
+          .otherwise($"proto_id"))
+      .localCheckpoint(true)
+    val (centroid, n, row) =
+      clusterRow(tagged.filter($"proto_id" === pgId))(
+        throw new IllegalArgumentException("no valid member ids"))
     val now = Timestamp.from(Instant.now())
-    // the stored row is built distributed — the member array never
-    // touches the driver
-    val pgRow = members
-      .agg(sort_array(collect_list($"iglyph_id")).as("member_ids"))
+    val pgRow = row
       .select(lit(pgId).as("pglyph_id"), lit(anchorGlyphId).as("glyph_id"),
         lit(ctx).as("outer_context_id"),
         typedLit(centroid.toSeq).as("centroid"), $"member_ids",
-        lit(clusterTag).as("cluster_tag"), lit(inertia).as("inertia"),
+        lit(clusterTag).as("cluster_tag"), $"inertia",
         parse_json(lit(meta)).as("meta"), lit("1.0.0").as("version"),
         lit(now).as("timestamp"))
     pglyphsDF = pglyphsDF.unionByName(pgRow.select(pglyphsDF.columns.map(col): _*))
-    // back-pointers (vector_field.py:256-257): unknown ids simply match
-    // no store row, reproducing the reference's silent drop
-    iglyphsDF = iglyphsDF
-      .join(memDf.withColumn("matched", lit(1)), Seq("iglyph_id"), "left")
-      .withColumn("proto_id", when($"matched" === 1, lit(pgId)).otherwise($"proto_id"))
-      .drop("matched")
+      .localCheckpoint(true)
+    iglyphsDF = tagged
     val (ph1, ph2) = idHashes(pgId); pXor ^= ph1; pSum += ph2
     maybeCheckpoint()
     log("FORM_CLUSTER", "pglyph_id" -> pgId, "member_count" -> n.toString)
@@ -471,123 +480,142 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
 
   /** Re-resolve members (dropping deleted), recompute centroid+inertia —
     * `vector_field.py:271-285`. Membership is resolved distributed (the
-    * stored list exploded and semi-joined); the rebuilt row carries the
-    * surviving member array executor-side.
+    * stored list exploded and semi-joined, cached for the two passes);
+    * the rebuilt row carries the surviving member array executor-side
+    * and is materialized before the call returns.
     */
   def recomputePGlyph(id: String): Unit = {
     val target = pglyphsDF.filter($"pglyph_id" === id)
-    if (target.isEmpty) throw new NoSuchElementException(s"PGlyph not found: $id")
-    val memDf = target.select(explode($"member_ids").as("iglyph_id"))
-    val members = iglyphsDF.join(memDf, Seq("iglyph_id"), "left_semi")
-    val agg1 = members.agg(
-      Clustering.vecMean($"embedding").as("centroid"),
-      count(lit(1)).as("n")).head()
-    if (agg1.getLong(1) == 0L)
-      throw new IllegalStateException(s"PGlyph $id has no remaining members")
-    val centroid = agg1.getSeq[Double](0).map(_.toFloat).toArray
-    val inertia = members
-      .agg(sum(VectorOps.squaredDistance($"embedding", typedLit(centroid.toSeq))))
-      .head().getDouble(0)
-    val now = Timestamp.from(Instant.now())
-    // rebuild the row distributed: surviving member list aggregated
-    // executor-side; unchanged fields carried over via a 1×1 cross join
-    val keep = target.select($"pglyph_id", $"glyph_id", $"outer_context_id",
-      $"cluster_tag", $"meta", $"version")
-    val newRow = members.agg(sort_array(collect_list($"iglyph_id")).as("member_ids"))
-      .crossJoin(keep)
-      .select($"pglyph_id", $"glyph_id", $"outer_context_id",
-        typedLit(centroid.toSeq).as("centroid"), $"member_ids",
-        $"cluster_tag", lit(inertia).as("inertia"), $"meta", $"version",
-        lit(now).as("timestamp"))
-    pglyphsDF = pglyphsDF.filter($"pglyph_id" =!= id)
-      .unionByName(newRow.select(pglyphsDF.columns.map(col): _*))
-    maybeCheckpoint()
-    // `vector_field.py:284` logs the surviving member count
-    log("RECOMPUTE_PGLYPH", "pglyph_id" -> id,
-      "members" -> agg1.getLong(1).toString)
+    val members = iglyphsDF
+      .join(target.select(explode($"member_ids").as("iglyph_id")), Seq("iglyph_id"), "left_semi")
+      .select($"iglyph_id", $"embedding").cache()
+    try {
+      // an unknown id and a pglyph whose members were all deleted both
+      // resolve no members; only that failure path pays the job that
+      // tells them apart
+      val (centroid, n, row) = clusterRow(members)(
+        if (target.isEmpty) throw new NoSuchElementException(s"PGlyph not found: $id")
+        else throw new IllegalStateException(s"PGlyph $id has no remaining members"))
+      val now = Timestamp.from(Instant.now())
+      // unchanged fields carried over via a 1×1 cross join
+      val keep = target.select($"pglyph_id", $"glyph_id", $"outer_context_id",
+        $"cluster_tag", $"meta", $"version")
+      val newRow = row.crossJoin(keep)
+        .select($"pglyph_id", $"glyph_id", $"outer_context_id",
+          typedLit(centroid.toSeq).as("centroid"), $"member_ids",
+          $"cluster_tag", $"inertia", $"meta", $"version",
+          lit(now).as("timestamp"))
+      pglyphsDF = pglyphsDF.filter($"pglyph_id" =!= id)
+        .unionByName(newRow.select(pglyphsDF.columns.map(col): _*))
+        .localCheckpoint(true)
+      maybeCheckpoint()
+      // `vector_field.py:284` logs the surviving member count
+      log("RECOMPUTE_PGLYPH", "pglyph_id" -> id, "members" -> n.toString)
+    } finally members.unpersist()
+  }
+
+  /** The two passes over a cluster's member rows, as in the reference
+    * (`clustering.py:25-34,66-68`): the first aggregate brings only the
+    * centroid and the member count to the driver; the second, against
+    * the centroid literal, is the stored row's sorted member list and
+    * inertia (`member_ids`, `inertia`), left for the caller's write to
+    * materialize. `members` must be cheap to scan twice.
+    */
+  private def clusterRow(members: DataFrame)(onEmpty: => Nothing)
+      : (Array[Float], Long, DataFrame) = {
+    val agg = members.agg(Clustering.vecMean($"embedding"), count(lit(1))).head()
+    val n = agg.getLong(1)
+    if (n == 0L) onEmpty
+    val centroid = agg.getSeq[Double](0).map(_.toFloat).toArray
+    (centroid, n, members.agg(
+      sort_array(collect_list($"iglyph_id")).as("member_ids"),
+      sum(VectorOps.squaredDistance($"embedding", typedLit(centroid.toSeq))).as("inertia")))
   }
 
   /** φ-banded auto-clustering of one context — `vector_field.py:351-390`.
     * Returns the new pglyph ids (one per non-empty band). Reference
     * parity: one formCluster (and one audit record) per band. The only
     * driver-side collect is the list of non-empty bands (≤ levels rows);
-    * band membership stays distributed, checkpointed once so the
-    * per-band passes don't recompute the norm/bounds scan.
+    * band membership stays distributed, cached once so the per-band
+    * passes don't recompute the norm/bounds scan, and released after the
+    * last band's write.
     */
   def autoClusterPhi(ctx: Int, anchorGlyphId: Int, levels: Int = 3): Seq[String] = {
     Validation.requireCtx(ctx)
-    val inCtx = iglyphsDF.filter($"outer_context_id" === ctx)
-    if (inCtx.isEmpty) return Seq.empty
-    val banded = Clustering.withPhiBand(inCtx, levels)
-      .select($"iglyph_id", $"band").localCheckpoint(true)
-    val present = banded.select($"band").distinct()
-      .orderBy($"band").as[Int].collect()
-    present.toSeq.map { b =>
-      formClusterOf(banded.filter($"band" === b).select($"iglyph_id"),
-        anchorGlyphId, ctx, s"phi_band_$b")
-    }
+    val banded = Clustering.withPhiBand(iglyphsDF.filter($"outer_context_id" === ctx), levels)
+      .select($"iglyph_id", $"band").cache()
+    try {
+      val present = banded.select($"band").distinct()
+        .orderBy($"band").as[Int].collect()
+      present.toSeq.map { b =>
+        formClusterOf(banded.filter($"band" === b).select($"iglyph_id"),
+          anchorGlyphId, ctx, s"phi_band_$b")
+      }
+    } finally banded.unpersist()
   }
 
   /** Batched φ-auto-clustering: all band clusters formed in one
     * aggregation pass with a single audit record — the job-count-lean
     * variant of autoClusterPhi for high-core/driver-latency-sensitive
     * runs (reference parity loop above audits one record per band).
-    * The driver sees only bounded values (≤ levels rows of centroid /
-    * inertia / count); member arrays are aggregated executor-side and
-    * back-pointers written via a distributed join keyed on iglyph_id.
+    * The driver sees only bounded values (≤ levels dim-length
+    * centroids); member arrays and inertias are aggregated executor-side
+    * and back-pointers written via a distributed join keyed on
+    * iglyph_id. Both tables are materialized before the call returns.
     */
   def autoClusterPhiBatch(ctx: Int, anchorGlyphId: Int, levels: Int = 3): Seq[String] = {
     Validation.requireCtx(ctx)
     Validation.requireGlyphId(anchorGlyphId)
-    val inCtx = iglyphsDF.filter($"outer_context_id" === ctx)
-    if (inCtx.isEmpty) return Seq.empty
     // cache(), NOT localCheckpoint: this frame carries the ctx slice's
-    // EMBEDDINGS (withInertia reads them twice), and checkpoint blocks
+    // EMBEDDINGS (both passes below read them), and checkpoint blocks
     // are non-evictable — at 100× a ctx slice is ~10% of the corpus
     // pinned in executor storage, the round-12 OOM mechanism
     // (Dedup.containmentPairs cache-policy note). A cache is evictable
-    // and recomputable; the narrow (iglyph_id, band) checkpoint in
-    // autoClusterPhi stays as-is because it drops the embeddings first.
-    val banded = Clustering.withPhiBand(inCtx, levels).cache()
-    // bounded driver collect: ≤ levels rows, dim-length centroids —
-    // withMembers=false keeps the member-list aggregate out of the
-    // cached centroid table (pruning can't reach through the cache)
-    val stats = operators.Clustering.withInertia(banded, $"band", $"iglyph_id",
-        withMembers = false)
-      .select($"cluster_key", $"centroid", $"inertia")
-      .collect()
-    if (stats.isEmpty) return Seq.empty
-    val now = Timestamp.from(Instant.now())
-    val pgInfo = stats.sortBy(_.getAs[Int]("cluster_key")).map { r =>
-      val band = r.getAs[Int]("cluster_key")
-      (band, UUID.randomUUID().toString, r.getSeq[Double](1).map(_.toFloat),
-        s"phi_band_$band", r.getAs[Double]("inertia"))
-    }.toSeq
-    val info = pgInfo.toDF("band", "pglyph_id", "centroid", "cluster_tag", "inertia")
-    // stored rows built distributed: member arrays aggregated
-    // executor-side, joined to the (≤ levels)-row info table
-    val pgRows = banded.groupBy($"band")
-      .agg(sort_array(collect_list($"iglyph_id")).as("member_ids"))
-      .join(broadcast(info), "band")
-      .select($"pglyph_id", lit(anchorGlyphId).as("glyph_id"),
-        lit(ctx).as("outer_context_id"), $"centroid", $"member_ids",
-        $"cluster_tag", $"inertia", parse_json(lit("{}")).as("meta"),
-        lit("1.0.0").as("version"), lit(now).as("timestamp"))
-    pglyphsDF = pglyphsDF.unionByName(pgRows.select(pglyphsDF.columns.map(col): _*))
-    // back-pointers: (iglyph_id → pglyph_id) stays a distributed join —
-    // a shuffle join at scale, never a collected mapping
-    val mapping = banded.select($"iglyph_id", $"band")
-      .join(broadcast(info.select($"band", $"pglyph_id".as("new_proto"))), "band")
-      .select($"iglyph_id", $"new_proto")
-    iglyphsDF = iglyphsDF.join(mapping, Seq("iglyph_id"), "left")
-      .withColumn("proto_id", coalesce($"new_proto", $"proto_id"))
-      .drop("new_proto")
-    pgInfo.foreach { case (_, pgId, _, _, _) =>
-      val (h1, h2) = idHashes(pgId); pXor ^= h1; pSum += h2
-    }
-    maybeCheckpoint()
-    log("AUTO_CLUSTER_PHI", "bands" -> pgInfo.length.toString, "ctx" -> ctx.toString)
-    pgInfo.map(_._2)
+    // and recomputable, and released below.
+    val banded = Clustering.withPhiBand(iglyphsDF.filter($"outer_context_id" === ctx), levels)
+      .select($"iglyph_id", $"embedding", $"band").cache()
+    try {
+      // first pass, a bounded driver collect: ≤ levels rows of
+      // dim-length (rounded) centroids
+      val cents = Clustering.centroids(banded, $"band", $"iglyph_id", withMembers = false)
+        .select($"cluster_key", $"centroid").collect()
+      if (cents.isEmpty) return Seq.empty
+      val now = Timestamp.from(Instant.now())
+      val pgInfo = cents.sortBy(_.getInt(0)).map { r =>
+        val band = r.getInt(0)
+        (band, UUID.randomUUID().toString, r.getSeq[Double](1), s"phi_band_$band")
+      }.toSeq
+      val info = pgInfo.toDF("band", "pglyph_id", "centroid", "cluster_tag")
+      // second pass: each band's sorted member list and inertia against
+      // its rounded centroid, aggregated executor-side into the stored
+      // rows, which the checkpoint materializes
+      val pgRows = banded.join(broadcast(info.select($"band", $"centroid")), "band")
+        .groupBy($"band")
+        .agg(sort_array(collect_list($"iglyph_id")).as("member_ids"),
+          round(sum(VectorOps.squaredDistance($"embedding", $"centroid")), 6).as("inertia"))
+        .join(broadcast(info), "band")
+        .select($"pglyph_id", lit(anchorGlyphId).as("glyph_id"),
+          lit(ctx).as("outer_context_id"), $"centroid".cast("array<float>").as("centroid"),
+          $"member_ids", $"cluster_tag", $"inertia", parse_json(lit("{}")).as("meta"),
+          lit("1.0.0").as("version"), lit(now).as("timestamp"))
+      pglyphsDF = pglyphsDF.unionByName(pgRows.select(pglyphsDF.columns.map(col): _*))
+        .localCheckpoint(true)
+      // back-pointers: (iglyph_id → pglyph_id) stays a distributed join —
+      // a shuffle join at scale, never a collected mapping
+      val mapping = banded.select($"iglyph_id", $"band")
+        .join(broadcast(info.select($"band", $"pglyph_id".as("new_proto"))), "band")
+        .select($"iglyph_id", $"new_proto")
+      iglyphsDF = iglyphsDF.join(mapping, Seq("iglyph_id"), "left")
+        .withColumn("proto_id", coalesce($"new_proto", $"proto_id"))
+        .drop("new_proto")
+        .localCheckpoint(true)
+      pgInfo.foreach { case (_, pgId, _, _) =>
+        val (h1, h2) = idHashes(pgId); pXor ^= h1; pSum += h2
+      }
+      maybeCheckpoint()
+      log("AUTO_CLUSTER_PHI", "bands" -> pgInfo.length.toString, "ctx" -> ctx.toString)
+      pgInfo.map(_._2)
+    } finally banded.unpersist()
   }
 
   // ------------------------------------------------------------- search
@@ -638,33 +666,37 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
       .filter(size($"embedding") === dim)
       .filter($"iglyph_id".isNotNull)
       .dropDuplicates("iglyph_id")
+    // cached for the count job and the write; released once the store
+    // has materialized
     val incoming = parsed.cache()
-    // one job: import count + membership delta (XOR fold over the ids
-    // NOT already present — overwritten ids don't change membership)
-    val m = incoming
-      .join(iglyphsDF.select($"iglyph_id", lit(1).as("ex")), Seq("iglyph_id"), "left")
-      .withColumn("idh1", idHashCol1($"iglyph_id"))
-      .withColumn("idh2", idHashCol2($"iglyph_id"))
-      .agg(count(lit(1)).as("n_in"),
-        sum(when($"ex".isNull, 1L).otherwise(0L)).as("n_new"),
-        coalesce(expr("bit_xor(CASE WHEN ex IS NULL THEN idh1 END)"), lit(0L)).as("delta1"),
-        sumLane(expr("CASE WHEN ex IS NULL THEN idh2 END")).as("delta2"))
-      .head()
-    val imported =
-      if (overwrite) {
-        val replaced = iglyphsDF.join(incoming.select("iglyph_id"), Seq("iglyph_id"), "left_anti")
-        iglyphsDF = replaced.unionByName(incoming)
-        m.getLong(0) // count(*) is never NULL, no empty-batch guard needed
-      } else {
-        val fresh = incoming.join(iglyphsDF.select("iglyph_id"), Seq("iglyph_id"), "left_anti")
-        iglyphsDF = iglyphsDF.unionByName(fresh)
-        if (m.getLong(0) == 0L) 0L else m.getLong(1) // the SUM is NULL on empty input
-      }
-    iXor ^= m.getLong(2)
-    iSum += wrapped(m.getDecimal(3))
-    iglyphsDF = iglyphsDF.localCheckpoint(true)
-    log("IMPORT_JSONL", "count" -> imported.toString, "overwrite" -> overwrite.toString)
-    imported
+    try {
+      // one job: import count + membership delta (XOR fold over the ids
+      // NOT already present — overwritten ids don't change membership)
+      val m = incoming
+        .join(iglyphsDF.select($"iglyph_id", lit(1).as("ex")), Seq("iglyph_id"), "left")
+        .withColumn("idh1", idHashCol1($"iglyph_id"))
+        .withColumn("idh2", idHashCol2($"iglyph_id"))
+        .agg(count(lit(1)).as("n_in"),
+          sum(when($"ex".isNull, 1L).otherwise(0L)).as("n_new"),
+          coalesce(expr("bit_xor(CASE WHEN ex IS NULL THEN idh1 END)"), lit(0L)).as("delta1"),
+          sumLane(expr("CASE WHEN ex IS NULL THEN idh2 END")).as("delta2"))
+        .head()
+      val imported =
+        if (overwrite) {
+          val replaced = iglyphsDF.join(incoming.select("iglyph_id"), Seq("iglyph_id"), "left_anti")
+          iglyphsDF = replaced.unionByName(incoming)
+          m.getLong(0) // count(*) is never NULL, no empty-batch guard needed
+        } else {
+          val fresh = incoming.join(iglyphsDF.select("iglyph_id"), Seq("iglyph_id"), "left_anti")
+          iglyphsDF = iglyphsDF.unionByName(fresh)
+          if (m.getLong(0) == 0L) 0L else m.getLong(1) // the SUM is NULL on empty input
+        }
+      iXor ^= m.getLong(2)
+      iSum += wrapped(m.getDecimal(3))
+      iglyphsDF = iglyphsDF.localCheckpoint(true)
+      log("IMPORT_JSONL", "count" -> imported.toString, "overwrite" -> overwrite.toString)
+      imported
+    } finally incoming.unpersist()
   }
 
   /** Full-state checkpoint — `vector_field.py:448-461`: parquet per table

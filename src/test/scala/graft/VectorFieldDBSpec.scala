@@ -97,6 +97,36 @@ class VectorFieldDBSpec extends AnyFunSuite {
     intercept[NoSuchElementException](db.recomputePGlyph("nope"))
   }
 
+  test("recomputePGlyph with every member deleted fails and changes nothing") {
+    val db = freshDb()
+    val a = db.addIGlyph(1, 1, vec(1f))
+    val b = db.addIGlyph(1, 1, vec(3f))
+    val pg = db.formCluster(Seq(a, b), 1, 1)
+    db.deleteIGlyph(a)
+    db.deleteIGlyph(b)
+    val before = db.getPGlyph(pg).get
+    val hash = db.currentHash
+    intercept[IllegalStateException](db.recomputePGlyph(pg))
+    val after = db.getPGlyph(pg).get
+    assert(after.centroid.toSeq == before.centroid.toSeq &&
+      after.inertia == before.inertia && after.member_ids.isEmpty &&
+      after.timestamp == before.timestamp)
+    assert(db.pglyphs.count() == 1 && db.currentHash == hash)
+  }
+
+  test("formCluster: a repeated id is one member with one back-pointer") {
+    val db = freshDb()
+    val a = db.addIGlyph(1, 1, vec(1f))
+    val b = db.addIGlyph(1, 1, vec(3f))
+    val pg = db.formCluster(Seq(a, a, b, a), 1, 1)
+    val p = db.getPGlyph(pg).get
+    assert(p.member_ids.sorted.toSeq == Seq(a, b).sorted)
+    assert(p.centroid.toSeq == vec(2f).toSeq)
+    import org.apache.spark.sql.functions.{col => c}
+    assert(db.iglyphs.count() == 2)
+    assert(db.iglyphs.filter(c("proto_id") === pg).count() == 2)
+  }
+
   test("search: exact k results, descending, correct winner") {
     val db = freshDb()
     for (i <- 1 to 9) db.addIGlyph(i, i % 10, vec(i * 0.15f + 0.05f), label = s"g$i")
