@@ -1,15 +1,47 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Regenerates PLANS.md — formatted physical plans for flagship
-  * queries (no arguments). With arguments,
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestBus
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+/** Regenerates PLANS.md — the physical plans of flagship queries (no
+  * arguments). With arguments,
   * `PlanDump <suffix> <query[,query...]> [outDir]` instead writes each
-  * named query's `.explain("formatted")` plan to
+  * named query's `.explain("formatted")` plans to
   * `<outDir>/<query>_<suffix>.txt` (default outDir `plans/r15`) — the
   * before/after plan evidence of an optimization change; env
   * SPARK_GRAFT_SF_DIR (required) and SPARK_GRAFT_CPUS (default: the
-  * machine's cores) pick the data and the local core count.
+  * machine's cores) pick the data and the local core count. Both modes
+  * show every plan a query runs while it is built ([[capture]]).
   */
 object PlanDump {
+  /** Every plan a frame's build runs: the executed plan of each SQL
+    * execution started while `build` runs (an eager operator's
+    * `localCheckpoint`, a pin's `count`, a bounded `collect`, a layout
+    * write), labelled with its action, then the built frame's own plan
+    * labelled "result". An eager or collecting operator's distributed
+    * work is in the first group, a lazy operator's in the last.
+    */
+  def capture(spark: SparkSession)(build: => DataFrame): Seq[(String, QueryExecution)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(action -> qe)
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val df = build
+      TestBus.drain(spark.sparkContext)
+      seen.asScala.toSeq :+ ("result" -> df.queryExecution)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** True when a plan holds a nested-loop join. */
+  def nestedLoop(plan: String): Boolean =
+    plan.contains("CartesianProduct") || plan.contains("BroadcastNestedLoopJoin")
+
   /** Nested-loop tripwire allowlist (round-9 verdict #7), shared by
     * the PLANS.md dump and the full-board PlanAuditSpec: a plan
     * containing CartesianProduct or BroadcastNestedLoopJoin FAILS both
@@ -100,7 +132,13 @@ object PlanDump {
     "tfidf_top_terms" -> "broadcast 1-row n_docs frame into the idf projection",
     "triplet_mining" -> ("bounded query-set × corpus scoring (hard " +
       "positive/negative mining over the anchor set, like hard_negatives)"),
-    "vocab_coverage" -> "broadcast 1-row token-total cross onto the top-K frame")
+    "vocab_coverage" -> "broadcast 1-row token-total cross onto the top-K frame",
+    // seen once the audit read the plans a query runs while it is built
+    // (PlanDump.capture): both crosses sit in a checkpointed pass
+    "bm25_mrr" -> ("broadcast 1-row corpus stats (N, avgdl) in the " +
+      "checkpointed per-query ranking pass"),
+    "vfdb_pipeline" -> ("broadcast 1-row (min_norm, max_norm) span cross " +
+      "of the φ-banding (the phi_bands cross) inside autoClusterPhiBatch"))
   private def snapshot(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanDump <suffix> <q1,q2,...> [outDir]")
     val suffix = args(0)
@@ -119,8 +157,9 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
-      val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val plan = capture(spark)(SparkEntry.queries(name)(spark, sfDir))
+        .map { case (action, qe) => s"== $action ==\n${qe.explainString(FormattedMode)}" }
+        .mkString("\n")
       java.nio.file.Files.write(
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
         plan.getBytes("UTF-8"))
@@ -212,7 +251,7 @@ object PlanDump {
       "scd2_lookup" -> "SCD2 dimension lookup: the as-of union + ordered-window carry — ONE exchange on the key shared by the interleave and the carry window, no per-fact range join, no interval explode; the dim build's two window frames ride their own single exchange; validity (half-open [from, to), gap -> NULL) is a codegen projection over the carried struct.",
       "char_entropy" -> "Character entropy: explode to (doc, char) then two-level aggregation with map-side partial combine — both shuffles key on doc-bearing tuples, so skew is bounded by document length; the -p*log2(p) terms fold as 9-dp decimals (order-free) and the totals join back on doc_id as a plain equi-join.",
       "l_diversity" -> "l-diversity release gate: level 1 dedups (class, sensitive) with partial aggregation below its exchange — the only corpus-sized pass; level 2 counts per class over the already-bounded class frame; the l histogram is a tiny final aggregate. No window anywhere, no distinct-in-window.",
-      "heavy_hitters" -> "Exact heavy hitters, pass 1 (the corpus-sized pass; shown via HeavyHitters.sketchPass): the Misra-Gries UDAF plans as ObjectHashAggregate with a PARTIAL side below a single 1-row exchange — per-task aggregation state is the fixed capacity-entry summary, so state and shuffle are O(capacity), never one row per distinct word; pass 2 recounts only the bounded candidate set (isin filter pushed to the scan).",
+      "heavy_hitters" -> "Exact heavy hitters, pass 1 (the corpus-sized pass, the first captured collect): the Misra-Gries UDAF plans as ObjectHashAggregate with a PARTIAL side below a single 1-row exchange — per-task aggregation state is the fixed capacity-entry summary, so state and shuffle are O(capacity), never one row per distinct word; pass 2 recounts only the bounded candidate set (isin filter pushed to the scan).",
       "cms_estimate" -> "Count-Min estimates: the corpus is touched ONCE — the depth-way posexplode feeds a (d, bucket) aggregate whose map-side partial combine collapses each task to at most depth*width counter rows before the exchange (state bounded by the sketch, never the vocabulary); the terms-by-depth probe side joins the bounded counter table as a BroadcastHashJoin and the min-over-depth fold runs on |terms| rows.",
       "join_size_estimate" -> "CMS inner-product join-size estimate: each input is touched exactly once to build its bounded (d, bucket) counter table (map-side combine caps task output at depth*width rows); the inner product is an equi-join of two <= depth*width frames — never of the inputs — and the per-d decimal fold plus min-over-d reduce to one row. The join whose size is being predicted appears NOWHERE in the plan; that is the point.",
       "bootstrap_ci" -> "Poisson bootstrap: ALL B replicates from ONE corpus pass — the per-row explode fans to B (rep, w*x, w) terms whose map-side partial combine collapses each task to <= B rows before the single exchange on rep; no resampling join or shuffle of the corpus exists anywhere; the percentile CI runs over the B-row replicate-means frame. The md5 draw + CDF when-chain is pure codegen inside the pre-aggregation projection.",
@@ -234,7 +273,7 @@ object PlanDump {
       "cross_corpus_pairs" -> "Cross-corpus contamination: banding runs per SIDE and the candidate join is cross-side band-bucket equality only (equi-join, no within-side pairs, no BNLJ); verification joins each side's own shingle arrays; at scale the benchmark band index is the broadcast side.",
       "profile_drift" -> "Profile drift: ONE multi-aggregate scan per side (the Expand multi-count-distinct plan — no per-column rescans), the per-column unpivot of each 1-row result, and a full-outer join of two |columns|-row frames; nothing after the two scans is corpus-sized.",
       "join_advisor" -> "Join-strategy advisor as ONE lazy program (round-9 verdict #4): left is scanned three times (MG sketch partial below a 1-row exchange, candidate recount behind a broadcast of the ≤capacity exploded candidate keys, CMS counters), right once; both side counts ride the counter tables (no separate count scans); the counter tables meet in a full-outer equi-join on (d, bucket); everything above is 1-row global-aggregate crosses — the advised join appears NOWHERE, and .head() is the only action.",
-      "source_jaccard_kmv" -> "Per-group sketch Jaccard, corpus pass (shown via Kmv.groupSketches — the contract query's readout runs on the collected ≤ maxGroups × k longs): ONE groupBy(group) BottomK aggregation, ObjectHashAggregate with a PARTIAL side below the group exchange (per-task state k longs per group), and the driver transfer is plan-capped by CollectLimit/GlobalLimit at maxGroups + 1 rows — the round-10 guard-ordering fix made the cap bind BEFORE the collect.",
+      "source_jaccard_kmv" -> "Per-group sketch Jaccard, corpus pass (Kmv.groupSketches, the captured collect — the contract query's readout runs on the collected ≤ maxGroups × k longs): ONE groupBy(group) BottomK aggregation, ObjectHashAggregate with a PARTIAL side below the group exchange (per-task state k longs per group), and the driver transfer is plan-capped by CollectLimit/GlobalLimit at maxGroups + 1 rows — the round-10 guard-ordering fix made the cap bind BEFORE the collect.",
       "dow_adjusted_anomaly" -> "Day-of-week-adjusted anomaly: the event stream collapses to the bounded day domain FIRST (one map-side-combinable (day) count); the trailing-baseline windows are PARTITIONED by dow — seven bounded sub-series, never a global sort — and the moment folds are order-free decimals; nothing after the day collapse is corpus-sized.",
       "pipeline_decontaminate" -> "Composed decontamination release: the cross_corpus_pairs chain proposes + verifies pairs (cross-side band equi-join, no BNLJ); the quarantine set is a tiny distinct projection of the pair table consumed by ONE left-anti equi-join on doc_id; the snapshotDiff audit reduces both sides to digest rows before its single full-outer join — text crosses an exchange only inside the shingle pass.",
       "eval_contamination" -> "Eval-side contamination fraction: the eval vocabulary BROADCASTS into a left-semi join that prunes train shingles MAP-SIDE (BroadcastHashJoin LeftSemi — the corpus-sized pass has no exchange of its own); the distinct and both per-doc counts run on benchmark-bounded frames only.",
@@ -262,81 +301,26 @@ object PlanDump {
     sb.append("commentary states what each plan must show for the 100 TB design\n")
     sb.append("to hold; regenerate after planner-affecting changes. The dump\n")
     sb.append("FAILS on any CartesianProduct/BroadcastNestedLoopJoin outside\n")
-    sb.append("the named allowlist of bounded 1-row/domain crosses.\n")
+    sb.append("the named allowlist of bounded 1-row/domain crosses. Each\n")
+    sb.append("section shows every plan the query runs while it is built,\n")
+    sb.append("labelled with its action, then the returned frame's plan\n")
+    sb.append("(`result`).\n")
     for ((name, note) <- picks) {
-      sb.append(s"\n## $name\n\n$note\n\n```\n")
+      sb.append(s"\n## $name\n\n$note\n\n")
       // the persisted layout is a union — keep enough of the plan to show
       // BOTH branches' static PartitionFilters
       val cap = if (name == "ann_ivf_persisted") 5200 else 2600
-      // the production incrementalFlags eagerly materializes its result
-      // (bounded-cache discipline), which would dump as a checkpoint
-      // scan; show the underlying distributed plan via eager = false
-      val frame = if (name == "dedup_incremental") {
-        val docs = sources.Tables.table(spark, dir, "documents")
-        operators.Dedup.incrementalFlags(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 3 === 0),
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 3 =!= 0),
-          0.5, eager = false)
-      } else if (name == "lsh_recall") {
-        // same eager-materialization story as dedup_incremental: show
-        // the distributed plan, not the checkpoint scan
-        operators.Dedup.lshRecall(
-          sources.Tables.table(spark, dir, "documents"), 0.5, eager = false)
-      } else if (name == "lsh_recall_curve") {
-        operators.Dedup.lshRecallCurve(
-          sources.Tables.table(spark, dir, "documents"), 0.5, eager = false)
-      } else if (name == "containment_incremental") {
-        val docs = sources.Tables.table(spark, dir, "documents")
-        operators.Dedup.containmentGateIncremental(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0),
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
-          0.9, eager = false)
-      } else if (name == "containment_incremental_batch") {
-        val docs = sources.Tables.table(spark, dir, "documents")
-        operators.Dedup.containmentGateIncremental(
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 === 0),
-          docs.filter(org.apache.spark.sql.functions.col("doc_id") % 10 =!= 0),
-          0.9, directions = "batch", eager = false)
-      } else if (name == "containment_incremental_persisted") {
-        val docs = sources.Tables.table(spark, dir, "documents")
-        val path = operators.Dedup.containmentIndexDumpPath
-        val dten = org.apache.spark.sql.functions.col("doc_id") % 10
-        operators.Dedup.persistContainmentIndex(
-          docs.filter(dten =!= 0 && dten =!= 9), path)
-        operators.Dedup.appendContainmentIndex(docs.filter(dten === 9), path)
-        operators.Dedup.containmentGateIncrementalPersisted(
-          docs.filter(dten === 0), path, 0.9, eager = false)
-      } else if (name == "distinct_estimate") {
-        // the contract query returns a bounded parallelized row; the
-        // plan worth auditing is the corpus-sized sketch pass
-        operators.Kmv.sketchPass(
-          sources.Tables.events(spark, dir)
-            .select(org.apache.spark.sql.functions.col("user_id")
-              .cast("string").as("w")), 256)
-      } else if (name == "heavy_hitters") {
-        // the contract query RETURNS a bounded parallelized result; the
-        // plan worth auditing is the corpus-sized sketch pass
-        operators.HeavyHitters.sketchPass(
-          sources.Tables.table(spark, dir, "documents"), 1024)
-      } else if (name == "source_jaccard_kmv") {
-        // same shape: the contract query collects the bounded sketch
-        // table and parallelizes pair readouts; the corpus-sized plan
-        // is the grouped BottomK pass with its CollectLimit cap
-        operators.Kmv.groupSketches(
-          sources.Tables.table(spark, dir, "documents")
-            .select(org.apache.spark.sql.functions.col("source"),
-              org.apache.spark.sql.functions.explode(
-                operators.TextAnalysis.words(
-                  org.apache.spark.sql.functions.col("text"))).as("w")),
-          "source", "w", 256, 1024)
-      } else SparkEntry.queries(name)(spark, dir)
-      val plan = frame.queryExecution.executedPlan.toString
-      if (plan.contains("CartesianProduct") ||
-          plan.contains("BroadcastNestedLoopJoin")) {
+      val plans = capture(spark)(SparkEntry.queries(name)(spark, dir))
+        .map { case (action, qe) => action -> qe.executedPlan.toString }
+      if (plans.exists(p => nestedLoop(p._2))) {
         if (!bnljAllowed.contains(name)) nested += name -> "NOT ALLOWLISTED"
         else sb.append(s"(nested-loop allowlisted: ${bnljAllowed(name)})\n\n")
       }
-      sb.append(plan.take(cap)).append(if (plan.length > cap) "\n… (truncated)\n" else "\n")
+      sb.append("```\n")
+      for ((action, plan) <- plans) {
+        if (plans.size > 1) sb.append(s"-- $action --\n")
+        sb.append(plan.take(cap)).append(if (plan.length > cap) "\n… (truncated)\n" else "\n")
+      }
       sb.append("```\n")
     }
     if (nested.nonEmpty) {

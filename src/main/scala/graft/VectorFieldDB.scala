@@ -8,7 +8,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps
-import graft.operators.Clustering
+import graft.operators.{Clustering, Scoped}
 
 /** Audit record — schema from `vector_field.py:109-117`. */
 case class AuditRecord(action: String, timestamp: Timestamp,
@@ -337,8 +337,8 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
       org.apache.spark.sql.types.StringType
     // cached for the validation job and the union; released once the
     // store has materialized, or when the batch is rejected
-    val df = rows.select(iglyphsDF.columns.map(col): _*).cache()
-    try {
+    Scoped { s =>
+      val df = s.cache(rows.select(iglyphsDF.columns.map(col): _*))
       val badMeta =
         if (stringMeta) $"meta".isNotNull && try_parse_json($"meta").isNull
         else lit(false)
@@ -367,18 +367,19 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
           sumLane($"idh2").as("delta2"))
         .head()
       val n = v.getLong(0)
-      if (n == 0L) return 0L // sums are NULL on an empty batch
-      require(v.getLong(2) == 0L, s"${v.getLong(2)} rows violate schema constraints")
-      require(v.getLong(1) == n, "duplicate iglyph_id within batch")
-      require(v.getLong(3) == 0L, s"${v.getLong(3)} iglyph ids already exist")
-      iglyphsDF = iglyphsDF
-        .unionByName(if (stringMeta) withVariantMeta(df) else df)
-        .localCheckpoint(true)
-      iXor ^= v.getLong(4)
-      iSum += wrapped(v.getDecimal(5))
-      log("ADD_IGLYPH", "count" -> n.toString)
+      if (n > 0L) { // sums are NULL on an empty batch
+        require(v.getLong(2) == 0L, s"${v.getLong(2)} rows violate schema constraints")
+        require(v.getLong(1) == n, "duplicate iglyph_id within batch")
+        require(v.getLong(3) == 0L, s"${v.getLong(3)} iglyph ids already exist")
+        iglyphsDF = iglyphsDF
+          .unionByName(if (stringMeta) withVariantMeta(df) else df)
+          .localCheckpoint(true)
+        iXor ^= v.getLong(4)
+        iSum += wrapped(v.getDecimal(5))
+        log("ADD_IGLYPH", "count" -> n.toString)
+      }
       n
-    } finally df.unpersist()
+    }
   }
 
   /** Single insert convenience; generates a UUID when id not supplied. */
@@ -486,10 +487,10 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
     */
   def recomputePGlyph(id: String): Unit = {
     val target = pglyphsDF.filter($"pglyph_id" === id)
-    val members = iglyphsDF
-      .join(target.select(explode($"member_ids").as("iglyph_id")), Seq("iglyph_id"), "left_semi")
-      .select($"iglyph_id", $"embedding").cache()
-    try {
+    Scoped { s =>
+      val members = s.cache(iglyphsDF
+        .join(target.select(explode($"member_ids").as("iglyph_id")), Seq("iglyph_id"), "left_semi")
+        .select($"iglyph_id", $"embedding"))
       // an unknown id and a pglyph whose members were all deleted both
       // resolve no members; only that failure path pays the job that
       // tells them apart
@@ -511,7 +512,7 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
       maybeCheckpoint()
       // `vector_field.py:284` logs the surviving member count
       log("RECOMPUTE_PGLYPH", "pglyph_id" -> id, "members" -> n.toString)
-    } finally members.unpersist()
+    }
   }
 
   /** The two passes over a cluster's member rows, as in the reference
@@ -542,16 +543,16 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
     */
   def autoClusterPhi(ctx: Int, anchorGlyphId: Int, levels: Int = 3): Seq[String] = {
     Validation.requireCtx(ctx)
-    val banded = Clustering.withPhiBand(iglyphsDF.filter($"outer_context_id" === ctx), levels)
-      .select($"iglyph_id", $"band").cache()
-    try {
+    Scoped { s =>
+      val banded = s.cache(Clustering.withPhiBand(
+        iglyphsDF.filter($"outer_context_id" === ctx), levels).select($"iglyph_id", $"band"))
       val present = banded.select($"band").distinct()
         .orderBy($"band").as[Int].collect()
       present.toSeq.map { b =>
         formClusterOf(banded.filter($"band" === b).select($"iglyph_id"),
           anchorGlyphId, ctx, s"phi_band_$b")
       }
-    } finally banded.unpersist()
+    }
   }
 
   /** Batched φ-auto-clustering: all band clusters formed in one
@@ -572,50 +573,53 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
     // pinned in executor storage, the round-12 OOM mechanism
     // (Dedup.containmentPairs cache-policy note). A cache is evictable
     // and recomputable, and released below.
-    val banded = Clustering.withPhiBand(iglyphsDF.filter($"outer_context_id" === ctx), levels)
-      .select($"iglyph_id", $"embedding", $"band").cache()
-    try {
+    Scoped { s =>
+      val banded = s.cache(Clustering.withPhiBand(
+        iglyphsDF.filter($"outer_context_id" === ctx), levels)
+        .select($"iglyph_id", $"embedding", $"band"))
       // first pass, a bounded driver collect: ≤ levels rows of
       // dim-length (rounded) centroids
       val cents = Clustering.centroids(banded, $"band", $"iglyph_id", withMembers = false)
         .select($"cluster_key", $"centroid").collect()
-      if (cents.isEmpty) return Seq.empty
-      val now = Timestamp.from(Instant.now())
-      val pgInfo = cents.sortBy(_.getInt(0)).map { r =>
-        val band = r.getInt(0)
-        (band, UUID.randomUUID().toString, r.getSeq[Double](1), s"phi_band_$band")
-      }.toSeq
-      val info = pgInfo.toDF("band", "pglyph_id", "centroid", "cluster_tag")
-      // second pass: each band's sorted member list and inertia against
-      // its rounded centroid, aggregated executor-side into the stored
-      // rows, which the checkpoint materializes
-      val pgRows = banded.join(broadcast(info.select($"band", $"centroid")), "band")
-        .groupBy($"band")
-        .agg(sort_array(collect_list($"iglyph_id")).as("member_ids"),
-          round(sum(VectorOps.squaredDistance($"embedding", $"centroid")), 6).as("inertia"))
-        .join(broadcast(info), "band")
-        .select($"pglyph_id", lit(anchorGlyphId).as("glyph_id"),
-          lit(ctx).as("outer_context_id"), $"centroid".cast("array<float>").as("centroid"),
-          $"member_ids", $"cluster_tag", $"inertia", parse_json(lit("{}")).as("meta"),
-          lit("1.0.0").as("version"), lit(now).as("timestamp"))
-      pglyphsDF = pglyphsDF.unionByName(pgRows.select(pglyphsDF.columns.map(col): _*))
-        .localCheckpoint(true)
-      // back-pointers: (iglyph_id → pglyph_id) stays a distributed join —
-      // a shuffle join at scale, never a collected mapping
-      val mapping = banded.select($"iglyph_id", $"band")
-        .join(broadcast(info.select($"band", $"pglyph_id".as("new_proto"))), "band")
-        .select($"iglyph_id", $"new_proto")
-      iglyphsDF = iglyphsDF.join(mapping, Seq("iglyph_id"), "left")
-        .withColumn("proto_id", coalesce($"new_proto", $"proto_id"))
-        .drop("new_proto")
-        .localCheckpoint(true)
-      pgInfo.foreach { case (_, pgId, _, _) =>
-        val (h1, h2) = idHashes(pgId); pXor ^= h1; pSum += h2
+      if (cents.isEmpty) Seq.empty
+      else {
+        val now = Timestamp.from(Instant.now())
+        val pgInfo = cents.sortBy(_.getInt(0)).map { r =>
+          val band = r.getInt(0)
+          (band, UUID.randomUUID().toString, r.getSeq[Double](1), s"phi_band_$band")
+        }.toSeq
+        val info = pgInfo.toDF("band", "pglyph_id", "centroid", "cluster_tag")
+        // second pass: each band's sorted member list and inertia against
+        // its rounded centroid, aggregated executor-side into the stored
+        // rows, which the checkpoint materializes
+        val pgRows = banded.join(broadcast(info.select($"band", $"centroid")), "band")
+          .groupBy($"band")
+          .agg(sort_array(collect_list($"iglyph_id")).as("member_ids"),
+            round(sum(VectorOps.squaredDistance($"embedding", $"centroid")), 6).as("inertia"))
+          .join(broadcast(info), "band")
+          .select($"pglyph_id", lit(anchorGlyphId).as("glyph_id"),
+            lit(ctx).as("outer_context_id"), $"centroid".cast("array<float>").as("centroid"),
+            $"member_ids", $"cluster_tag", $"inertia", parse_json(lit("{}")).as("meta"),
+            lit("1.0.0").as("version"), lit(now).as("timestamp"))
+        pglyphsDF = pglyphsDF.unionByName(pgRows.select(pglyphsDF.columns.map(col): _*))
+          .localCheckpoint(true)
+        // back-pointers: (iglyph_id → pglyph_id) stays a distributed join —
+        // a shuffle join at scale, never a collected mapping
+        val mapping = banded.select($"iglyph_id", $"band")
+          .join(broadcast(info.select($"band", $"pglyph_id".as("new_proto"))), "band")
+          .select($"iglyph_id", $"new_proto")
+        iglyphsDF = iglyphsDF.join(mapping, Seq("iglyph_id"), "left")
+          .withColumn("proto_id", coalesce($"new_proto", $"proto_id"))
+          .drop("new_proto")
+          .localCheckpoint(true)
+        pgInfo.foreach { case (_, pgId, _, _) =>
+          val (h1, h2) = idHashes(pgId); pXor ^= h1; pSum += h2
+        }
+        maybeCheckpoint()
+        log("AUTO_CLUSTER_PHI", "bands" -> pgInfo.length.toString, "ctx" -> ctx.toString)
+        pgInfo.map(_._2)
       }
-      maybeCheckpoint()
-      log("AUTO_CLUSTER_PHI", "bands" -> pgInfo.length.toString, "ctx" -> ctx.toString)
-      pgInfo.map(_._2)
-    } finally banded.unpersist()
+    }
   }
 
   // ------------------------------------------------------------- search
@@ -668,8 +672,8 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
       .dropDuplicates("iglyph_id")
     // cached for the count job and the write; released once the store
     // has materialized
-    val incoming = parsed.cache()
-    try {
+    Scoped { s =>
+      val incoming = s.cache(parsed)
       // one job: import count + membership delta (XOR fold over the ids
       // NOT already present — overwritten ids don't change membership)
       val m = incoming
@@ -696,7 +700,7 @@ class VectorFieldDB(val spark: SparkSession, val dim: Int) {
       iglyphsDF = iglyphsDF.localCheckpoint(true)
       log("IMPORT_JSONL", "count" -> imported.toString, "overwrite" -> overwrite.toString)
       imported
-    } finally incoming.unpersist()
+    }
   }
 
   /** Full-state checkpoint — `vector_field.py:448-461`: parquet per table

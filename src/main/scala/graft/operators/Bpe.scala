@@ -61,48 +61,52 @@ object Bpe {
   def learnMerges(docs: DataFrame, m: Int,
       driverVocabLimit: Long = 1L << 16): Seq[(String, String)] = {
     require(m >= 0, s"m must be >= 0, got $m")
-    // the paper's word-frequency table: vocabulary-bounded from here on
-    var vocab = docs
-      .select(explode(TextAnalysis.words(col("text"))).as("w"))
-      .filter(length(col("w")) > 0)
-      .groupBy(col("w")).agg(count(lit(1)).as("n"))
-      .select(spaced(col("w")).as("sym"), col("n"))
-      .cache()
-    if (driverVocabLimit > 0 && vocab.count() <= driverVocabLimit) {
-      val rows = vocab.collect().map(r => (r.getString(0), r.getLong(1)))
-      vocab.unpersist()
-      return learnDriver(rows, m)
+    Scoped { s =>
+      // the paper's word-frequency table: vocabulary-bounded from here on
+      val vocab = s.cache(docs
+        .select(explode(TextAnalysis.words(col("text"))).as("w"))
+        .filter(length(col("w")) > 0)
+        .groupBy(col("w")).agg(count(lit(1)).as("n"))
+        .select(spaced(col("w")).as("sym"), col("n")))
+      if (driverVocabLimit > 0 && vocab.count() <= driverVocabLimit)
+        learnDriver(vocab.collect().map(r => (r.getString(0), r.getLong(1))), m)
+      else learnDistributed(s, vocab, m)
     }
+  }
+
+  /** The distributed merge loop: one aggregation job per round over the
+    * cached vocabulary, swapped for its merged successor each round.
+    */
+  private def learnDistributed(s: Scoped, vocab0: DataFrame,
+      m: Int): Seq[(String, String)] = {
+    var vocab = vocab0
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    try {
-      var round = 0
-      var exhausted = false
-      while (round < m && !exhausted) {
-        // adjacent symbol pairs weighted by word count: zip the symbol
-        // array with its tail — per-row, no self-join
-        val syms = split(col("sym"), " ")
-        val best = vocab
-          .select(explode(zip_with(slice(syms, lit(1), size(syms) - 1),
-            slice(syms, lit(2), size(syms) - 1),
-            (a, b) => concat(a, lit(" "), b))).as("pair"), col("n"))
-          .groupBy(col("pair")).agg(sum(col("n")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair").asc)
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val pair = best.head.getString(0)
-          val merged = pair.replace(" ", "")
-          merges += ((pair, merged))
-          val next = vocab
-            .select(replace(col("sym"), lit(pair), lit(merged)).as("sym"), col("n"))
-            .cache()
-          next.count() // materialize before dropping the parent cache
-          vocab.unpersist()
-          vocab = next
-          round += 1
-        }
+    var round = 0
+    var exhausted = false
+    while (round < m && !exhausted) {
+      // adjacent symbol pairs weighted by word count: zip the symbol
+      // array with its tail — per-row, no self-join
+      val syms = split(col("sym"), " ")
+      val best = vocab
+        .select(explode(zip_with(slice(syms, lit(1), size(syms) - 1),
+          slice(syms, lit(2), size(syms) - 1),
+          (a, b) => concat(a, lit(" "), b))).as("pair"), col("n"))
+        .groupBy(col("pair")).agg(sum(col("n")).as("cnt"))
+        .orderBy(col("cnt").desc, col("pair").asc)
+        .limit(1).collect()
+      if (best.isEmpty) exhausted = true
+      else {
+        val pair = best.head.getString(0)
+        val merged = pair.replace(" ", "")
+        merges += ((pair, merged))
+        // materialized before the parent cache is dropped
+        val next = s.pin(vocab
+          .select(replace(col("sym"), lit(pair), lit(merged)).as("sym"), col("n")))
+        s.release(vocab)
+        vocab = next
+        round += 1
       }
-    } finally vocab.unpersist()
+    }
     merges.toSeq
   }
 

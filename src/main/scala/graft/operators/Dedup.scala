@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -188,7 +189,8 @@ object Dedup {
       .select(col("doc_id"), shingleArray(col("text")).as("sh"))
       .filter(size(col("sh")) >= 1)
       .localCheckpoint()
-    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4))
+    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4),
+      _.cache())
     // unsorted verify core: the evidence joins + the contract sort sit
     // above, so an intermediate pair sort would only be destroyed
     val pairs = verifyPairsCore(candidates, docSh, threshold)
@@ -574,44 +576,43 @@ object Dedup {
     * so the brute-force oracle over the same size-restricted predicate
     * matches row-for-row.
     *
-    * Cache lifecycle (round-13 verdict): the default `eager = true`
-    * materializes the batch-sized verdict frame (lineage severed) and
-    * drops both per-call caches (the batch projection AND the
-    * corpus-sized history projection) before returning — a
-    * foreachBatch ingest loop accumulates nothing. `eager = false`
-    * returns the raw distributed plan for `.explain`/plan audits; the
-    * caller then owns the two leaked caches.
+    * The batch-sized verdict frame is returned checkpointed, and every
+    * per-call cache is released on the way out ([[Scoped]]).
     */
   def containmentGateIncremental(incoming: DataFrame, history: DataFrame,
       threshold: Double, n: Int = 3,
       maxJoinMass: Long = 100000000L,
-      directions: String = "both",
-      eager: Boolean = true): DataFrame = {
-    // three consumers (the df aggregate, the sorted-base build, and
-    // direction 1's probe join) re-shingled history text per consumer
-    // without this cache (round-16 profile); evictable, released by
-    // the gate's eager tail via `extraCaches`
-    val histInv = shingles(history, n)
-      .select(col("doc_id").as("hist_id"), col("shingle")).cache()
-    // the shared total order: history df (the persisted artifact);
-    // batch-novel shingles coalesce to df 0 = rarest-first.
-    // Vocabulary-sized, three consumers (both sorted-base builds and
-    // the batch-prefix join) — and with an InMemoryRelation below it
-    // AQE exchange reuse never fires (round-15 finding), so uncached
-    // it would re-aggregate once per consumer
-    val dfHist = histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .cache()
-    // serialize the two builds (histInv, then dfHist over its IMR):
-    // the gate's consumers plan as concurrent stages and concurrent
-    // first-touch of a lazy cache recomputes it once per scanning
-    // stage (round-16 profile) — one count() each pins a single
-    // producing pass
-    histInv.count()
-    dfHist.count()
-    containmentGateOverArtifacts(incoming,
-      dfHist, containmentSortedBase(histInv, "hist_id", dfHist), histInv,
-      threshold, n, maxJoinMass, directions, eager,
-      extraCaches = Seq(histInv, dfHist))
+      directions: String = "both"): DataFrame = {
+    requireGateArgs(threshold, directions)
+    Scoped { s =>
+      // three consumers (the df aggregate, the sorted-base build, and
+      // direction 1's probe join) re-shingled history text per consumer
+      // without this cache (round-16 profile). The gate's consumers plan
+      // as concurrent stages, and concurrent first-touch of a lazy cache
+      // recomputes it once per scanning stage (round-16 profile), so
+      // both history frames are pinned, histInv before dfHist over it
+      val histInv = s.pin(shingles(history, n)
+        .select(col("doc_id").as("hist_id"), col("shingle")))
+      // the shared total order: history df (the persisted artifact);
+      // batch-novel shingles coalesce to df 0 = rarest-first.
+      // Vocabulary-sized, three consumers (both sorted-base builds and
+      // the batch-prefix join) — and with an InMemoryRelation below it
+      // AQE exchange reuse never fires (round-15 finding), so uncached
+      // it would re-aggregate once per consumer
+      val dfHist = s.pin(
+        histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
+      containmentGateOverArtifacts(s, incoming,
+        dfHist, containmentSortedBase(histInv, "hist_id", dfHist), histInv,
+        threshold, n, maxJoinMass, directions)
+    }
+  }
+
+  /** The gate's argument checks, run before any job. */
+  private def requireGateArgs(threshold: Double, directions: String): Unit = {
+    require(threshold > 0 && threshold <= 1,
+      s"threshold must lie in (0, 1], got $threshold")
+    require(Set("both", "batch", "history")(directions),
+      s"""directions must be "both", "batch" or "history", got $directions""")
   }
 
   /** One (id, sh, n_sh) row per document, shingles in the shared
@@ -636,31 +637,25 @@ object Dedup {
     * the persisted path a one-explode view of the stored sorted table,
     * so neither pays an aggregate it doesn't need.
     */
-  private def containmentGateOverArtifacts(incoming: DataFrame,
+  private def containmentGateOverArtifacts(s: Scoped, incoming: DataFrame,
       dfHist: DataFrame, histBase: DataFrame, histInv: DataFrame,
       threshold: Double, n: Int,
       maxJoinMass: Long,
-      directions: String,
-      eager: Boolean,
-      extraCaches: Seq[DataFrame]): DataFrame = {
-    require(threshold > 0 && threshold <= 1,
-      s"threshold must lie in (0, 1], got $threshold")
-    require(Set("both", "batch", "history")(directions),
-      s"""directions must be "both", "batch" or "history", got $directions""")
+      directions: String): DataFrame = {
     // batch-sized, three consumers (its sorted base, the dfInc
     // aggregate, direction 2's probe join)
-    val incInv = shingles(incoming, n).cache()
+    val incInv = s.cache(shingles(incoming, n))
     def withP(df: DataFrame): DataFrame = df
       .withColumn("p",
         (col("n_sh") - ceil(lit(threshold - RoundHalfWidth) * col("n_sh")
           - lit(ThresholdEps)) + 1).cast("int"))
     // batch-sized: feeds its prefix, the verify join and the rollup
     val incSorted =
-      withP(containmentSortedBase(incInv, "doc_id", dfHist)).cache()
+      s.cache(withP(containmentSortedBase(incInv, "doc_id", dfHist)))
     // corpus-sized but bounded (one row per history doc); two
     // consumers (its prefix + the verify join) — cache(), evictable,
     // the containmentPairs `sorted` policy
-    val histSorted = withP(histBase).cache()
+    val histSorted = s.cache(withP(histBase))
     def prefixOf(sorted: DataFrame, idCol: String): DataFrame =
       sorted.select(col(idCol),
         explode(slice(col("sh"), lit(1), col("p"))).as("shingle"))
@@ -742,19 +737,9 @@ object Dedup {
         coalesce(col("max_containment"), lit(0.0)).as("max_containment"))
       .withColumn("contained", col("n_hits") > 0)
       .orderBy(col("doc_id"))
-    if (!eager) flags
-    else {
-      // batch-sized verdict frame: materialize eagerly, then drop the
-      // per-call caches (histSorted is CORPUS-sized — leaving it pinned
-      // per foreachBatch micro-batch is exactly the accumulation the
-      // incrementalFlags discipline exists to prevent)
-      val out = flags.localCheckpoint(true)
-      incSorted.unpersist()
-      histSorted.unpersist()
-      incInv.unpersist()
-      extraCaches.foreach(_.unpersist())
-      out
-    }
+    // batch-sized: materialized before the scope drops the per-call
+    // caches (histSorted is corpus-sized)
+    flags.localCheckpoint(true)
   }
 
   /** Layout root for the persisted containment-index contract query
@@ -803,15 +788,15 @@ object Dedup {
     // OLD arrays (which would break the shared-total-order premise
     // silently)
     containmentLayout.rebuild(history.sparkSession, path, "n" -> n) {
-      val histInv = shingles(history, n)
-        .select(col("doc_id").as("hist_id"), col("shingle"))
-      val dfHist = histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .cache()
-      try {
+      Scoped { s =>
+        val histInv = shingles(history, n)
+          .select(col("doc_id").as("hist_id"), col("shingle"))
+        val dfHist = s.cache(
+          histInv.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
         dfHist.write.mode("overwrite").parquet(s"$path/df")
         containmentSortedBase(histInv, "hist_id", dfHist)
           .write.mode("overwrite").parquet(s"$path/sorted")
-      } finally dfHist.unpersist()
+      }
     }
 
   private val containmentLayout =
@@ -852,14 +837,14 @@ object Dedup {
     val dfView = containmentDfView(spark, path,
       containmentLayout.committed(spark, path))
     containmentLayout.append(spark, path) { dir =>
-      val batchInv = shingles(batch, n)
-        .select(col("doc_id").as("hist_id"), col("shingle")).cache()
-      try {
+      Scoped { s =>
+        val batchInv = s.cache(shingles(batch, n)
+          .select(col("doc_id").as("hist_id"), col("shingle")))
         batchInv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
           .write.parquet(s"$dir/df")
         containmentSortedBase(batchInv, "hist_id", dfView)
           .write.parquet(s"$dir/sorted")
-      } finally batchInv.unpersist()
+      }
     }
   }
 
@@ -893,15 +878,15 @@ object Dedup {
   def compactContainmentIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
     containmentLayout.compact(spark, path, "df", "sorted") { (snapshot, staged) =>
-      val dfFolded = containmentDfView(spark, path, snapshot).cache()
-      try {
+      Scoped { s =>
+        val dfFolded = s.cache(containmentDfView(spark, path, snapshot))
         dfFolded.write.parquet(staged("df"))
         containmentSortedBase(
           indexTable(containmentLayout, spark, path, "sorted", snapshot)
             .select(col("hist_id"), explode(col("sh")).as("shingle")),
           "hist_id", dfFolded)
           .write.parquet(staged("sorted"))
-      } finally dfFolded.unpersist()
+      }
     }
 
   /** [[containmentGateIncremental]] against a [[persistContainmentIndex]]
@@ -919,27 +904,25 @@ object Dedup {
   def containmentGateIncrementalPersisted(incoming: DataFrame,
       path: String, threshold: Double,
       maxJoinMass: Long = 100000000L,
-      directions: String = "both",
-      eager: Boolean = true): DataFrame = {
+      directions: String = "both"): DataFrame = {
+    requireGateArgs(threshold, directions)
     val spark = incoming.sparkSession
     val Seq(n) = containmentLayout.fields(spark, path, "n")
     val batches = containmentLayout.committed(spark, path)
     val sortedBase = indexTable(containmentLayout, spark, path, "sorted", batches)
-    // vocabulary-sized re-aggregate over the committed df tables; two
-    // consumers (the batch sorted-base build and the batch-prefix
-    // join) — cached, released by the gate's eager tail
-    val dfView = containmentDfView(spark, path, batches).cache()
-    // single producing pass before the concurrent consumers first-touch
-    // it (see containmentGateIncremental)
-    dfView.count()
-    containmentGateOverArtifacts(incoming,
-      dfView, sortedBase,
-      // the inverted index is one narrow explode of the stored arrays
-      // (set-identical to shingling history) — the layout never stores
-      // the same rows twice
-      sortedBase.select(col("hist_id"), explode(col("sh")).as("shingle")),
-      threshold, n, maxJoinMass, directions, eager,
-      extraCaches = Seq(dfView))
+    Scoped { s =>
+      // vocabulary-sized re-aggregate over the committed df tables; two
+      // consumers (the batch sorted-base build and the batch-prefix
+      // join), pinned like the from-text gate's history frames
+      val dfView = s.pin(containmentDfView(spark, path, batches))
+      containmentGateOverArtifacts(s, incoming,
+        dfView, sortedBase,
+        // the inverted index is one narrow explode of the stored arrays
+        // (set-identical to shingling history) — the layout never stores
+        // the same rows twice
+        sortedBase.select(col("hist_id"), explode(col("sh")).as("shingle")),
+        threshold, n, maxJoinMass, directions)
+    }
   }
 
   /** Process-level history-layout memo (the [[KMeansIndex.buildCached]]
@@ -1157,36 +1140,48 @@ object Dedup {
   def dupGroups(pairs: DataFrame, maxRounds: Int = 25,
       driverEdgeLimit: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession
-    // cache the 2-column projection, not the doubled edge union: one
-    // materialization prices the path decision, and both paths read it
-    val p2 = pairs.select(col("doc_a"), col("doc_b")).cache()
-    val nEdges = p2.count()
-    if (driverEdgeLimit > 0 && nEdges <= driverEdgeLimit) {
-      val es = p2.collect().map(r => (r.getLong(0), r.getLong(1)))
-      p2.unpersist()
-      // union-find with min-id roots — identical labeling to the
-      // propagation: every vertex gets its component's minimum doc_id.
-      // find is iterative: min-root unions (no union-by-rank) can build
-      // O(n)-deep trees on adversarial edge order, and a recursive
-      // compress would blow the stack at the 2^20 bound
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x0: Long): Long = {
-        var root = x0
-        while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
-        var y = x0
-        while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
-        root
-      }
-      // a self-pair (a, a) registers the vertex without a union — the
-      // propagation path also emits (a, a) for it
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val rows = parent.keys.map(v => (v, find(v))).toSeq
-      return spark.createDataFrame(rows).toDF("doc_id", "group_id")
-        .orderBy(col("doc_id"))
+    Scoped { s =>
+      // cache the 2-column projection, not the doubled edge union: one
+      // materialization prices the path decision, and both paths read it
+      val p2 = s.cache(pairs.select(col("doc_a"), col("doc_b")))
+      val nEdges = p2.count()
+      if (driverEdgeLimit > 0 && nEdges <= driverEdgeLimit)
+        driverGroups(spark, p2.collect().map(r => (r.getLong(0), r.getLong(1))))
+      else propagateGroups(p2, maxRounds)
     }
+  }
+
+  /** Union-find with min-id roots — identical labeling to the
+    * propagation: every vertex gets its component's minimum doc_id.
+    */
+  private def driverGroups(spark: org.apache.spark.sql.SparkSession,
+      es: Array[(Long, Long)]): DataFrame = {
+    // find is iterative: min-root unions (no union-by-rank) can build
+    // O(n)-deep trees on adversarial edge order, and a recursive
+    // compress would blow the stack at the 2^20 bound
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x0: Long): Long = {
+      var root = x0
+      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
+      var y = x0
+      while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    // a self-pair (a, a) registers the vertex without a union — the
+    // propagation path also emits (a, a) for it
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val rows = parent.keys.map(v => (v, find(v))).toSeq
+    spark.createDataFrame(rows).toDF("doc_id", "group_id")
+      .orderBy(col("doc_id"))
+  }
+
+  /** The distributed min-label propagation over the cached `p2`; every
+    * round's labels are checkpointed, so the result no longer reads it.
+    */
+  private def propagateGroups(p2: DataFrame, maxRounds: Int): DataFrame = {
     // doubled directed edges, recomputed per use from the cached p2 (a
     // union of two cached projections — cheaper than caching 2x rows)
     val edges = p2.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1216,7 +1211,6 @@ object Dedup {
       labels = compressed.select(col("doc_id"), col("next").as("label"))
       round += 1
     }
-    p2.unpersist()
     labels.select(col("doc_id"), col("label").as("group_id"))
       .orderBy(col("doc_id"))
   }
@@ -1254,17 +1248,14 @@ object Dedup {
       .select(col("doc_id"), shingleArray(col("text"), n).as("sh"))
       .filter(size(col("sh")) >= 1)
 
-  /** Prefix-filtered exact-Jaccard pair core over a prepared (and
-    * normally cached) [[docShingles]] frame, UNSORTED — see
-    * [[ngramJaccardPairs]] for semantics and the scale argument.
-    * `register` receives every frame the core caches internally so a
-    * composing evaluator can unpersist them once its own result is
-    * materialized (the round-13 lifecycle item); the default no-op
-    * keeps standalone callers unchanged.
+  /** Prefix-filtered exact-Jaccard pair core over a prepared
+    * [[docShingles]] frame, UNSORTED — see [[ngramJaccardPairs]] for
+    * semantics and the scale argument. It caches through `cache`: the
+    * caller's [[Scoped]] scope, or a plain `.cache()` for a lazy
+    * operator.
     */
   private def ngramJaccardCore(docSh: DataFrame, threshold: Double,
-      cacheInv: Boolean = true,
-      register: DataFrame => Unit = _ => ()): DataFrame = {
+      cache: DataFrame => DataFrame): DataFrame = {
     // exact via prefix filtering: rarest-first order, prefix-only index.
     // inv feeds the df aggregation and the ordering join — the branches
     // cannot share an exchange (one has a partial aggregate below it).
@@ -1273,18 +1264,18 @@ object Dedup {
     // exploded stream beats re-deriving it per branch (1.12 vs 1.84 per
     // pair) — but under lshRecall, which already pins the shared docSh
     // frame AND runs the whole LSH side, adding the inv cache tips the
-    // memory balance the other way (1.30 vs 1.01 per pair), so the
-    // composition passes cacheInv = false and re-derives the explode
-    // from its cached docSh. Evictable cache() either way, never
-    // localCheckpoint (the round-12 OOM lesson).
+    // memory balance the other way (1.30 vs 1.01 per pair), so over a
+    // cached docSh the explode is re-derived from it. Evictable cache()
+    // either way, never localCheckpoint (the round-12 OOM lesson).
     val inv0 = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val inv = if (cacheInv) { val c = inv0.cache(); register(c); c } else inv0
+    val inv =
+      if (docSh.storageLevel == StorageLevel.NONE) cache(inv0) else inv0
     val dfAgg = inv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     // one row per doc: shingles sorted by the global (df, shingle)
     // order + prefix length; cached — it feeds the prefix index and
     // both sides of the verify join (materialized columns are exactly
     // what all three consumers read, so nothing is over-computed)
-    val sorted = inv.join(dfAgg, "shingle")
+    val sorted = cache(inv.join(dfAgg, "shingle")
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("ds"))
       .select(col("doc_id"),
@@ -1292,9 +1283,7 @@ object Dedup {
         size(col("ds")).as("n_sh"))
       .withColumn("p",
         (col("n_sh") - ceil(lit(threshold - RoundHalfWidth) * col("n_sh")
-          - lit(ThresholdEps)) + 1).cast("int"))
-      .cache()
-    register(sorted)
+          - lit(ThresholdEps)) + 1).cast("int")))
     val prefix = sorted.select(col("doc_id"),
       explode(slice(col("sh"), lit(1), col("p"))).as("shingle"))
     val candidates = prefix.as("a").join(prefix.as("b"),
@@ -1321,8 +1310,9 @@ object Dedup {
     case None =>
       // docSh is NOT cached here: the core's cached inv is its only
       // consumer (the verify reads `sorted`), so a cache would be one
-      // wasted materialization; lshRecall caches the frame it SHARES
-      ngramJaccardCore(docShingles(docs, n), threshold)
+      // wasted materialization; lshRecall caches the frame it SHARES.
+      // The core's caches stay session-lived: the returned plan reads them
+      ngramJaccardCore(docShingles(docs, n), threshold, _.cache())
         .orderBy(col("doc_a"), col("doc_b"))
     case Some(dfCut) =>
       // heavy-hitter-guarded: candidates only from shingles with df ≤
@@ -1488,7 +1478,8 @@ object Dedup {
   def minhashEstimateError(docs: DataFrame, k: Int = 16,
       bands: Int = 4): DataFrame = {
     val docSh = docShingles(docs, 3).cache()
-    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands))
+    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands),
+      _.cache())
     val sigs = docSh.select(col("doc_id"), minhashSigUdf(k)(col("sh")).as("sig"))
     val est = aggregate(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
@@ -1530,7 +1521,7 @@ object Dedup {
                           k: Int = 16, bands: Int = 4): DataFrame =
     // small single-file inputs arrive as one partition — docShingles
     // spreads the hash-heavy signature computation across cores first
-    minhashLshCore(docShingles(docs, 3).cache(), threshold, k, bands)
+    minhashLshCore(docShingles(docs, 3).cache(), threshold, k, bands, _.cache())
 
   /** Within-corpus candidate pairs from a band index self-join. The
     * band index is CACHED first: a self-join evaluates its subtree
@@ -1542,15 +1533,12 @@ object Dedup {
     * ~4-rows/doc (long, int, hex32) frame both sides read; the join
     * strategy stays planner-chosen, so at 100 TB (band index far over
     * the broadcast threshold) the same code plans the shuffle join
-    * with AQE skew handling. `register` receives the cached frame so
-    * composing evaluators ([[lshRecall]]) can release it with their
-    * own caches; standalone pair operators keep the per-query cache
-    * exactly like the shingle frame they already cache.
+    * with AQE skew handling. The band index is cached through `cache`,
+    * as in [[ngramJaccardCore]].
     */
   private def bandedCandidates(banded0: DataFrame,
-      register: DataFrame => Unit = _ => ()): DataFrame = {
-    val banded = banded0.cache()
-    register(banded)
+      cache: DataFrame => DataFrame): DataFrame = {
+    val banded = cache(banded0)
     banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -1559,10 +1547,9 @@ object Dedup {
   }
 
   private def minhashLshCore(docSh: DataFrame, threshold: Double,
-      k: Int, bands: Int,
-      register: DataFrame => Unit = _ => ()): DataFrame =
+      k: Int, bands: Int, cache: DataFrame => DataFrame): DataFrame =
     verifyPairsCore(
-      bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands), register),
+      bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands), cache),
       docSh, threshold)
 
   /** Pair-level recall/precision of the MinHash-LSH path against the
@@ -1589,22 +1576,15 @@ object Dedup {
     * + groupBy over two pair-table-sized frames and a single global
     * fold — no new corpus-sized work, no nested loop.
     *
-    * Cache lifecycle (round-13 verdict): the result is ONE row, so the
-    * default `eager = true` materializes it and drops the shared
-    * docShingles cache (and the core's internal `sorted` cache) before
-    * returning — a long-lived session sweeping several (k, bands)
-    * configurations accumulates no pinned corpus-sized frames.
-    * `eager = false` returns the raw distributed plan for
-    * `.explain`/plan audits; the caller then owns the caches.
+    * The one-row result is returned checkpointed, and every frame the
+    * evaluation cached is released on the way out ([[Scoped]]).
     */
   def lshRecall(docs: DataFrame, threshold: Double,
-      k: Int = 16, bands: Int = 4, eager: Boolean = true): DataFrame = {
-    val docSh = docShingles(docs, 3).cache()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](docSh)
-    val exact = ngramJaccardCore(docSh, threshold, cacheInv = false,
-        register = cached += _)
+      k: Int = 16, bands: Int = 4): DataFrame = Scoped { s =>
+    val docSh = s.cache(docShingles(docs, 3))
+    val exact = ngramJaccardCore(docSh, threshold, s.cache)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("e"), lit(0L).as("l"))
-    val lsh = minhashLshCore(docSh, threshold, k, bands, cached += _)
+    val lsh = minhashLshCore(docSh, threshold, k, bands, s.cache)
       .select(col("doc_a"), col("doc_b"), lit(0L).as("e"), lit(1L).as("l"))
     val out = exact.unionByName(lsh)
       .groupBy(col("doc_a"), col("doc_b"))
@@ -1620,14 +1600,7 @@ object Dedup {
         when(col("n_lsh") > 0,
           round(col("n_hit").cast("double") / col("n_lsh"), 6))
           .otherwise(lit(0.0)).as("precision"))
-    if (!eager) out
-    else {
-      // one-row result: materialize, then release every cache this
-      // evaluation pinned (docSh + the exact core's sorted frame)
-      val r = out.localCheckpoint(true)
-      cached.foreach(_.unpersist())
-      r
-    }
+    out.localCheckpoint(true)
   }
 
   /** Band digests derived from an ALREADY-COMPUTED k-row minhash
@@ -1662,27 +1635,19 @@ object Dedup {
     * shingle work is never repeated); each arm adds only its banded
     * candidate join + exact verification, all pair-table-sized. The
     * three caches (docSh, exact pairs, signatures) are all bounded
-    * and evictable — and with the default `eager = true` the bounded
-    * (layout-count-row) result is materialized and EVERY pinned frame
-    * released before returning (round-13 verdict's lifecycle item);
-    * `eager = false` returns the raw plan for audits, caller owns the
-    * caches.
+    * and evictable; the bounded (layout-count-row) result is returned
+    * checkpointed and every cache released ([[Scoped]]).
     */
   def lshRecallCurve(docs: DataFrame, threshold: Double, k: Int = 16,
-      bandArms: Seq[Int] = Seq(2, 4, 8), eager: Boolean = true): DataFrame = {
+      bandArms: Seq[Int] = Seq(2, 4, 8)): DataFrame = Scoped { s =>
     require(bandArms.nonEmpty, "bandArms must name at least one layout")
     require(bandArms.forall(b => b >= 1 && b <= k && k % b == 0),
       s"every bandArms entry must divide k=$k, got $bandArms")
-    val docSh = docShingles(docs, 3).cache()
-    val cached = scala.collection.mutable.ArrayBuffer[DataFrame](docSh)
-    val exact = ngramJaccardCore(docSh, threshold, cacheInv = false,
-        register = cached += _)
-      .select(col("doc_a"), col("doc_b")).cache()
-    val sigs = docSh
-      .select(col("doc_id"), minhashSigUdf(k)(col("sh")).as("sig"))
-      .cache()
-    cached += exact
-    cached += sigs
+    val docSh = s.cache(docShingles(docs, 3))
+    val exact = s.cache(ngramJaccardCore(docSh, threshold, s.cache)
+      .select(col("doc_a"), col("doc_b")))
+    val sigs = s.cache(docSh
+      .select(col("doc_id"), minhashSigUdf(k)(col("sh")).as("sig")))
     // ONE arm-keyed pipeline instead of one join pipeline per arm
     // (round-15 restructuring): every arm's band digests stack into a
     // single (bands, doc_id, band, band_key) frame, so candidate
@@ -1692,13 +1657,12 @@ object Dedup {
     // of the stages/jobs of the per-arm loop (the scheduling floor
     // dominated this query at bench scale). Same total shuffle bytes:
     // the stacked index is exactly the three per-arm indexes.
-    val armBanded = bandArms.map { bands =>
+    val armBanded = s.cache(bandArms.map { bands =>
       sigs.select(lit(bands).as("bands"), col("doc_id"),
           explode(bandKeysFromSigUdf(bands)(col("sig"))).as("bk"))
         .select(col("bands"), col("doc_id"),
           col("bk._1").as("band"), col("bk._2").as("band_key"))
-    }.reduce(_ unionByName _).cache()
-    cached += armBanded
+    }.reduce(_ unionByName _))
     val candidates = armBanded.as("x").join(armBanded.as("y"),
         col("x.bands") === col("y.bands") &&
           col("x.band") === col("y.band") &&
@@ -1744,14 +1708,7 @@ object Dedup {
           round(col("n_hit").cast("double") / col("n_lsh"), 6))
           .otherwise(lit(0.0)).as("precision"))
       .orderBy(col("bands"))
-    if (!eager) out
-    else {
-      // one row per layout: materialize, then release all four pinned
-      // frames (docSh, the exact core's sorted, exact pairs, sigs)
-      val r = out.localCheckpoint(true)
-      cached.foreach(_.unpersist())
-      r
-    }
+    out.localCheckpoint(true)
   }
 
   /** Incremental dedup: flag an incoming batch against corpus HISTORY —
@@ -1775,28 +1732,21 @@ object Dedup {
     * digest/band-key equi-joins sized by the BATCH, never a scan of
     * history text; only verified candidates' shingle sets are read.
     *
-    * Cache lifecycle: this from-text form caches the history projection
-    * per CALL, materializes the batch-sized result eagerly, and drops
-    * both caches before returning — a foreachBatch loop accumulates
-    * nothing. A long-running ingest loop should still build the index
-    * once ([[persistDedupIndex]]) and call
+    * This from-text form caches the history projection per call and
+    * returns the batch-sized result checkpointed, releasing the cache
+    * ([[Scoped]]). A long-running ingest loop should still build the
+    * index once ([[persistDedupIndex]]) and call
     * [[incrementalFlagsPersisted]] per batch, which holds no history
-    * cache at all. `eager = false` skips the materialize-and-release
-    * discipline and returns the raw distributed plan (for `.explain` /
-    * plan audits — the caller then owns the leaked projection caches;
-    * production wants the default).
+    * cache at all.
     */
   def incrementalFlags(incoming: DataFrame, history: DataFrame,
-      threshold: Double, k: Int = 16, bands: Int = 4,
-      eager: Boolean = true): DataFrame = {
-    val hist = histProjection(history).cache()
-    // incrementalCore returns an eagerly-materialized frame, so the
-    // history projection cache can be dropped as soon as it returns
-    try incrementalCore(incoming, hist.select(col("h")).distinct(),
-      bandKeysOf(hist, "hist_id", k, bands),
-      hist.select(col("hist_id"), col("sh")), threshold, k, bands, eager)
-    finally if (eager) hist.unpersist()
-  }
+      threshold: Double, k: Int = 16, bands: Int = 4): DataFrame =
+    Scoped { s =>
+      val hist = s.cache(histProjection(history))
+      incrementalCore(s, incoming, hist.select(col("h")).distinct(),
+        bandKeysOf(hist, "hist_id", k, bands),
+        hist.select(col("hist_id"), col("sh")), threshold, k, bands)
+    }
 
   /** The (hist_id, digest, shingle-set) projection every history-side
     * consumer derives from — ONE definition so the from-text path, the
@@ -1817,15 +1767,13 @@ object Dedup {
     * persisted layout stores: distinct digests (`h`), band index
     * (`hist_id`, `band`, `band_key`), shingle sets (`hist_id`, `sh`).
     */
-  private def incrementalCore(incoming: DataFrame, histDigests: DataFrame,
-      histBands: DataFrame, histShingles: DataFrame,
-      threshold: Double, k: Int, bands: Int,
-      eager: Boolean = true): DataFrame = {
+  private def incrementalCore(s: Scoped, incoming: DataFrame,
+      histDigests: DataFrame, histBands: DataFrame, histShingles: DataFrame,
+      threshold: Double, k: Int, bands: Int): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
-    val inc = Partitioning.spread(incoming)
+    val inc = s.cache(Partitioning.spread(incoming)
       .select(col("doc_id"), sha2(col("text"), 256).as("h"),
-        shingleArray(col("text")).as("sh"))
-      .cache()
+        shingleArray(col("text")).as("sh")))
     val exactIds = inc.join(histDigests, Seq("h"), "left_semi")
       .select(col("doc_id"))
     val cand = bandKeysOf(inc, "doc_id", k, bands)
@@ -1844,18 +1792,10 @@ object Dedup {
         coalesce(col("near_dup_hist"), lit(false)).as("near_dup_hist"))
       .withColumn("keep", !col("exact_dup_hist") && !col("near_dup_hist"))
       .orderBy(col("doc_id"))
-    if (!eager) flags
-    else {
-      // the flags frame is batch-sized (one row per incoming doc), so it
-      // is materialized EAGERLY (lineage severed): the incoming-batch
-      // projection cache can then be dropped right here instead of one
-      // cached frame accumulating per foreachBatch micro-batch until LRU
-      // eviction (round-5 advice); the checkpoint itself is freed by the
-      // ContextCleaner when the returned frame is garbage-collected
-      val out = flags.localCheckpoint(true)
-      inc.unpersist()
-      out
-    }
+    // batch-sized (one row per incoming doc): materialized before the
+    // scope drops the batch projection; the checkpoint itself is freed
+    // by the ContextCleaner when the returned frame is garbage-collected
+    flags.localCheckpoint(true)
   }
 
   /** Layout root for the compacted-index contract query (the
@@ -1881,15 +1821,15 @@ object Dedup {
   def persistDedupIndex(history: DataFrame, path: String,
       k: Int = 16, bands: Int = 4): Unit =
     dedupLayout.rebuild(history.sparkSession, path, "k" -> k, "bands" -> bands) {
-      val hist = histProjection(history).cache()
-      try {
+      Scoped { s =>
+        val hist = s.cache(histProjection(history))
         hist.select(col("h")).distinct()
           .write.mode("overwrite").parquet(s"$path/digests")
         bandKeysOf(hist, "hist_id", k, bands)
           .write.mode("overwrite").parquet(s"$path/bands")
         hist.select(col("hist_id"), col("sh"))
           .write.mode("overwrite").parquet(s"$path/shingles")
-      } finally hist.unpersist()
+      }
     }
 
   /** Append an accepted batch to a [[persistDedupIndex]] layout. The
@@ -1904,12 +1844,12 @@ object Dedup {
     val spark = batch.sparkSession
     val Seq(k, bands) = dedupLayout.fields(spark, path, "k", "bands")
     dedupLayout.append(spark, path) { dir =>
-      val b = histProjection(batch).cache()
-      try {
+      Scoped { s =>
+        val b = s.cache(histProjection(batch))
         b.select(col("h")).distinct().write.parquet(s"$dir/digests")
         bandKeysOf(b, "hist_id", k, bands).write.parquet(s"$dir/bands")
         b.select(col("hist_id"), col("sh")).write.parquet(s"$dir/shingles")
-      } finally b.unpersist()
+      }
     }
   }
 
@@ -1937,9 +1877,9 @@ object Dedup {
     * with the (k, bands) recorded in the layout's manifest.
     *
     * This is the variant a long-running `foreachBatch` loop should use:
-    * [[incrementalFlags]] caches the full history projection per call
-    * (fine for one-shot jobs, monotonic cache growth across micro-
-    * batches), while this path holds only the per-batch frame.
+    * [[incrementalFlags]] re-derives and caches the full history
+    * projection on every call, while this path caches only the
+    * per-batch frame.
     */
   def incrementalFlagsPersisted(incoming: DataFrame, path: String,
       threshold: Double): DataFrame = {
@@ -1947,8 +1887,8 @@ object Dedup {
     val Seq(k, bands) = dedupLayout.fields(spark, path, "k", "bands")
     val batches = dedupLayout.committed(spark, path)
     def table(t: String) = indexTable(dedupLayout, spark, path, t, batches)
-    incrementalCore(incoming, table("digests"), table("bands"),
-      table("shingles"), threshold, k, bands)
+    Scoped(s => incrementalCore(s, incoming, table("digests"), table("bands"),
+      table("shingles"), threshold, k, bands))
   }
 
   /** SimHash width: 62 bits — the first 62 bits of md5(word), MSB-first.
@@ -2219,7 +2159,7 @@ object Dedup {
       eagerBuild: Boolean = false): (DataFrame, DataFrame) = {
     // two consumers (the df aggregate and the weight join's probe side)
     // re-derive the shingle explode without this cache — the
-    // ngramJaccardCore cacheInv precedent, same measured trade
+    // ngramJaccardCore inv-cache precedent, same measured trade
     val sh = shingles(docs, n).cache()
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfreq0 = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -2397,7 +2337,7 @@ object Dedup {
     val docSh = Partitioning.spread(docs)
       .select(col("doc_id"), shingleArray(col("text")).as("sh"))
       .filter(size(col("sh")) >= 1)
-    bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4))
+    bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4), _.cache())
   }
 
   /** IDF-weighted cosine over a GIVEN candidate pair list — the

@@ -40,13 +40,14 @@ object Graph {
   /** PageRank over an undirected pair graph (columns doc_a, doc_b).
     * Vertices are pair endpoints; each undirected pair contributes
     * both directed edges. Returns (doc_id, deg, rank) with rank
-    * rounded at 6 dp, uniform 1/n start.
+    * rounded at 6 dp, uniform 1/n start. The edge list and degree
+    * table stay cached for the session: the returned plan reads them.
     */
   def pageRank(pairs: DataFrame,
       iterations: Int = pageRankIterations,
-      damping: Double = pageRankDamping): DataFrame = {
+      damping: Double = pageRankDamping): DataFrame = Scoped { s =>
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
-    val p2 = pairs.select(col("doc_a"), col("doc_b")).cache()
+    val p2 = s.cache(pairs.select(col("doc_a"), col("doc_b")))
     val edges = p2.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p2.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .distinct()
@@ -54,11 +55,18 @@ object Graph {
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache()
     val n = deg.count()
     if (n == 0) {
-      p2.unpersist(); edges.unpersist(); deg.unpersist()
-      return pairs.sparkSession.emptyDataFrame
+      s.release(edges); s.release(deg)
+      pairs.sparkSession.emptyDataFrame
         .withColumn("doc_id", lit(0L)).withColumn("deg", lit(0L))
         .withColumn("rank", lit(0.0)).limit(0)
-    }
+    } else rankRounds(edges, deg, n, iterations, damping)
+  }
+
+  /** The fixed power-iteration rounds over the cached edge list and
+    * degree table of `n` vertices.
+    */
+  private def rankRounds(edges: DataFrame, deg: DataFrame, n: Long,
+      iterations: Int, damping: Double): DataFrame = {
     // identical expression shape on both sides: (1 - d) / n and the
     // damped sum are IEEE ops over identical operands
     val base = (lit(1.0) - lit(damping)) / lit(n.toDouble)
@@ -77,13 +85,11 @@ object Graph {
           .cast(DecimalType(20, 9)).as("r"))
         .localCheckpoint()
     }
-    val out = rank
+    rank
       .join(deg.select(col("src").as("node"), col("deg")), "node")
       .select(col("node").as("doc_id"), col("deg"),
         round(col("r").cast("double"), 6).as("rank"))
       .orderBy(col("doc_id"))
-    p2.unpersist()
-    out
   }
 
   /** Triangle census of the undirected pair graph — the clustering
@@ -105,8 +111,9 @@ object Graph {
     * hub. Three equi-joins, no enumeration of raw-degree
     * neighborhoods.
     */
-  def triangles(pairs: DataFrame): DataFrame = {
-    val und = pairs.select(col("doc_a"), col("doc_b")).distinct().cache()
+  def triangles(pairs: DataFrame): DataFrame = Scoped { s =>
+    // read only until `oriented` below is checkpointed
+    val und = s.cache(pairs.select(col("doc_a"), col("doc_b")).distinct())
     val deg = und.select(col("doc_a").as("v"))
       .union(und.select(col("doc_b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -135,10 +142,8 @@ object Graph {
     val tris = wedges.join(closing,
       col("u") === col("cu") && col("w") === col("cw"))
       .select(col("src"), col("u"), col("w"))
-    val perVertex = tris.select(explode(array(col("src"), col("u"), col("w"))).as("doc_id"))
+    tris.select(explode(array(col("src"), col("u"), col("w"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_triangles"))
       .orderBy(col("doc_id"))
-    und.unpersist()
-    perVertex
   }
 }

@@ -250,8 +250,8 @@ object Icws {
     // layout the probe refuses instead of NEW sketches silently joined
     // against OLD weights
     layout.rebuild(rows.sparkSession, path, "k" -> k) {
-      val wts = weightsOf(rows, groupCol, elemCol, weightCol).cache()
-      try {
+      Scoped { s =>
+        val wts = s.cache(weightsOf(rows, groupCol, elemCol, weightCol))
         // the gate rides the build: a layout that would blow the pair
         // probe up refuses to materialize at all
         Partitioning.requireBoundedDomain(
@@ -261,7 +261,7 @@ object Icws {
         sketchOf(wts, k, salt)
           .write.mode("overwrite").parquet(s"$path/sketches")
         wts.write.mode("overwrite").parquet(s"$path/weights")
-      } finally wts.unpersist()
+      }
       writeSalt(rows.sparkSession.sparkContext.hadoopConfiguration, path, salt)
     }
   }
@@ -388,14 +388,13 @@ object Icws {
     layout.append(spark, path) { dir =>
       batchWts.write.parquet(s"$dir/weights")
       val written = spark.read.parquet(s"$dir/weights")
-      // merged weights of the TOUCHED groups: committed view ∪ this
-      // batch, re-aggregated — the re-sketch input
-      val merged = weightsView(spark, path, prior).unionByName(written)
-        .join(written.select(col("g")).distinct(), Seq("g"), "left_semi")
-        .groupBy(col("g"), col("e")).agg(sum(col("w")).as("w"))
-        .filter(col("w") > 0)
-        .cache()
-      try {
+      Scoped { s =>
+        // merged weights of the TOUCHED groups: committed view ∪ this
+        // batch, re-aggregated — the re-sketch input
+        val merged = s.cache(weightsView(spark, path, prior).unionByName(written)
+          .join(written.select(col("g")).distinct(), Seq("g"), "left_semi")
+          .groupBy(col("g"), col("e")).agg(sum(col("w")).as("w"))
+          .filter(col("w") > 0))
         val newTot = merged.groupBy(col("g")).agg(sum(col("w")).as("tot"))
         val untouched = resolvedView(spark, path, "totals", prior)
           .join(written.select(col("g")).distinct(), Seq("g"), "left_anti")
@@ -409,7 +408,7 @@ object Icws {
           .write.parquet(s"$dir/totals")
         sketchOf(merged, k, salt).withColumn("seq", lit(seq))
           .write.parquet(s"$dir/sketches")
-      } finally merged.unpersist()
+      }
     }
   }
 

@@ -116,17 +116,15 @@ object KMeansIndex {
       val keepPerMille = math.max(1L, target * 1000L / n)
       base.filter(pmod(xxhash64(col("vec_id"), lit(seed)), lit(1000L)) < keepPerMille)
     }
-    val withVec = trainRows
-      .withColumn("features", array_to_vector(col("embedding").cast("array<double>")))
-      .cache()
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(10)
+    // training scratch, released with the scope
+    val model = Scoped(s => new KMeans().setK(k).setSeed(seed).setMaxIter(10)
       // random init: one seeding job instead of k-means||'s ~5 passes —
       // at index-build scale the extra iterations are cheaper than the
       // extra full-data passes
       .setInitMode("random")
       .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(withVec)
-    withVec.unpersist() // training scratch — do not leave it to LRU
+      .fit(s.cache(trainRows.withColumn("features",
+        array_to_vector(col("embedding").cast("array<double>"))))))
     model.clusterCenters.map((v: Vector) => v.toArray)
   }
 

@@ -80,7 +80,7 @@ object Pq {
     * coarse-quantizer discipline — codebook quality saturates there and
     * build cost must scale with k·numSub, not the corpus); the sampled
     * slice frame is cached once and feeds all `numSub` fits, then
-    * unpersisted. Assignment/encoding below covers every row via
+    * released ([[Scoped]]). Assignment/encoding below covers every row via
     * codegen expressions — MLlib never touches the full table.
     */
   def fit(emb: DataFrame, dim: Int, numSub: Int = numSub,
@@ -94,23 +94,24 @@ object Pq {
       val keepPerMille = math.max(1L, target * 1000L / n)
       base.filter(pmod(xxhash64(col("vec_id"), lit(seed)), lit(1000L)) < keepPerMille)
     }
-    val cached = train
-      .select(col("embedding").cast("array<double>").as("e")).cache()
-    cached.count() // materialize once; all numSub fits read this frame
-    val books = Array.tabulate(numSub) { s =>
-      val sub = cached.select(
-        array_to_vector(slice(col("e"), s * subDim + 1, subDim)).as("features"))
-      // k-means|| (seeded, deterministic within a run — all the
-      // dump-and-replay oracle needs): plain random init can seed two
-      // points in one clump and permanently miss a cluster, which for a
-      // CODEBOOK means every vector in the missed region quantizes badly
-      val model = new KMeans().setK(k).setSeed(seed + s).setMaxIter(10)
-        .setInitMode("k-means||")
-        .setFeaturesCol("features").setPredictionCol("code")
-        .fit(sub)
-      model.clusterCenters.map((v: Vector) => v.toArray)
+    val books = Scoped { scope =>
+      // materialized once; all numSub fits read this frame
+      val cached = scope.pin(
+        train.select(col("embedding").cast("array<double>").as("e")))
+      Array.tabulate(numSub) { s =>
+        val sub = cached.select(
+          array_to_vector(slice(col("e"), s * subDim + 1, subDim)).as("features"))
+        // k-means|| (seeded, deterministic within a run — all the
+        // dump-and-replay oracle needs): plain random init can seed two
+        // points in one clump and permanently miss a cluster, which for a
+        // CODEBOOK means every vector in the missed region quantizes badly
+        val model = new KMeans().setK(k).setSeed(seed + s).setMaxIter(10)
+          .setInitMode("k-means||")
+          .setFeaturesCol("features").setPredictionCol("code")
+          .fit(sub)
+        model.clusterCenters.map((v: Vector) => v.toArray)
+      }
     }
-    cached.unpersist()
     Model(subDim, books)
   }
 

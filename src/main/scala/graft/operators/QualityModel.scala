@@ -103,14 +103,12 @@ object QualityModel {
       val keepPerMille = math.max(1L, fitCap * 1000L / n)
       base.filter(pmod(xxhash64(col("doc_id"), lit(seed)), lit(1000L)) < keepPerMille)
     }
-    val prepared = trainRows.select(
-      when(col("lang") === targetLang, 1.0).otherwise(0.0).as("label"),
-      array_to_vector(featuresCol).as("features"))
-      .cache()
-    val model = new LogisticRegression()
+    // training scratch, released with the scope
+    val model = Scoped(s => new LogisticRegression()
       .setMaxIter(50).setRegParam(0.01).setStandardization(true)
-      .fit(prepared)
-    prepared.unpersist() // training scratch — do not leave it to LRU
+      .fit(s.cache(trainRows.select(
+        when(col("lang") === targetLang, 1.0).otherwise(0.0).as("label"),
+        array_to_vector(featuresCol).as("features")))))
     Weights(model.coefficients.toArray, model.intercept)
   }
 

@@ -34,4 +34,19 @@ class ContractSpec extends AnyFunSuite {
     assert(counts.count(_._2 >= 1) >= SparkEntry.queries.size,
       "source scan found fewer key positions than the queries map holds")
   }
+
+  test("unpersist is called only by the cache scope") {
+    // every frame a call caches for itself is released by
+    // graft.operators.Scoped on every exit path; a hand-written
+    // unpersist elsewhere is the release a refusal skips
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val releasing = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains("unpersist("))
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(releasing == Seq("graft/operators/Scoped.scala"),
+      s"unpersist( outside Scoped: $releasing")
+  }
 }

@@ -485,12 +485,19 @@ class DedupSpec extends AnyFunSuite {
     val both = run("both")
     assert(both.keySet.forall(k =>
       both(k)._4 == (batch(k)._4 || hist(k)._4)), s"$both")
-    // unknown mode refuses loudly
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.containmentGateIncremental(incoming, history, 0.9,
-        directions = "sideways")
+    // unknown mode refuses loudly, before any job and with nothing
+    // left cached
+    spark.catalog.clearCache()
+    val jobs = TestSpark.jobsOf {
+      val ex = intercept[IllegalArgumentException] {
+        Dedup.containmentGateIncremental(incoming, history, 0.9,
+          directions = "sideways")
+      }
+      assert(ex.getMessage.contains("directions"))
     }
-    assert(ex.getMessage.contains("directions"))
+    assert(jobs == 0, s"the refused call ran $jobs jobs")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the refused call left frames cached")
   }
 
   test("containmentGateIncrementalPersisted: verdict-identical to the from-text gate; bare path refuses") {
@@ -702,10 +709,15 @@ class DedupSpec extends AnyFunSuite {
     // refuse BEFORE any candidate forms
     val incoming = (1L to 30L).map(i => (i, "aa bb cc")).toDF("doc_id", "text")
     val history = (101L to 130L).map(i => (i, "aa bb cc")).toDF("doc_id", "text")
+    spark.catalog.clearCache()
     val ex = intercept[Exception] {
       Dedup.containmentGateIncremental(incoming, history, 0.9,
         maxJoinMass = 100L).collect()
     }
+    // the refusal raises inside the gate's checkpoint; its history
+    // caches are released all the same
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the refused gate left frames cached")
     val msg = Option(ex.getMessage).getOrElse("") +
       Option(ex.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
     assert(msg.contains("containmentGateIncremental") &&

@@ -8,7 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan-shape regressions land wherever the planner flips a join
   * strategy, not only in the queries someone chose to dump. This spec
   * walks all of `SparkEntry.queries` (the OutputSchemaSpec sweep
-  * pattern), builds each executed plan at sf0.001, and fails on any
+  * pattern), builds each query at sf0.001 and audits every plan the
+  * build runs ([[PlanDump.capture]]: an eager operator's checkpoint, a
+  * pin's count, a bounded collect) plus the returned frame's plan, and
+  * fails on any
   * CartesianProduct or BroadcastNestedLoopJoin outside the shared
   * named allowlist of bounded 1-row/domain crosses
   * ([[PlanDump.bnljAllowed]] — one list, two enforcement points).
@@ -24,18 +27,13 @@ class PlanAuditSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def nestedLoop(plan: String): Boolean =
-    plan.contains("CartesianProduct") ||
-      plan.contains("BroadcastNestedLoopJoin")
+  private def nestedLoop(name: String, sfDir: String): Boolean =
+    PlanDump.capture(spark)(SparkEntry.queries(name)(spark, sfDir))
+      .exists { case (_, qe) => PlanDump.nestedLoop(qe.executedPlan.toString) }
 
   private def offendersAt(sfDir: String): Seq[String] =
-    SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
-        if (nestedLoop(plan) && !PlanDump.bnljAllowed.contains(name))
-          Some(name)
-        else None
-    }
+    SparkEntry.queries.keys.toSeq.sorted.filter(name =>
+      nestedLoop(name, sfDir) && !PlanDump.bnljAllowed.contains(name))
 
   test("no CartesianProduct/BNLJ outside the named allowlist, across ALL contract queries") {
     val offenders = offendersAt(dir)
@@ -64,9 +62,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // stale documentation — the reason text would justify a node that
     // does not exist, and a future regression would hide behind it
     val stale = PlanDump.bnljAllowed.keys.toSeq.sorted.filter { name =>
-      SparkEntry.queries.contains(name) &&
-        !nestedLoop(SparkEntry.queries(name)(spark, dir)
-          .queryExecution.executedPlan.toString)
+      SparkEntry.queries.contains(name) && !nestedLoop(name, dir)
     }
     assert(stale.isEmpty,
       s"allowlist entries whose plans no longer nested-loop: $stale")
@@ -84,7 +80,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val b = Seq(1L, 2L, 3L).toDF("y")
     val planted = a.join(b, org.apache.spark.sql.functions.col("x") <
       org.apache.spark.sql.functions.col("y"))
-    assert(nestedLoop(planted.queryExecution.executedPlan.toString),
+    assert(PlanDump.nestedLoop(planted.queryExecution.executedPlan.toString),
       "the planted inequality join did not surface as a nested loop — " +
         "audit probes are stale against this Spark version")
   }

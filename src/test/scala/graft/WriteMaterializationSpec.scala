@@ -1,10 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+import TestSpark.jobsOf
 
 /** The facade's write-time materialization: a write that adds a join or
   * an aggregate to a table materializes it before returning, so later
@@ -16,19 +13,6 @@ class WriteMaterializationSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def vec(v: Float): Array[Float] = Array.fill(8)(v)
-
-  /** Jobs the body starts, counted by a listener between two drains. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; TestBus.drain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
 
   test("after formCluster, a pglyph search and an iglyph search each run one job") {
     val db = new VectorFieldDB(spark, 8)
