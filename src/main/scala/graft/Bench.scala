@@ -1,12 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — driver contract: one JSON line on stdout at
   * $SPARK_GRAFT_SF_DIR. Stdout carries totals + a headline-query dict
   * (short enough to survive the driver's ~2 kB stdout tail window);
-  * the COMPLETE per-query median/min/max record is written by Bench
-  * itself to $SPARK_GRAFT_BENCH_OUT (default BENCH_local_latest.json).
+  * [[summaryLine]] builds it. The COMPLETE per-query record is written
+  * by Bench itself to $SPARK_GRAFT_BENCH_OUT (default
+  * BENCH_local_latest.json):
+  * median/min/max per query, and under `per_rep` every rep's [[Work]]
+  * record in run order (wall time, jobs, stages, task and GC time,
+  * spill, peak memory, shuffle bytes, input and output rows, Catalyst
+  * phase times) plus `cache.persisted_after`, the persistent-RDD count
+  * read before the rep's cache clear.
   *
   * Queries are fully materialized through the noop sink (count() lets
   * Spark skip projected columns; noop executes the complete plan). One
@@ -19,6 +25,82 @@ import org.apache.spark.sql.SparkSession
   * three keeps one descheduled run from grading the engine.
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One rep of one query: its measured work and the persistent-RDD
+    * count left before the rep's cache clear. */
+  final case class Rep(work: Work, persistedAfter: Int) {
+    def fields: Seq[(String, AnyVal)] =
+      work.fields :+ ("cache.persisted_after" -> persistedAfter)
+  }
+
+  /** Run `fn` once through the noop sink under one [[Work]]
+    * measurement. A failure is reported to `failed` (and surfaces in the
+    * JSON: a crashing query must not read as a near-zero time that
+    * silently LOWERS the reported total). Operator-internal caches are
+    * dropped inside the timed region, so reps 2..n measure cold runs
+    * (identical logical plans would otherwise hit rep 1's cache) and no
+    * cache leaks across queries.
+    */
+  def runOnce(spark: SparkSession, fn: Query, dir: String)(failed: Throwable => Unit): Rep = {
+    val (persisted, work) = Work.of(spark) {
+      try fn(spark, dir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable => failed(e) }
+      val n = spark.sparkContext.getPersistentRDDs.size
+      spark.sharedState.cacheManager.clearCache()
+      n
+    }
+    Rep(work, persisted)
+  }
+
+  /** The `per_rep` entry of one query: its reps' records in run order. */
+  def record(reps: Seq[Rep]): String = arr(reps.map(r => obj(r.fields)))
+
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  private def str(s: String) = "\"" + s + "\""
+  private def obj(xs: Seq[(String, Any)]) =
+    xs.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+  private def arr(xs: Seq[String]) = xs.mkString("[", ",", "]")
+
+  // a max/min rep spread > 3× on an identical plan is co-tenant
+  // scheduling, not the engine — named so the report separates noise
+  // from regressions without a re-run (e.g. r7's pq_adc_topk: min
+  // 0.7 s, max 13.8 s)
+  private def noisy(walls: Seq[Double]) = walls.max > 3.0 * math.max(walls.min, 1e-9)
+
+  val headlineNames = Seq("search_cosine_topk", "search_dot_topk",
+    "q1_pricing_summary", "q3_shipping_priority", "dedup_minhash_lsh",
+    "ann_ivf_topk", "pipeline_clean_corpus", "events_funnel")
+
+  /** The stdout line. Its reader keeps just the LAST ~2 kB of stdout,
+    * and ~200 per-query medians are ~8 kB — every round through r10
+    * archived a truncated, unparseable line (BENCH_r10 parsed=null). So
+    * the line holds totals, a headline dict (keeping the contract's
+    * `queries` key populated), at most eight failed names (`n_errors`
+    * counts them all), and `queries_file`, the artifact that carries the
+    * complete record.
+    */
+  def summaryLine(walls: Seq[(String, Seq[Double])], lifecycleTotal: Double,
+      errors: Seq[String], outPath: String, sfDir: String, reps: Int,
+      only: Boolean): String = {
+    val headline = obj(walls.filter(w => headlineNames.contains(w._1))
+      .map(w => w._1 -> median(w._2)))
+    val fields = Seq(
+      "metric" -> str("total"), "unit" -> str("sec"),
+      "value" -> walls.map(w => median(w._2)).sum,
+      "queries" -> headline, "queries_file" -> str(outPath),
+      "n_queries" -> walls.size, "sf" -> str(sfDir), "reps" -> reps,
+      "total_min" -> walls.map(_._2.min).sum, "total_max" -> walls.map(_._2.max).sum,
+      "lifecycle_total" -> lifecycleTotal,
+      "noisy_count" -> walls.count(w => noisy(w._2)),
+      "errors" -> arr(errors.take(8).map(str)), "n_errors" -> errors.size)
+    obj(if (only) fields :+ ("only" -> true) else fields)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -35,40 +117,21 @@ object Bench {
       // a 3-way interleaved A/B (32k / 128k / 1m over the affected
       // families) showed 32k over-splits small aggregates (doc_quality
       // 1.6× worse) while 1m serializes the containment family
-      // (dedup_containment 1.7× worse) — 128k was best overall.
-      // Env-overridable: a production cluster at real data sizes keeps
-      // the default (partitions there are GBs, the coalescer never
-      // binds at 1 MiB), so this is a local-scale floor, not a tuned
-      // constant the cluster inherits.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "128k"))
+      // (dedup_containment 1.7× worse) — 128k was best overall. It is a
+      // local-scale floor: partitions at real data sizes are GBs, and
+      // the coalescer never binds there.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val errors = scala.collection.mutable.LinkedHashSet[String]()
-    def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, dir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        // surfaced in the JSON: a crashing query must not read as a
-        // near-zero time that silently LOWERS the reported total
+    def runOnce(name: String, fn: Query, dir: String): Rep =
+      Bench.runOnce(spark, fn, dir) { e =>
         errors += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-      // drop operator-internal caches so reps 2..n measure cold runs
-      // (identical logical plans would otherwise hit rep 1's cache) and
-      // no cache leaks across queries
-      finally spark.sharedState.cacheManager.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
 
     // warm the three distinct code families once at sf0.001 before any
     // timing: codegen'd vector search, the UDF-heavy shingle/minhash
@@ -104,11 +167,8 @@ object Bench {
       "icws_persisted", "icws_compacted", "containment_bloom_build",
       "containment_incremental_persisted",
       "containment_incremental_compacted")
-    def timeAll(entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
-      entries.map { case (name, fn) =>
-        val times = (1 to reps).map(_ => runOnce(name, fn, sfDir))
-        (name, median(times), times.min, times.max)
-      }
+    def timeAll(entries: Seq[(String, Query)]): Seq[(String, Seq[Rep])] =
+      entries.map { case (name, fn) => name -> (1 to reps).map(_ => runOnce(name, fn, sfDir)) }
     // isolated re-runs (noise adjudication): SPARK_GRAFT_BENCH_ONLY is
     // a comma-separated query-name list; the run times just those,
     // marks the output line `"only":true`, and leaves the full-run
@@ -123,45 +183,25 @@ object Bench {
       calibrationSet(q._1) || lifecycleSet(q._1)))
     val calib = timeAll(all.filter(q => calibrationSet(q._1)))
     val lifecycle = timeAll(all.filter(q => lifecycleSet(q._1)))
-    def obj(xs: Seq[(String, Double)]) =
-      xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = obj(results.map(r => r._1 -> r._2))
-    // per-query best/worst-of-reps: on this shared sandbox individual
-    // queries swing 2-13× under co-tenant load; min is the noise floor
-    // (what the engine does when the machine lets it) and a max/min
-    // spread > ~3 flags the rep set as noise without a judge re-run
-    val qmins = obj(results.map(r => r._1 -> r._3))
-    val qmaxs = obj(results.map(r => r._1 -> r._4))
-    val total = results.map(_._2).sum
-    val totalMin = results.map(_._3).sum
-    val totalMax = results.map(_._4).sum
-    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // self-annotating noise flag: a max/min rep spread > 3× on an
-    // identical plan is co-tenant scheduling, not the engine — name those
-    // queries so the report separates noise from regressions without a
-    // re-run (e.g. r7's pq_adc_topk: min 0.7 s, max 13.8 s)
-    val noisy = results.filter(r => r._4 > 3.0 * math.max(r._3, 1e-9))
-      .map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    // The full record — every per-query median/min/max — goes to a
-    // stable repo file Bench itself writes; cross-round per-query
-    // comparisons read the artifact, never stdout.
-    val fullLine = s"""{"metric":"total","unit":"sec","queries":$qs,"queries_med":$qs,"queries_min":$qmins,"queries_max":$qmaxs,"calibration":${obj(calib.map(r => r._1 -> r._2))},"lifecycle":${obj(lifecycle.map(r => r._1 -> r._2))},"sf":"$sfDir","reps":$reps,"value":$total,"total_min":$totalMin,"total_max":$totalMax,"lifecycle_total":${lifecycle.map(_._2).sum},"noisy":$noisy,"errors":$errs${if (only.isDefined) ",\"only\":true" else ""}}"""
-    // STDOUT is totals-only: the driver keeps just the LAST ~2 kB of
-    // stdout, and ~200 per-query medians are ~8 kB — every round
-    // through r10 the driver archived a truncated, unparseable line
-    // (BENCH_r10 parsed=null) even with scalars-at-end ordering. A
-    // short line survives any tail window. A small headline dict keeps
-    // the contract's `queries` key populated; `queries_file` names the
-    // artifact carrying the complete map.
-    val headlineNames = Seq("search_cosine_topk", "search_dot_topk",
-      "q1_pricing_summary", "q3_shipping_priority", "dedup_minhash_lsh",
-      "ann_ivf_topk", "pipeline_clean_corpus", "events_funnel")
-    val headline = obj(results.filter(r => headlineNames.contains(r._1))
-      .map(r => r._1 -> r._2))
+
+    def walls(xs: Seq[(String, Seq[Rep])]) = xs.map { case (n, rs) => n -> rs.map(_.work.wallS) }
+    def stat(xs: Seq[(String, Seq[Rep])])(f: Seq[Double] => Double) =
+      obj(walls(xs).map { case (n, ws) => n -> f(ws) })
+    val board = walls(results)
+    val qs = stat(results)(median)
+    val lifecycleTotal = walls(lifecycle).map(w => median(w._2)).sum
+    val errs = arr(errors.toSeq.map(str))
+    val onlyTag = if (only.isDefined) ",\"only\":true" else ""
+    val perRep = obj((results ++ calib ++ lifecycle).map { case (n, rs) => n -> record(rs) })
+    // The full record goes to a stable repo file Bench itself writes;
+    // cross-round per-query comparisons read the artifact, never stdout.
+    // Per-query min is the noise floor (what the engine does when the
+    // machine lets it); a max/min spread > 3 flags the rep set as noise.
+    val fullLine = s"""{"metric":"total","unit":"sec","queries":$qs,"queries_med":$qs,"queries_min":${stat(results)(_.min)},"queries_max":${stat(results)(_.max)},"calibration":${stat(calib)(median)},"lifecycle":${stat(lifecycle)(median)},"sf":"$sfDir","reps":$reps,"value":${board.map(w => median(w._2)).sum},"total_min":${board.map(_._2.min).sum},"total_max":${board.map(_._2.max).sum},"lifecycle_total":$lifecycleTotal,"noisy":${arr(board.filter(w => noisy(w._2)).map(w => str(w._1)))},"errors":$errs,"per_rep":$perRep$onlyTag}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       if (only.isDefined) "BENCH_local_only.json" else "BENCH_local_latest.json")
-    val noisyCount = results.count(r => r._4 > 3.0 * math.max(r._3, 1e-9))
-    println(s"""{"metric":"total","unit":"sec","value":$total,"queries":$headline,"queries_file":"$outPath","n_queries":${results.size},"sf":"$sfDir","reps":$reps,"total_min":$totalMin,"total_max":$totalMax,"lifecycle_total":${lifecycle.map(_._2).sum},"noisy_count":$noisyCount,"errors":$errs${if (only.isDefined) ",\"only\":true" else ""}}""")
+    println(summaryLine(board, lifecycleTotal, errors.toSeq, outPath, sfDir, reps,
+      only.isDefined))
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (fullLine + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>

@@ -23,6 +23,15 @@ object PlanDump {
     * work is in the first group, a lazy operator's in the last.
     */
   def capture(spark: SparkSession)(build: => DataFrame): Seq[(String, QueryExecution)] = {
+    val (df, runs) = executions(spark)(build)
+    runs :+ ("result" -> df.queryExecution)
+  }
+
+  /** The value of `body` and every SQL execution it ran, in completion
+    * order, each labelled with its action. The listener bus is drained
+    * before the listener is registered and after the body returns.
+    */
+  def executions[A](spark: SparkSession)(body: => A): (A, Seq[(String, QueryExecution)]) = {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
@@ -32,9 +41,9 @@ object PlanDump {
     TestBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      val df = build
+      val a = body
       TestBus.drain(spark.sparkContext)
-      seen.asScala.toSeq :+ ("result" -> df.queryExecution)
+      (a, seen.asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
   }
 

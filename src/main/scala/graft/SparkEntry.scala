@@ -66,18 +66,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Search.topK(emb(spark, "/root/testdata/sf0.001"), "cosine", 10)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2: the
+    * DataFrame-built queries below, plus every query whose contract form
+    * is its SQL ([[SqlSurface.query]]) — exactly the names that keep a
+    * DataFrame twin in [[SqlSurface.twins]], so SqlSurfaceSpec compares
+    * each SQL-form query with an independent DataFrame build. A `def`:
+    * SqlSurface's SQL strings read this object's vals while SqlSurface
+    * initialises.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+    val built = dataFrameQueries
+    val viaSql = SqlSurface.twins.keySet
+    val clash = built.keySet intersect viaSql
+    require(clash.isEmpty, s"queries both DataFrame-built and SQL-form: ${clash.toSeq.sorted}")
+    built ++ viaSql.map(name => name -> SqlSurface.query(name))
+  }
+
+  private def dataFrameQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.4 search: scan → score → top-k (TakeOrderedAndProject, no
-    // shuffle). Since round 8 the five searches run through the SQL
-    // surface (SqlSurface/Views — SURVEY §1.1's "SQL-reachable"
-    // commitment); SqlSurfaceSpec pins them result- and plan-equal to
-    // the Search.topK DataFrame forms other queries still compose.
-    "search_cosine_topk" -> SqlSurface.query("search_cosine_topk"),
-    "search_dot_topk" -> SqlSurface.query("search_dot_topk"),
-    "search_euclidean_topk" -> SqlSurface.query("search_euclidean_topk"),
-    "search_phi_topk" -> SqlSurface.query("search_phi_topk"),
-    "search_filtered_topk" -> SqlSurface.query("search_filtered_topk"),
+    // shuffle). The five flat searches run as SQL (SqlSurface).
     "knn_join_top3" -> ((s, dir) => Search.knnJoin(emb(s, dir), "cosine", 3, 10)),
     // contrastive-training data mining: per query, the top-5 nearest
     // vectors with a DIFFERENT label (the batch-worthy negatives)
@@ -123,12 +130,6 @@ object SparkEntry {
           round(min(col("norm")), 9).as("min_norm"),
           round(max(col("norm")), 9).as("max_norm"))
         .orderBy(col("band"))),
-    // §2.6 stats (reference exact count-distinct semantics) — SQL form
-    "stats_summary" -> SqlSurface.query("stats_summary"),
-    // §2.9 relational surface: aggregation, join, window, time.
-    // Q1/Q3/Q5 run as SQL (SqlSurface) since round 8.
-    "q1_pricing_summary" -> SqlSurface.query("q1_pricing_summary"),
-    "events_hourly" -> SqlSurface.query("events_hourly"),
     // north-star: dedup suite (documents table)
     "dedup_exact_summary" -> ((s, dir) => Dedup.exactSummary(tbl(s, dir, "documents"))),
     "dedup_ngram_jaccard" -> ((s, dir) =>
@@ -1048,45 +1049,6 @@ object SparkEntry {
       operators.KMeansIndex.searchPersisted(s, path, query, topK = 10, nProbe = 3)
     }),
     // §2.9 relational: multi-join, window, semi/anti, json, audit hash.
-    // Q3/Q5 as SQL with explicit BROADCAST hints matching the DataFrame
-    // forms' broadcast() calls (SqlSurfaceSpec compares both arms).
-    "q3_shipping_priority" -> SqlSurface.query("q3_shipping_priority"),
-    "q5_nation_revenue" -> SqlSurface.query("q5_nation_revenue"),
-    // the two Catalyst subquery-decorrelation shapes (round-7 verdict
-    // item 5): correlated EXISTS → left semi join; correlated scalar
-    // subquery → per-key aggregate joined back. SqlSurfaceSpec pins
-    // the decorrelated plans (no per-row subquery survives).
-    "q4_order_priority" -> SqlSurface.query("q4_order_priority"),
-    "q17_small_qty_revenue" -> SqlSurface.query("q17_small_qty_revenue"),
-    // the remaining two classic decorrelation shapes (r8 continuation):
-    // Q21-style EXISTS + NOT EXISTS on one table (LeftSemi + LeftAnti
-    // with residual inequality conditions) and Q22-style uncorrelated
-    // scalar threshold + NOT EXISTS anti join
-    "q21_returned_alone" -> SqlSurface.query("q21_returned_alone"),
-    "q22_idle_customers" -> SqlSurface.query("q22_idle_customers"),
-    // r8 session-3: the three remaining classic subquery shapes —
-    // correlated MIN-equality (argmin), IN over a HAVING aggregate,
-    // and a NESTED IN — all through the SQL surface, all planned as
-    // decorrelated aggregates + semi joins (SqlSurfaceSpec pins)
-    "q2_min_price_supplier" -> SqlSurface.query("q2_min_price_supplier"),
-    "q18_large_orders" -> SqlSurface.query("q18_large_orders"),
-    "q20_widget_suppliers" -> SqlSurface.query("q20_widget_suppliers"),
-    "q15_top_supplier" -> SqlSurface.query("q15_top_supplier"),
-    "q10_returned_customers" -> SqlSurface.query("q10_returned_customers"),
-    // window-FRAME coverage: partitioned RANGE rolling 7-day window,
-    // lag delta, ntile quartiles — runs as SQL (SqlSurface)
-    "events_rolling" -> SqlSurface.query("events_rolling"),
-    // GROUPING SETS + grouping() flags — the arbitrary-combination
-    // grouping form beyond ROLLUP/CUBE
-    "orders_grouping_sets" -> SqlSurface.query("orders_grouping_sets"),
-    // LATERAL correlated subquery (decorrelates to agg + outer join)
-    "supplier_lateral_stats" -> SqlSurface.query("supplier_lateral_stats"),
-    // FULL OUTER reconciliation over pre-aggregated sides
-    "customer_yoy_recon" -> SqlSurface.query("customer_yoy_recon"),
-    // runs as SQL (SqlSurface, r8 widening): window-function form
-    "top_orders_per_priority" -> SqlSurface.query("top_orders_per_priority"),
-    // runs as SQL (SqlSurface, r8 widening): outer-join aggregation
-    "customer_order_stats" -> SqlSurface.query("customer_order_stats"),
     // the bucketed-layout path as a contract query: both sides are
     // written bucketBy(8, doc_id) external tables, so the join runs
     // WITHOUT a shuffle Exchange (the 100 TB co-location story;
@@ -1272,22 +1234,7 @@ object SparkEntry {
           round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qty_price"),
           round(stddev_pop(col("l_quantity")), 6).as("sd_qty"))
         .orderBy(col("l_returnflag"))),
-    // runs as SQL (SqlSurface, r8 widening): GROUP BY ROLLUP
-    "rollup_orders" -> SqlSurface.query("rollup_orders"),
-    // pivot: day × event-type count matrix (the dashboard crosstab);
-    // the pivoted column set is the FIXED shared constant — a dynamic
-    // pivot would scan once just to discover columns
-    // runs as SQL (SqlSurface, r8 widening): the PIVOT clause; the
-    // pivoted column set stays the FIXED shared constant
-    "events_pivot" -> SqlSurface.query("events_pivot"),
-    // cube: all four (type × day-of-week) subtotal combinations in one
-    // pass — Spark plans the Expand exactly like ROLLUP/GROUPING SETS
-    // runs as SQL (SqlSurface, r8 widening): GROUP BY CUBE
-    "events_cube" -> SqlSurface.query("events_cube"),
-    // runs as SQL (SqlSurface, r8 widening): INTERSECT / EXCEPT
-    "set_ops_nations" -> SqlSurface.query("set_ops_nations"),
     // runs as SQL (SqlSurface, r8 widening): the string function set
-    "string_funcs" -> SqlSurface.query("string_funcs"),
     "events_json_agg" -> ((s, dir) =>
       events(s, dir)
         .groupBy(col("event_type"))
@@ -1295,13 +1242,6 @@ object SparkEntry {
           sum(get_json_object(col("props"), "$.k").cast("long")).as("sum_k"),
           sum(col("value").cast(DecimalType(18, 6))).cast("double").as("sum_value"))
         .orderBy(col("event_type"))),
-    // Scale-safe shape: two order-independent lane folds (bit_xor +
-    // DECIMAL(38) sum over disjoint 60-bit sha256 slices — the same lanes
-    // the engine maintains incrementally, VectorFieldDB.idHashCol1/2)
-    // hashed together. Constant aggregation state per partition; the old
-    // sort_array(collect_list(id)) shape held every id in ONE buffer and
-    // cannot survive a 100× store. SQL form since round 8.
-    "membership_hash" -> SqlSurface.query("membership_hash"),
     // HOPPING (sliding) windows — the remaining time-window shape
     // (tumbling = events_hourly, session = events_sessions): 2-hour
     // windows sliding by 1 hour, so every event lands in exactly TWO

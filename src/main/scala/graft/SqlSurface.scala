@@ -4775,11 +4775,20 @@ object SqlSurface {
     (s, dir) => { Views.register(s, dir); s.sql(q) }
   }
 
-  /** The DataFrame formulations the SQL strings re-express — retained
-    * as the comparison arm of SqlSurfaceSpec (searches delegate to the
-    * [[Search]] operators, which other contract queries still use).
+  /** The DataFrame form of a SqlSurface query, the comparison arm of
+    * SqlSurfaceSpec: its twin where the contract form is the SQL, else
+    * the contract query itself.
     */
-  val dataFrameForm: Map[String, (SparkSession, String) => DataFrame] = {
+  def dataFrameForm(name: String): (SparkSession, String) => DataFrame =
+    twins.getOrElse(name, SparkEntry.queries(name))
+
+  /** DataFrame twins of the queries whose contract form is the SQL
+    * ([[SparkEntry.queries]] runs exactly these names through [[query]]),
+    * so their parity check compares two independent builds (searches
+    * delegate to the [[Search]] operators, which other contract queries
+    * still use).
+    */
+  val twins: Map[String, (SparkSession, String) => DataFrame] = {
     def emb(s: SparkSession, dir: String) = sources.Tables.embeddings(s, dir)
     def tbl(s: SparkSession, dir: String, name: String) =
       sources.Tables.table(s, dir, name)
@@ -4796,6 +4805,12 @@ object SqlSurface {
           countDistinct(col("vec_id") % 144000L).as("n_glyph_ids"),
           countDistinct(col("vec_id") % 10L).as("n_contexts"),
           max(size(col("embedding"))).cast("long").as("dim"))),
+      // Scale-safe shape: two order-independent lane folds (bit_xor +
+      // DECIMAL(38) sum over disjoint 60-bit sha256 slices — the same
+      // lanes the engine maintains incrementally, VectorFieldDB.idHashCol1/2)
+      // hashed together. Constant aggregation state per partition; the old
+      // sort_array(collect_list(id)) shape held every id in ONE buffer and
+      // cannot survive a 100× store.
       "membership_hash" -> ((s, dir) =>
         emb(s, dir)
           .select(
@@ -5141,181 +5156,6 @@ object SqlSurface {
           .filter(col("total_revenue") === col("mx"))
           .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
           .orderBy(col("s_suppkey"))
-      }),
-      // the operator forms the contract queries run — parity proves the
-      // SQL text reaches the same semantics
-      "scd2_history" -> SparkEntry.queries("scd2_history"),
-      "events_chi2" -> SparkEntry.queries("events_chi2"),
-      "interval_overlap" -> SparkEntry.queries("interval_overlap"),
-      // pipeline flagships: parity against the contract operator forms
-      "dedup_groups" -> SparkEntry.queries("dedup_groups"),
-      "bm25_search" -> SparkEntry.queries("bm25_search"),
-      "doc_quality" -> SparkEntry.queries("doc_quality"),
-      "table_profile" -> SparkEntry.queries("table_profile"),
-      "event_funnel" -> SparkEntry.queries("event_funnel"),
-      "k_anonymity" -> SparkEntry.queries("k_anonymity"),
-      "l_diversity" -> SparkEntry.queries("l_diversity"),
-      "t_closeness" -> SparkEntry.queries("t_closeness"),
-      "user_retention" -> SparkEntry.queries("user_retention"),
-      "dedup_exact_summary" -> SparkEntry.queries("dedup_exact_summary"),
-      "events_sessions" -> SparkEntry.queries("events_sessions"),
-      "lang_id" -> SparkEntry.queries("lang_id"),
-      "dup_size_histogram" -> SparkEntry.queries("dup_size_histogram"),
-      "funnel_summary" -> SparkEntry.queries("funnel_summary"),
-      "funnel_wilson" -> SparkEntry.queries("funnel_wilson"),
-      "text_stats" -> SparkEntry.queries("text_stats"),
-      "token_counts" -> SparkEntry.queries("token_counts"),
-      "doc_digests" -> SparkEntry.queries("doc_digests"),
-      "sample_split" -> SparkEntry.queries("sample_split"),
-      "value_histogram" -> SparkEntry.queries("value_histogram"),
-      "equidepth_histogram" -> SparkEntry.queries("equidepth_histogram"),
-      "vocab_coverage" -> SparkEntry.queries("vocab_coverage"),
-      "scd2_lookup" -> SparkEntry.queries("scd2_lookup"),
-      "char_entropy" -> SparkEntry.queries("char_entropy"),
-      "readability" -> SparkEntry.queries("readability"),
-      "dq_freshness" -> SparkEntry.queries("dq_freshness"),
-      "value_winsorize" -> SparkEntry.queries("value_winsorize"),
-      "calendar_gaps" -> SparkEntry.queries("calendar_gaps"),
-      "benford_digits" -> SparkEntry.queries("benford_digits"),
-      "knn_join_top3" -> SparkEntry.queries("knn_join_top3"),
-      "pii_scrub" -> SparkEntry.queries("pii_scrub"),
-      "decontaminate" -> SparkEntry.queries("decontaminate"),
-      "doc_repetition" -> SparkEntry.queries("doc_repetition"),
-      "events_decayed" -> SparkEntry.queries("events_decayed"),
-      "tfidf_top_terms" -> SparkEntry.queries("tfidf_top_terms"),
-      "time_to_convert" -> SparkEntry.queries("time_to_convert"),
-      "ab_test" -> SparkEntry.queries("ab_test"),
-      "ab_power" -> SparkEntry.queries("ab_power"),
-      "bh_fdr" -> SparkEntry.queries("bh_fdr"),
-      "ab_cuped" -> SparkEntry.queries("ab_cuped"),
-      "rater_agreement" -> SparkEntry.queries("rater_agreement"),
-      "events_anomaly" -> SparkEntry.queries("events_anomaly"),
-      "active_users_7d" -> SparkEntry.queries("active_users_7d"),
-      "session_transitions" -> SparkEntry.queries("session_transitions"),
-      "markov_accuracy" -> SparkEntry.queries("markov_accuracy"),
-      "survival_churn" -> SparkEntry.queries("survival_churn"),
-      "pareto_frontier" -> SparkEntry.queries("pareto_frontier"),
-      "attribution_last_touch" -> SparkEntry.queries("attribution_last_touch"),
-      "stats_advanced" -> SparkEntry.queries("stats_advanced"),
-      "events_json_agg" -> SparkEntry.queries("events_json_agg"),
-      "events_hopping" -> SparkEntry.queries("events_hopping"),
-      "session_paths" -> SparkEntry.queries("session_paths"),
-      "class_balance" -> SparkEntry.queries("class_balance"),
-      "doclen_outliers" -> SparkEntry.queries("doclen_outliers"),
-      "embedding_normalize" -> SparkEntry.queries("embedding_normalize"),
-      "embedding_quantize" -> SparkEntry.queries("embedding_quantize"),
-      "embedding_quantize_codes" -> SparkEntry.queries("embedding_quantize_codes"),
-      "embedding_drift" -> SparkEntry.queries("embedding_drift"),
-      "langid_confusion" -> SparkEntry.queries("langid_confusion"),
-      "quality_buckets" -> SparkEntry.queries("quality_buckets"),
-      "doc_novelty" -> SparkEntry.queries("doc_novelty"),
-      "source_overlap" -> SparkEntry.queries("source_overlap"),
-      "collocations_pmi" -> SparkEntry.queries("collocations_pmi"),
-      "token_percentiles" -> SparkEntry.queries("token_percentiles"),
-      "basket_lift" -> SparkEntry.queries("basket_lift"),
-      "asof_error_click" -> SparkEntry.queries("asof_error_click"),
-      "range_join_views" -> SparkEntry.queries("range_join_views"),
-      "dedup_keep_canonical" -> SparkEntry.queries("dedup_keep_canonical"),
-      "normalized_dedup" -> SparkEntry.queries("normalized_dedup"),
-      "dedup_ngram_jaccard" -> SparkEntry.queries("dedup_ngram_jaccard"),
-      "dedup_containment" -> SparkEntry.queries("dedup_containment"),
-      "dedup_idf_cosine" -> SparkEntry.queries("dedup_idf_cosine"),
-      "dedup_idf_rank" -> SparkEntry.queries("dedup_idf_rank"),
-      "cross_corpus_pairs" -> SparkEntry.queries("cross_corpus_pairs"),
-      "pipeline_decontaminate" -> SparkEntry.queries("pipeline_decontaminate"),
-      "eval_contamination" -> SparkEntry.queries("eval_contamination"),
-      "contamination_drift" -> SparkEntry.queries("contamination_drift"),
-      "contamination_by_source" -> SparkEntry.queries("contamination_by_source"),
-      "embedding_dispersion" -> SparkEntry.queries("embedding_dispersion"),
-      "dedup_token_savings" -> SparkEntry.queries("dedup_token_savings"),
-      "dedup_savings_drift" -> SparkEntry.queries("dedup_savings_drift"),
-      "source_weighted_jaccard_icws" ->
-        SparkEntry.queries("source_weighted_jaccard_icws"),
-      "source_weighted_containment" ->
-        SparkEntry.queries("source_weighted_containment"),
-      "containment_incremental" ->
-        SparkEntry.queries("containment_incremental"),
-      "containment_incremental_batch" ->
-        SparkEntry.queries("containment_incremental_batch"),
-      "ngram_diversity" -> SparkEntry.queries("ngram_diversity"),
-      "zipf_alpha" -> SparkEntry.queries("zipf_alpha"),
-      "profile_drift" -> SparkEntry.queries("profile_drift"),
-      "dedup_sorted_neighborhood" ->
-        SparkEntry.queries("dedup_sorted_neighborhood"),
-      "dup_evidence" -> SparkEntry.queries("dup_evidence"),
-      "dedup_keep_best" -> SparkEntry.queries("dedup_keep_best"),
-      "dup_triangles" -> SparkEntry.queries("dup_triangles"),
-      "ivm_source_stats" -> SparkEntry.queries("ivm_source_stats"),
-      "doc_surprisal" -> SparkEntry.queries("doc_surprisal"),
-      "bigram_lm" -> SparkEntry.queries("bigram_lm"),
-      "boilerplate_removal" -> SparkEntry.queries("boilerplate_removal"),
-      "dsir_weights" -> SparkEntry.queries("dsir_weights"),
-      "weighted_sample" -> SparkEntry.queries("weighted_sample"),
-      "stratified_sample" -> SparkEntry.queries("stratified_sample"),
-      "mixture_sample" -> SparkEntry.queries("mixture_sample"),
-      "mixture_upsample" -> SparkEntry.queries("mixture_upsample"),
-      "curriculum_order" -> SparkEntry.queries("curriculum_order"),
-      "leakage_safe_split" -> SparkEntry.queries("leakage_safe_split"),
-      "doc_chunks" -> SparkEntry.queries("doc_chunks"),
-      "fuzzy_match" -> SparkEntry.queries("fuzzy_match"),
-      "fuzzy_match_jw" -> SparkEntry.queries("fuzzy_match_jw"),
-      "fuzzy_match_eval" -> SparkEntry.queries("fuzzy_match_eval"),
-      "phi_bands" -> SparkEntry.queries("phi_bands"),
-      "dq_expectations" -> SparkEntry.queries("dq_expectations"),
-      "source_divergence" -> SparkEntry.queries("source_divergence"),
-      "span_dedup" -> SparkEntry.queries("span_dedup"),
-      "bm25_ndcg" -> SparkEntry.queries("bm25_ndcg"),
-      "bm25_mrr" -> SparkEntry.queries("bm25_mrr"),
-      "hybrid_search_rrf" -> SparkEntry.queries("hybrid_search_rrf"),
-      "corpus_report" -> SparkEntry.queries("corpus_report"),
-      "corpus_diff" -> SparkEntry.queries("corpus_diff"),
-      "scd2_merge" -> SparkEntry.queries("scd2_merge"),
-      "stream_dedup_ingest" -> SparkEntry.queries("stream_dedup_ingest"),
-      "stream_click_error" -> SparkEntry.queries("stream_click_error"),
-      "stream_trending" -> SparkEntry.queries("stream_trending"),
-      "hard_negatives" -> SparkEntry.queries("hard_negatives"),
-      "triplet_mining" -> SparkEntry.queries("triplet_mining"),
-      "dedup_minhash_lsh" -> SparkEntry.queries("dedup_minhash_lsh"),
-      "lsh_recall_curve" -> SparkEntry.queries("lsh_recall_curve"),
-      "lsh_recall" -> SparkEntry.queries("lsh_recall"),
-      "minhash_estimate_error" -> SparkEntry.queries("minhash_estimate_error"),
-      "dedup_simhash" -> SparkEntry.queries("dedup_simhash"),
-      "dedup_simhash_pairs" -> SparkEntry.queries("dedup_simhash_pairs"),
-      "doc_sketch" -> SparkEntry.queries("doc_sketch"),
-      "cluster_centroid_dims" -> SparkEntry.queries("cluster_centroid_dims"),
-      "cluster_inertia_by_label" -> SparkEntry.queries("cluster_inertia_by_label"),
-      "mrl_truncation_recall" -> SparkEntry.queries("mrl_truncation_recall"),
-      "pack_windows" -> SparkEntry.queries("pack_windows"),
-      "token_budget" -> SparkEntry.queries("token_budget"),
-      "dedup_incremental" -> SparkEntry.queries("dedup_incremental"),
-      "layout_zorder" -> SparkEntry.queries("layout_zorder"),
-      "embedding_project" -> SparkEntry.queries("embedding_project"),
-      "search_hamming_rerank" -> SparkEntry.queries("search_hamming_rerank"),
-      "ann_lsh_pairs" -> SparkEntry.queries("ann_lsh_pairs"),
-      "dedup_embedding_pairs" -> SparkEntry.queries("dedup_embedding_pairs"),
-      "dedup_embedding_exact_topn_baseline" ->
-        SparkEntry.queries("dedup_embedding_exact_topn_baseline"),
-      "heavy_hitters" -> SparkEntry.queries("heavy_hitters"),
-      "cms_estimate" -> SparkEntry.queries("cms_estimate"),
-      "key_skew" -> SparkEntry.queries("key_skew"),
-      "join_size_estimate" -> SparkEntry.queries("join_size_estimate"),
-      "bootstrap_ci" -> SparkEntry.queries("bootstrap_ci"),
-      "bootstrap_diff_ci" -> SparkEntry.queries("bootstrap_diff_ci"),
-      "distinct_estimate" -> SparkEntry.queries("distinct_estimate"),
-      "quantile_estimate" -> SparkEntry.queries("quantile_estimate"),
-      "group_quantile_estimate" ->
-        SparkEntry.queries("group_quantile_estimate"),
-      "audience_overlap_estimate" ->
-        SparkEntry.queries("audience_overlap_estimate"),
-      "mutual_information" -> SparkEntry.queries("mutual_information"),
-      "psi_drift" -> SparkEntry.queries("psi_drift"),
-      "drift_ks" -> SparkEntry.queries("drift_ks"),
-      "cusum_changepoint" -> SparkEntry.queries("cusum_changepoint"),
-      "theilsen_trend" -> SparkEntry.queries("theilsen_trend"),
-      "join_advisor" -> SparkEntry.queries("join_advisor"),
-      "seasonality_strength" -> SparkEntry.queries("seasonality_strength"),
-      "forecast_eval" -> SparkEntry.queries("forecast_eval"),
-      "rolling_anomaly" -> SparkEntry.queries("rolling_anomaly"),
-      "dow_adjusted_anomaly" -> SparkEntry.queries("dow_adjusted_anomaly"))
+      }))
   }
 }

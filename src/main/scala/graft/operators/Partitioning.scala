@@ -145,26 +145,25 @@ object Partitioning {
     * there would be an extra full shuffle of the base data — so the
     * repartition is gated on the input's width.
     *
-    * Width probe, cheapest-first: an explicit caller hint wins; next the
-    * input-file count of the underlying file source — a metadata lookup
-    * on the already-listed FileIndex that costs no planning. Only when
-    * the file count is BELOW target (the ambiguous case: a few large
-    * splittable parquet files carry many row-group splits, and non-file
-    * inputs report zero files even when already wide) does the probe pay
-    * for one physical planning via `df.rdd.getNumPartitions` to read the
-    * true partition count. So the expensive probe runs exactly where the
-    * cheap one can't rule out a needless full reshuffle of the base
-    * data, and a genuinely narrow input costs one extra planning before
-    * the repartition it needs anyway.
+    * Width probe, cheapest first: the input-file count of the underlying
+    * file source — a metadata lookup on the already-listed FileIndex
+    * that costs no planning. Only when the file count is BELOW target
+    * (the ambiguous case: a few large splittable parquet files carry
+    * many row-group splits, and non-file inputs report zero files even
+    * when already wide) does the probe pay for one physical planning via
+    * `df.rdd.getNumPartitions` to read the true partition count. So the
+    * expensive probe runs exactly where the cheap one can't rule out a
+    * needless full reshuffle of the base data, and a genuinely narrow
+    * input costs one extra planning before the repartition it needs
+    * anyway.
     */
-  def spread(df: DataFrame, widthHint: Int = -1): DataFrame = {
+  def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val wide =
-      if (widthHint > 0) widthHint >= target
       // a streaming frame can't be probed (`.rdd` forces a batch
       // physical plan and throws); treat as narrow — the repartition
       // is a plan node the micro-batch planner handles normally
-      else if (df.isStreaming) false
+      if (df.isStreaming) false
       else df.inputFiles.length >= target || df.rdd.getNumPartitions >= target
     if (wide) df else df.repartition(target)
   }

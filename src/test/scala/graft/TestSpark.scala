@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites. */
@@ -20,16 +16,6 @@ object TestSpark {
     s
   }
 
-  /** Jobs the body starts, counted by a listener between two drains. */
-  def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    TestBus.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; TestBus.drain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
+  /** Jobs the body starts, read from its [[Work]] measurement. */
+  def jobsOf(body: => Unit): Int = Work.of(spark)(body)._2.jobs.toInt
 }
