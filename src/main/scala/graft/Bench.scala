@@ -74,7 +74,7 @@ object Bench {
 
   val headlineNames = Seq("search_cosine_topk", "search_dot_topk",
     "q1_pricing_summary", "q3_shipping_priority", "dedup_minhash_lsh",
-    "ann_ivf_topk", "pipeline_clean_corpus", "events_funnel")
+    "ann_ivf_topk", "pipeline_clean_corpus", "funnel_summary")
 
   /** The stdout line. Its reader keeps just the LAST ~2 kB of stdout,
     * and ~200 per-query medians are ~8 kB — every round through r10

@@ -87,12 +87,11 @@ object Clustering {
   def withInertia(emb: DataFrame, key: Column, idCol: Column,
       withMembers: Boolean = true): DataFrame = {
     // The centroid table feeds two consumers (the broadcast join-back and
-    // the final output join) and exchange reuse does NOT deduplicate them
-    // (verified: 3 parquet scans, 0 ReusedExchange without the cache) —
-    // without persist the full scan+shuffle+VecMeanAgg pass runs twice.
-    // The table is small (one row per cluster), so caching it is the
-    // two-pass-aggregation pattern that holds at any input scale.
-    val cent = centroids(emb, key, idCol, withMembers).cache()
+    // the final output join), and exchange reuse does not deduplicate
+    // them (3 parquet scans, 0 ReusedExchange), so the returned lazy
+    // plan runs the scan+shuffle+VecMeanAgg pass twice: one job fewer
+    // per call than caching it in a scope and checkpointing the result.
+    val cent = centroids(emb, key, idCol, withMembers)
     val joined = emb.withColumn("cluster_key", key)
       .join(broadcast(cent.select(col("cluster_key"), col("centroid"))), "cluster_key")
     val inertia = joined.groupBy(col("cluster_key"))

@@ -43,24 +43,23 @@ object CorpusPipeline {
   def clean(docs: DataFrame, threshold: Double = 0.5): Cleaned = {
     val base = docs.select(col("doc_id"), col("source"), col("text"))
 
-    // stage 1: quality gate. Cached: consumed by its own count AND the
-    // whole downstream chain — Spark has no cross-branch exchange
-    // reuse, so without the cache each consumer re-runs the quality
-    // aggregations from the scan. Post-filter survivors only, so the
-    // cached footprint is bounded by the CLEAN fraction of the corpus.
+    // stage 1: quality gate. Each stage's survivors are checkpointed as
+    // a doc_id set (one narrow row per doc, never the text), so every
+    // later stage and report reads the gate's verdict instead of
+    // re-running its aggregations from the scan.
     val kept = TextAnalysis.qualityFlags(base)
       .filter(col("keep")).select(col("doc_id"))
-    val afterQuality = base.join(kept, Seq("doc_id")).cache()
+      .localCheckpoint(true)
+    val afterQuality = base.join(kept, Seq("doc_id"))
 
-    // stage 2: exact dedup, canonical keep (lowest doc_id per digest).
-    // Cached for the same reason: three consumers (minhash signatures,
-    // the anti-join probe side, its own count).
+    // stage 2: exact dedup, canonical keep (lowest doc_id per digest)
     val hashed = afterQuality.withColumn("h", sha2(col("text"), 256))
     val canonical = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("keep_id"))
-    val afterExact = hashed.join(canonical, "h")
+    val exactIds = hashed.join(canonical, "h")
       .filter(col("doc_id") === col("keep_id"))
-      .select(col("doc_id"), col("source"), col("text"))
-      .cache()
+      .select(col("doc_id"))
+      .localCheckpoint(true)
+    val afterExact = base.join(exactIds, Seq("doc_id"))
 
     // stage 3: near-dup removal — resolve pairs into components, keep
     // only each component's minimum id

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.VectorOps
 
 /** Deduplication operators for large-scale training-data pipelines.
@@ -177,20 +176,17 @@ object Dedup {
     * sets join back per side (per-row arrays bounded by document
     * length) and the evidence is array_intersect + sort + slice inside
     * one codegen projection — no extra shuffle beyond the two joins.
+    * The evidence table is returned checkpointed.
     */
-  def dupEvidence(docs: DataFrame, threshold: Double, k: Int = 5): DataFrame = {
+  def dupEvidence(docs: DataFrame, threshold: Double, k: Int = 5): DataFrame = Scoped { s =>
     // ONE shingling pass: the same per-doc shingle frame feeds the LSH
     // candidates, the Jaccard verification AND the evidence joins —
     // shingling is the dominant cost, re-deriving it per consumer
-    // would double the whole operator. localCheckpoint (eager), not
-    // cache(): the blocks die with this frame instead of parking in
-    // the LRU across bench reps (the bigramLm discipline)
-    val docSh = Partitioning.spread(docs)
-      .select(col("doc_id"), shingleArray(col("text")).as("sh"))
-      .filter(size(col("sh")) >= 1)
-      .localCheckpoint()
-    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4),
-      _.cache())
+    // would double the whole operator. A local checkpoint, not a
+    // cache: the checkpointed result cuts the lineage, so the blocks
+    // are the ContextCleaner's once the call returns
+    val docSh = docShingles(docs, 3).localCheckpoint()
+    val candidates = bandedCandidates(s, bandKeysOf(docSh, "doc_id", 16, 4))
     // unsorted verify core: the evidence joins + the contract sort sit
     // above, so an intermediate pair sort would only be destroyed
     val pairs = verifyPairsCore(candidates, docSh, threshold)
@@ -210,6 +206,7 @@ object Dedup {
         size(col("__shared")).cast("long").as("n_shared"),
         concat_ws("|", slice(col("__shared"), 1, k)).as("evidence"))
       .orderBy(col("doc_a"), col("doc_b"))
+      .localCheckpoint(true)
   }
 
   /** Quality-aware canonical selection over resolved near-dup groups:
@@ -276,11 +273,6 @@ object Dedup {
           i => concat_ws(" ", slice(col("ws"), i * n + 1, lit(n)))))
           .as(Seq("block_idx", "block")))
       .withColumn("bh", md5(col("block")))
-      // feeds the canonical-pick aggregate AND the keep join — no
-      // cross-branch exchange reuse, so uncached the explode + md5 pass
-      // over the corpus runs twice; MEMORY_AND_DISK spills when the
-      // block table outgrows memory (same rationale as tfidf's tf cache)
-      .cache()
     val canon = blocks.groupBy(col("bh"))
       .agg(min(struct(col("doc_id"), col("block_idx"))).as("first"))
     blocks.join(canon, "bh")
@@ -309,7 +301,7 @@ object Dedup {
   /** Pairwise shingle-set Jaccard ≥ threshold — an EXACT set-similarity
     * join, sub-quadratic via prefix filtering (Bayardo et al.'s AllPairs
     * / PPJoin candidate scheme; also the reference's semantics for
-    * n-gram dedup). Default path (`maxDf = None`):
+    * n-gram dedup):
     *
     *  1. order every document's distinct shingles by the global
     *     (df asc, shingle asc) total order — rarest first, so corpus
@@ -326,13 +318,9 @@ object Dedup {
     * At t=0.5 the prefix is ~half of each set, cutting candidate pairs
     * ~4× on the test corpus with zero recall loss (1.13M → ~290k at
     * sf0.1); on a boilerplate-heavy web corpus the df-ordering is what
-    * keeps the join sub-quadratic. `maxDf = Some(cut)` additionally
-    * drops shingles with df > cut before indexing — a lossy belt-and-
-    * braces guard for adversarial corpora (recall then lost only for
-    * pairs whose every shared shingle is boilerplate); the guarded
-    * branch generates candidates from ALL surviving shingles, not
-    * prefixes, preserving its round-2 semantics (DedupSpec pins
-    * guarded == exact on the test corpus).
+    * keeps the join sub-quadratic. The pair table is returned
+    * checkpointed; the shingle frame and the rarest-first ordering are
+    * cached for the call only ([[Scoped]]).
     */
   /** FP-conservative slack for threshold·count arithmetic: `t·n` in IEEE
     * double can land an ulp ABOVE the exact rational (0.55·100 =
@@ -470,9 +458,9 @@ object Dedup {
     // bigramLm/dupEvidence checkpoint discipline is for BOUNDED
     // frames — model tables, one-row-per-doc aggregates — never an
     // exploded token stream). `sorted` below is the expensive
-    // aggregate with three consumers: cache() — EVICTABLE under
-    // memory pressure, and the bench/probe clearCache hygiene already
-    // prevents blocks parking across reps.
+    // aggregate with three consumers; the returned plan caches none of
+    // it (the contract query at sf0.001: 18 jobs per call, 24 with
+    // `sorted` cached and the result checkpointed).
     val inv = shingles(docs, n)
     val dfAgg = inv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     val sorted = inv.join(dfAgg, "shingle")
@@ -484,7 +472,6 @@ object Dedup {
       .withColumn("p",
         (col("n_sh") - ceil(lit(threshold - RoundHalfWidth) * col("n_sh")
           - lit(ThresholdEps)) + 1).cast("int"))
-      .cache()
     // each prefix occurrence of a shingle with document frequency df
     // contributes df candidate rows — Σ df over this frame IS the join
     // mass; the sentinel rides the frame the candidate join consumes
@@ -1239,7 +1226,7 @@ object Dedup {
     * starts from: (doc_id, sh) with empty-shingle docs dropped.
     * Spread first — single-file local sources arrive as one partition
     * and the UDF-heavy shingling would otherwise start single-threaded.
-    * Callers own the cache decision: each public operator caches ONE
+    * Callers own the cache decision: each scoped operator caches ONE
     * of these; [[lshRecall]] caches one and shares it across BOTH of
     * its sides instead of letting each side scan the corpus again.
     */
@@ -1248,34 +1235,28 @@ object Dedup {
       .select(col("doc_id"), shingleArray(col("text"), n).as("sh"))
       .filter(size(col("sh")) >= 1)
 
-  /** Prefix-filtered exact-Jaccard pair core over a prepared
+  /** Prefix-filtered exact-Jaccard pair core over a CACHED
     * [[docShingles]] frame, UNSORTED — see [[ngramJaccardPairs]] for
-    * semantics and the scale argument. It caches through `cache`: the
-    * caller's [[Scoped]] scope, or a plain `.cache()` for a lazy
-    * operator.
+    * semantics and the scale argument. Its one cache belongs to the
+    * caller's scope, which must outlive every read of the result.
     */
-  private def ngramJaccardCore(docSh: DataFrame, threshold: Double,
-      cache: DataFrame => DataFrame): DataFrame = {
+  private def ngramJaccardCore(s: Scoped, docSh: DataFrame,
+      threshold: Double): DataFrame = {
     // exact via prefix filtering: rarest-first order, prefix-only index.
     // inv feeds the df aggregation and the ordering join — the branches
-    // cannot share an exchange (one has a partial aggregate below it).
-    // Persistence is CALLER-SHAPED, measured on the 200k growth lane
-    // (round-13 A/Bs on identical disk state): standalone, caching the
-    // exploded stream beats re-deriving it per branch (1.12 vs 1.84 per
-    // pair) — but under lshRecall, which already pins the shared docSh
-    // frame AND runs the whole LSH side, adding the inv cache tips the
-    // memory balance the other way (1.30 vs 1.01 per pair), so over a
-    // cached docSh the explode is re-derived from it. Evictable cache()
-    // either way, never localCheckpoint (the round-12 OOM lesson).
-    val inv0 = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-    val inv =
-      if (docSh.storageLevel == StorageLevel.NONE) cache(inv0) else inv0
+    // cannot share an exchange (one has a partial aggregate below it),
+    // so the explode is re-derived per branch from the cached docSh:
+    // under lshRecall an extra inv cache tipped the memory balance the
+    // wrong way (round-13 A/B on the 200k growth lane: 1.30 vs 1.01
+    // per pair). Evictable cache(), never localCheckpoint (the
+    // round-12 OOM lesson).
+    val inv = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val dfAgg = inv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
     // one row per doc: shingles sorted by the global (df, shingle)
     // order + prefix length; cached — it feeds the prefix index and
     // both sides of the verify join (materialized columns are exactly
     // what all three consumers read, so nothing is over-computed)
-    val sorted = cache(inv.join(dfAgg, "shingle")
+    val sorted = s.cache(inv.join(dfAgg, "shingle")
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("ds"))
       .select(col("doc_id"),
@@ -1305,30 +1286,11 @@ object Dedup {
     verifyPairsCore(sized, sorted.select(col("doc_id"), col("sh")), threshold)
   }
 
-  def ngramJaccardPairs(docs: DataFrame, threshold: Double, n: Int = 3,
-                        maxDf: Option[Int] = None): DataFrame = maxDf match {
-    case None =>
-      // docSh is NOT cached here: the core's cached inv is its only
-      // consumer (the verify reads `sorted`), so a cache would be one
-      // wasted materialization; lshRecall caches the frame it SHARES.
-      // The core's caches stay session-lived: the returned plan reads them
-      ngramJaccardCore(docShingles(docs, n), threshold, _.cache())
-        .orderBy(col("doc_a"), col("doc_b"))
-    case Some(dfCut) =>
-      // heavy-hitter-guarded: candidates only from shingles with df ≤
-      // cut (a boilerplate shingle would contribute df² join rows), then
-      // exact Jaccard over the candidates' full shingle arrays — recall
-      // is lost only for pairs whose every shared shingle is boilerplate
-      val docSh = docShingles(docs, n).cache()
-      val inv = docSh.select(col("doc_id"), explode(col("sh")).as("shingle"))
-      val rare = inv.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= dfCut).select("shingle")
-      val rareInv = inv.join(rare, "shingle")
-      val candidates = rareInv.as("a").join(rareInv.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      verifyPairs(candidates, docSh, threshold)
+  def ngramJaccardPairs(docs: DataFrame, threshold: Double,
+      n: Int = 3): DataFrame = Scoped { s =>
+    ngramJaccardCore(s, s.cache(docShingles(docs, n)), threshold)
+      .orderBy(col("doc_a"), col("doc_b"))
+      .localCheckpoint(true)
   }
 
   /** Blocked sorted-neighborhood candidate generation (Hernández &
@@ -1473,13 +1435,14 @@ object Dedup {
     * only — the n² non-candidate space is exactly what LSH exists to
     * skip, and absent pairs estimate ≈ 0 by construction. n_match/k is
     * a dyadic rational and both divisions are single IEEE ops, so the
-    * error column is bit-portable across engines.
+    * error column is bit-portable across engines. The table is
+    * returned checkpointed; the shingle frame and the band index are
+    * cached for the call only.
     */
   def minhashEstimateError(docs: DataFrame, k: Int = 16,
-      bands: Int = 4): DataFrame = {
-    val docSh = docShingles(docs, 3).cache()
-    val candidates = bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands),
-      _.cache())
+      bands: Int = 4): DataFrame = Scoped { s =>
+    val docSh = s.cache(docShingles(docs, 3))
+    val candidates = bandedCandidates(s, bandKeysOf(docSh, "doc_id", k, bands))
     val sigs = docSh.select(col("doc_id"), minhashSigUdf(k)(col("sh")).as("sig"))
     val est = aggregate(
       zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
@@ -1496,18 +1459,23 @@ object Dedup {
         round(col("ex_raw"), 6).as("exact_jaccard"),
         round(abs(col("est_raw") - col("ex_raw")), 6).as("abs_err"))
       .orderBy(col("doc_a"), col("doc_b"))
+      .localCheckpoint(true)
   }
 
   /** MinHash-LSH near-dup pairs: k=16 signature, 4 bands × 4 rows.
     * Candidates = pairs sharing any band digest (tiny (doc, band, key)
     * self-join); verified with exact Jaccard over the candidates' shingle
     * arrays only. Signatures are computed per-row — the only shuffles are
-    * the candidate join and the verification join.
+    * the candidate join and the verification join. The pair table is
+    * returned checkpointed; the shingle frame and the band index are
+    * cached for the call only ([[Scoped]]).
     */
   def minhashLshPairs(docs: DataFrame, threshold: Double,
-                      k: Int = 16, bands: Int = 4): DataFrame =
-    minhashLshPairsCore(docs, threshold, k, bands)
+                      k: Int = 16, bands: Int = 4): DataFrame = Scoped { s =>
+    minhashLshCore(s, s.cache(docShingles(docs, 3)), threshold, k, bands)
       .orderBy(col("doc_a"), col("doc_b"))
+      .localCheckpoint(true)
+  }
 
   /** [[minhashLshPairs]] without the readout sort — the pair-family
     * composition core (same discipline as [[verifyPairsCore]]): a
@@ -1515,13 +1483,16 @@ object Dedup {
     * (components, PageRank, triangles, histograms) destroys any order,
     * so feeding it the sorted public form pays a range exchange + sort
     * — and a range-partitioner SAMPLING pass over the whole verify
-    * chain — for nothing. Row set is identical to [[minhashLshPairs]].
+    * chain — for nothing. Row set is identical to [[minhashLshPairs]],
+    * and it is returned checkpointed in the same way.
     */
   def minhashLshPairsCore(docs: DataFrame, threshold: Double,
-                          k: Int = 16, bands: Int = 4): DataFrame =
+                          k: Int = 16, bands: Int = 4): DataFrame = Scoped { s =>
     // small single-file inputs arrive as one partition — docShingles
     // spreads the hash-heavy signature computation across cores first
-    minhashLshCore(docShingles(docs, 3).cache(), threshold, k, bands, _.cache())
+    minhashLshCore(s, s.cache(docShingles(docs, 3)), threshold, k, bands)
+      .localCheckpoint(true)
+  }
 
   /** Within-corpus candidate pairs from a band index self-join. The
     * band index is CACHED first: a self-join evaluates its subtree
@@ -1533,12 +1504,11 @@ object Dedup {
     * ~4-rows/doc (long, int, hex32) frame both sides read; the join
     * strategy stays planner-chosen, so at 100 TB (band index far over
     * the broadcast threshold) the same code plans the shuffle join
-    * with AQE skew handling. The band index is cached through `cache`,
-    * as in [[ngramJaccardCore]].
+    * with AQE skew handling. The band index is cached in the caller's
+    * scope, as in [[ngramJaccardCore]].
     */
-  private def bandedCandidates(banded0: DataFrame,
-      cache: DataFrame => DataFrame): DataFrame = {
-    val banded = cache(banded0)
+  private def bandedCandidates(s: Scoped, banded0: DataFrame): DataFrame = {
+    val banded = s.cache(banded0)
     banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.band_key") === col("y.band_key") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -1546,10 +1516,10 @@ object Dedup {
       .distinct()
   }
 
-  private def minhashLshCore(docSh: DataFrame, threshold: Double,
-      k: Int, bands: Int, cache: DataFrame => DataFrame): DataFrame =
+  private def minhashLshCore(s: Scoped, docSh: DataFrame, threshold: Double,
+      k: Int, bands: Int): DataFrame =
     verifyPairsCore(
-      bandedCandidates(bandKeysOf(docSh, "doc_id", k, bands), cache),
+      bandedCandidates(s, bandKeysOf(docSh, "doc_id", k, bands)),
       docSh, threshold)
 
   /** Pair-level recall/precision of the MinHash-LSH path against the
@@ -1582,9 +1552,9 @@ object Dedup {
   def lshRecall(docs: DataFrame, threshold: Double,
       k: Int = 16, bands: Int = 4): DataFrame = Scoped { s =>
     val docSh = s.cache(docShingles(docs, 3))
-    val exact = ngramJaccardCore(docSh, threshold, s.cache)
+    val exact = ngramJaccardCore(s, docSh, threshold)
       .select(col("doc_a"), col("doc_b"), lit(1L).as("e"), lit(0L).as("l"))
-    val lsh = minhashLshCore(docSh, threshold, k, bands, s.cache)
+    val lsh = minhashLshCore(s, docSh, threshold, k, bands)
       .select(col("doc_a"), col("doc_b"), lit(0L).as("e"), lit(1L).as("l"))
     val out = exact.unionByName(lsh)
       .groupBy(col("doc_a"), col("doc_b"))
@@ -1644,7 +1614,7 @@ object Dedup {
     require(bandArms.forall(b => b >= 1 && b <= k && k % b == 0),
       s"every bandArms entry must divide k=$k, got $bandArms")
     val docSh = s.cache(docShingles(docs, 3))
-    val exact = s.cache(ngramJaccardCore(docSh, threshold, s.cache)
+    val exact = s.cache(ngramJaccardCore(s, docSh, threshold)
       .select(col("doc_a"), col("doc_b")))
     val sigs = s.cache(docSh
       .select(col("doc_id"), minhashSigUdf(k)(col("sh")).as("sig")))
@@ -1947,7 +1917,7 @@ object Dedup {
     * the exact xor+bit_count filter.
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 3): DataFrame = {
-    val sh = simhash(docs).cache()
+    val sh = simhash(docs)
     val blockExpr = blockShifts.zip(blockMasks).zipWithIndex.map {
       case ((s, m), q) => struct(lit(q).as("q"),
         expr(s"shiftright(simhash, $s) & $m").as("blk"))
@@ -2053,12 +2023,12 @@ object Dedup {
     */
   val semDedupThreshold: Double = 0.4
 
-  def semDedup(index: KMeansIndex.Index, threshold: Double): DataFrame = {
+  def semDedup(index: KMeansIndex.Index, threshold: Double): DataFrame = Scoped { s =>
     // three consumers (both join sides + the final labeling) and the
     // cell assignment is k dot-distance expressions per row — cache the
-    // narrow projection so cellExpr evaluates once per vector
-    val a = index.assigned.select(col("vec_id"), col("cell"), col("embedding"))
-      .cache()
+    // narrow projection so cellExpr evaluates once per vector; the
+    // one-row-per-vector labeling is returned checkpointed
+    val a = s.cache(index.assigned.select(col("vec_id"), col("cell"), col("embedding")))
     val pairs = a.as("l").join(a.as("r"),
         col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
       .select(col("l.vec_id").as("doc_a"), col("r.vec_id").as("doc_b"),
@@ -2073,6 +2043,7 @@ object Dedup {
         coalesce(col("group_id"), col("vec_id")).as("group_id"))
       .withColumn("keep", col("group_id") === col("vec_id"))
       .orderBy(col("vec_id"))
+      .localCheckpoint(true)
   }
 
   /** Brute-force embedding near-dup: top-N pairs by cosine — the
@@ -2154,13 +2125,12 @@ object Dedup {
     (rounded9.cast(org.apache.spark.sql.types.DecimalType(28, 9))
       * lit(1000000000L)).cast("long")
 
-  private def idfWeights(docs: DataFrame, n: Int, maxDf: Long,
+  private def idfWeights(s: Scoped, docs: DataFrame, n: Int, maxDf: Long,
       pairMassCap: Option[Long] = None,
       eagerBuild: Boolean = false): (DataFrame, DataFrame) = {
     // two consumers (the df aggregate and the weight join's probe side)
-    // re-derive the shingle explode without this cache — the
-    // ngramJaccardCore inv-cache precedent, same measured trade
-    val sh = shingles(docs, n).cache()
+    // re-derive the shingle explode without this cache
+    val sh = s.cache(shingles(docs, n))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val dfreq0 = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
@@ -2184,10 +2154,9 @@ object Dedup {
     // dedup_idf_cosine's task-time). Evictable cache(), never
     // localCheckpoint (the round-12 OOM lesson); at scale eviction
     // degrades to recompute, not failure.
-    val wt = sh.join(dfreq, "shingle").crossJoin(broadcast(nDocs))
+    val wt = s.cache(sh.join(dfreq, "shingle").crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("shingle"),
-        round(log(col("n_docs").cast("double") / col("df")), 9).as("wt"))
-      .cache()
+        round(log(col("n_docs").cast("double") / col("df")), 9).as("wt")))
     // doc-count-sized, read twice (doc_a and doc_b readouts); with an
     // InMemoryRelation below it AQE exchange reuse never fires (the
     // round-15 bandedCandidates finding), so uncached it would
@@ -2200,11 +2169,10 @@ object Dedup {
     // document against a 10¹² corpus stays < 2⁵³, nine orders under
     // long overflow. Readout double(K)/1e9 equals double(K·1e-9):
     // both are the correctly-rounded value of the same rational.
-    val norms = wt.groupBy(col("doc_id"))
+    val norms = s.cache(wt.groupBy(col("doc_id"))
       .agg(sqrt((sum(fix9(round(col("wt") * col("wt"), 9)))
         .cast("double") / lit(1e9))).as("nrm"))
-      .filter(col("nrm") > 0.0)
-      .cache()
+      .filter(col("nrm") > 0.0))
     // EAGER materialization (pairs form only), one producing pass per
     // cache: the self-join's two sides and the two norm readouts plan
     // as CONCURRENT stages, and concurrent first-touch of a lazy cache
@@ -2250,13 +2218,14 @@ object Dedup {
     * Determinism: idf quantized at 9 dp, every product re-quantized
     * at 9 dp into DECIMAL(28,9) (order-free folds), one double
     * division, 6-dp readout, (cosine desc, doc_a, doc_b) total order
-    * at the cut.
+    * at the cut. The top-N is returned checkpointed; the weight
+    * frames are cached for the call only ([[Scoped]]).
     */
   def idfCosinePairs(docs: DataFrame, topN: Int, n: Int = 3,
-      maxDf: Long = 10000L, maxPairMass: Long = 100000000L): DataFrame = {
+      maxDf: Long = 10000L, maxPairMass: Long = 100000000L): DataFrame = Scoped { s =>
     require(topN >= 1, s"topN must be >= 1, got $topN")
     require(maxDf >= 2, s"maxDf must be >= 2 (df=1 shingles cannot pair), got $maxDf")
-    val (wt, norms) = idfWeights(docs, n, maxDf, Some(maxPairMass),
+    val (wt, norms) = idfWeights(s, docs, n, maxDf, Some(maxPairMass),
       eagerBuild = true)
     // dot folded as long fixed-point ([[fix9]]): the co-occurrence-mass
     // pair stream is this query's dominant task-time and every row paid
@@ -2277,6 +2246,7 @@ object Dedup {
           .as("cosine"))
       .orderBy(col("cosine").desc, col("doc_a").asc, col("doc_b").asc)
       .limit(topN)
+      .localCheckpoint(true)
   }
 
   /** Cross-corpus contamination PAIRS — which benchmark/eval document
@@ -2331,13 +2301,12 @@ object Dedup {
   /** LSH candidate pairs (16 hashes, 4 bands — the [[minhashLshPairs]]
     * banding) WITHOUT verification: the bounded candidate generator
     * for rankers that apply their own scoring, e.g.
-    * [[idfCosineRank]]. Canonical doc_a < doc_b, distinct.
+    * [[idfCosineRank]]. Canonical doc_a < doc_b, distinct; returned
+    * checkpointed, the band index cached for the call only.
     */
-  def lshCandidates(docs: DataFrame): DataFrame = {
-    val docSh = Partitioning.spread(docs)
-      .select(col("doc_id"), shingleArray(col("text")).as("sh"))
-      .filter(size(col("sh")) >= 1)
-    bandedCandidates(bandKeysOf(docSh, "doc_id", 16, 4), _.cache())
+  def lshCandidates(docs: DataFrame): DataFrame = Scoped { s =>
+    bandedCandidates(s, bandKeysOf(docShingles(docs, 3), "doc_id", 16, 4))
+      .localCheckpoint(true)
   }
 
   /** IDF-weighted cosine over a GIVEN candidate pair list — the
@@ -2351,12 +2320,13 @@ object Dedup {
     * (the df cap can orphan a banded pair); pairs touching a
     * zero-norm document drop, as in the pairs form. Same 9-dp/
     * DECIMAL(28,9)/6-dp determinism contract; output ordered
-    * (cosine desc, doc_a, doc_b), one row per surviving candidate.
+    * (cosine desc, doc_a, doc_b), one row per surviving candidate,
+    * returned checkpointed as in [[idfCosinePairs]].
     */
   def idfCosineRank(docs: DataFrame, candidates: DataFrame, n: Int = 3,
-      maxDf: Long = 10000L): DataFrame = {
+      maxDf: Long = 10000L): DataFrame = Scoped { s =>
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
-    val (wt, norms) = idfWeights(docs, n, maxDf)
+    val (wt, norms) = idfWeights(s, docs, n, maxDf)
     val cand = candidates.select(col("doc_a"), col("doc_b")).distinct()
     // same long fixed-point fold as the pairs form (see fix9)
     val dots = cand
@@ -2374,5 +2344,6 @@ object Dedup {
         round(coalesce(col("dotl").cast("double") / lit(1e9), lit(0.0))
           / (col("na") * col("nb")), 6).as("cosine"))
       .orderBy(col("cosine").desc, col("doc_a").asc, col("doc_b").asc)
+      .localCheckpoint(true)
   }
 }

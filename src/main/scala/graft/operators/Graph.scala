@@ -40,22 +40,22 @@ object Graph {
   /** PageRank over an undirected pair graph (columns doc_a, doc_b).
     * Vertices are pair endpoints; each undirected pair contributes
     * both directed edges. Returns (doc_id, deg, rank) with rank
-    * rounded at 6 dp, uniform 1/n start. The edge list and degree
-    * table stay cached for the session: the returned plan reads them.
+    * rounded at 6 dp, uniform 1/n start. The returned plan reads only
+    * checkpoints (the last round's ranks and the degree table); the
+    * pair projection and edge list are released with the call's scope.
     */
   def pageRank(pairs: DataFrame,
       iterations: Int = pageRankIterations,
       damping: Double = pageRankDamping): DataFrame = Scoped { s =>
     require(iterations >= 0, s"iterations must be >= 0, got $iterations")
     val p2 = s.cache(pairs.select(col("doc_a"), col("doc_b")))
-    val edges = p2.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val edges = s.cache(p2.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p2.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .cache()
-    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg")).cache()
+      .distinct())
+    val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint(true)
     val n = deg.count()
     if (n == 0) {
-      s.release(edges); s.release(deg)
       pairs.sparkSession.emptyDataFrame
         .withColumn("doc_id", lit(0L)).withColumn("deg", lit(0L))
         .withColumn("rank", lit(0.0)).limit(0)

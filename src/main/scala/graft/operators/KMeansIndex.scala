@@ -317,10 +317,11 @@ object KMeansIndex {
     * engine-portable. Output: (n_probe, cells_scanned, recall_at_k)
     * ordered by n_probe; arms with n_probe ≥ k saturate at the full
     * cell count and recall 1.0 — the visible "paying more buys
-    * nothing" plateau.
+    * nothing" plateau. The curve is returned checkpointed; the scored
+    * candidates are cached for the call only ([[Scoped]]).
     */
   def recallCurve(index: Index, queries0: DataFrame, topK: Int,
-      probes: Seq[Int], maxQueries: Long = 1000L): DataFrame = {
+      probes: Seq[Int], maxQueries: Long = 1000L): DataFrame = Scoped { s =>
     require(probes.nonEmpty, "recallCurve needs at least one probe count")
     require(probes.forall(_ >= 1), s"probe counts must be >= 1, got $probes")
     // sample-scale cap, ENFORCED: the ground-truth arm scores every
@@ -342,19 +343,17 @@ object KMeansIndex {
       .withColumn("rn", row_number().over(w))
       .select(col("query_id"), col("q_embedding"), col("cell"), col("rn"))
     // spread as in searchMany: score in parallel on narrow local inputs.
-    // Cached AND eagerly materialized: the per-(query, row) cosine pass
-    // is the curve's dominant task-time and BOTH consumers (the per-arm
-    // top-k and the brute ground truth) plan as concurrent aggregates —
-    // lazy, each recomputed the full scoring pass (round-16 profile:
-    // two identical ~11s stages). Bounded by the enforced query-sample
-    // cap × probed-cell membership, never corpus².
-    val scoredOnce = Partitioning.spread(index.assigned)
+    // Cached in the scope: the per-(query, row) cosine pass is the
+    // curve's dominant task-time and BOTH consumers (the per-arm top-k
+    // and the brute ground truth) read it (round-16 profile: two
+    // identical ~11s stages uncached). Bounded by the enforced
+    // query-sample cap × probed-cell membership, never corpus².
+    val scoredOnce = s.cache(Partitioning.spread(index.assigned)
       .join(broadcast(ranked), Seq("cell"))
       .select(col("query_id"), col("rn"), col("vec_id"),
         round(VectorOps.cosineSimilarity(col("embedding"), col("q_embedding")), 6)
           .as("score"))
-      .filter(Search.rankable(col("score")))
-      .cache()
+      .filter(Search.rankable(col("score"))))
     val arms = scoredOnce.join(broadcast(ps), col("rn") <= col("n_probe"))
     val ivf = arms.groupBy(col("n_probe"), col("query_id"))
       .agg(topk(col("vec_id"), col("score")).as("nn"))
@@ -383,6 +382,7 @@ object KMeansIndex {
             / (col("nq").cast("double") * lit(topK.toDouble)), 6))
           .as("recall_at_k"))
       .orderBy(col("n_probe"))
+      .localCheckpoint(true)
   }
 
   /** Recall of the probe search against the exact brute-force top-k —

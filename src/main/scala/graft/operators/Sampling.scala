@@ -148,14 +148,11 @@ object Sampling {
     require(numShards > 0, "numShards must be positive")
     require((defaultBudget +: budgets.values.toSeq).forall(_ >= 0),
       "token budgets must be >= 0")
-    // base feeds the running-sum window AND the per-shard totals — two
-    // plan branches, no cross-branch reuse; cached so the tokenize+hash
-    // pass over the corpus runs once (5 narrow columns per doc)
+    // base feeds the running-sum window AND the per-shard totals
     val base = docs.select(col("doc_id"), col("source"),
       size(TextAnalysis.words(col("text"))).cast("long").as("n_tokens"),
       pmod(hash60(col("doc_id")), lit(numShards.toLong)).as("shard"),
       sha2(col("doc_id").cast("string"), 256).as("ord"))
-      .cache()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source"), col("shard")).orderBy(col("ord"), col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -227,19 +224,18 @@ object Sampling {
   val dsirBuckets: Int = 64
 
   def dsirWeights(docs: DataFrame, targetLang: String = dsirTargetLang,
-      buckets: Int = dsirBuckets): DataFrame = {
+      buckets: Int = dsirBuckets): DataFrame = Scoped { s =>
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val tb = Partitioning.spread(docs)
+    val tb = s.pin(Partitioning.spread(docs)
       .select(col("doc_id"), col("lang"),
         explode(TextAnalysis.words(col("text"))).as("w"))
       .select(col("doc_id"), col("lang"),
         pmod(hash60(col("w"), ":dsir"), lit(buckets.toLong)).as("bucket"))
       .groupBy(col("doc_id"), col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("tf"))
-      .cache() // feeds the bucket models AND the per-doc fold
-    // one producing pass before the two consumers race on first touch
-    // (round-16; the doc_surprisal pattern)
-    tb.count()
+      .agg(count(lit(1)).as("tf")))
+    // tb feeds the bucket models AND the per-doc fold: pinned, one
+    // producing pass before the two consumers race on first touch; the
+    // one-row-per-doc result is returned checkpointed
     val isTarget = col("lang") === targetLang
     val model = tb.groupBy(col("bucket"))
       .agg(sum(when(isTarget, col("tf")).otherwise(0L)).as("ct"),
@@ -259,6 +255,7 @@ object Sampling {
       .agg(sum(col("tf")).as("n_words"), score.as("dsir_score"))
       .withColumn("selected", col("dsir_score") > 0)
       .orderBy(col("doc_id"))
+      .localCheckpoint(true)
   }
 
   /** Per-source mixture report: how many docs each source keeps under

@@ -12,16 +12,15 @@ import org.apache.spark.sql.DataFrame
   * accumulates no cached frames from calls that finished or failed.
   * The rule for an operator:
   *
-  *  - a frame only the call itself reads is cached through its scope;
-  *  - an eager operator returns `out.localCheckpoint(true)` from inside
-  *    the scope, so its bounded result outlives the caches it was
-  *    computed from;
-  *  - a lazy operator whose returned plan still reads a cache caches it
-  *    with a plain `.cache()`: that frame is session-lived, and the
-  *    operator's scaladoc says so.
+  *  - a frame the call caches is cached through its scope, and an
+  *    operator that caches returns `out.localCheckpoint(true)` from
+  *    inside the scope, so its bounded result outlives the caches it
+  *    was computed from;
+  *  - an operator that returns a lazy plan caches nothing: the plan
+  *    never reads a scope's cache.
   *
-  * Nothing else in `src/main` calls `unpersist` (a source scan in
-  * ContractSpec holds this).
+  * Nothing else in `src/main` calls `cache()` or `unpersist` (source
+  * scans in ContractSpec hold this).
   */
 final class Scoped private {
   private val owned = ArrayBuffer.empty[DataFrame]
@@ -43,9 +42,8 @@ final class Scoped private {
     c
   }
 
-  /** Free `df` now: a frame of this scope before exit (a loop swapping
-    * one cached frame for its successor), or a session-lived cache the
-    * call turns out not to return a plan over.
+  /** Free `df`, a frame of this scope, before exit (a loop swapping
+    * one cached frame for its successor).
     */
   def release(df: DataFrame): Unit = {
     owned -= df

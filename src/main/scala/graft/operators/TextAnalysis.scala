@@ -345,19 +345,16 @@ object TextAnalysis {
     * plan that scales: no per-doc vocabulary materialization, shuffles
     * keyed by word then by doc.
     */
-  def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
+  def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = Scoped { s =>
     // tf feeds both the df aggregation and the scoring join; exchange
     // reuse does not deduplicate the two subtrees (verified: 3 parquet
     // scans, 0 ReusedExchange uncached), so the explode+count pass over
-    // the corpus would run twice. MEMORY_AND_DISK cache (DF default)
-    // spills gracefully when the (doc, word) table outgrows memory.
-    val tf = Partitioning.spread(docs)
+    // the corpus would run twice. Pinned: one producing pass before the
+    // df aggregate and the scoring-join probe race on first touch; the
+    // k-rows-per-doc result is returned checkpointed.
+    val tf = s.pin(Partitioning.spread(docs)
       .select(col("doc_id"), explode(words(col("text"))).as("word"))
-      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
-      .cache()
-    // one producing pass before the df aggregate and the scoring-join
-    // probe race on first touch (round-16; the doc_surprisal pattern)
-    tf.count()
+      .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf")))
     val df = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
     val n = docs.select(countDistinct(col("doc_id")).as("n_docs"))
     val scored = tf.join(df, "word").crossJoin(broadcast(n))
@@ -369,6 +366,7 @@ object TextAnalysis {
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("word"), col("score"))
       .orderBy(col("doc_id"), col("rank"))
+      .localCheckpoint(true)
   }
 
   /** Sliding word-window chunking for training pipelines: windows of
@@ -476,14 +474,12 @@ object TextAnalysis {
     * Docs with fewer than n words have no shingles: novelty 0 with
     * n_shingles 0 (nothing new, nothing to claim).
     */
-  def noveltyScores(docs: DataFrame, n: Int = 3): DataFrame = {
-    // sh feeds the first-seen aggregate AND the scoring join — cached so
-    // the shingle UDF pass over the corpus runs once (tfidf doctrine)
-    val sh = graft.operators.Dedup.shingles(docs, n).cache()
-    // one producing pass before the two consumers (first-seen aggregate
-    // and scoring-join probe) first-touch the cache concurrently and
-    // each recompute it (round-16 profile; the doc_surprisal pattern)
-    sh.count()
+  def noveltyScores(docs: DataFrame, n: Int = 3): DataFrame = Scoped { s =>
+    // sh feeds the first-seen aggregate AND the scoring join — pinned so
+    // the shingle UDF pass over the corpus runs once, before the two
+    // consumers first-touch it concurrently; the one-row-per-doc result
+    // is returned checkpointed
+    val sh = s.pin(graft.operators.Dedup.shingles(docs, n))
     val first = sh.groupBy(col("shingle")).agg(min(col("doc_id")).as("first_id"))
     val perDoc = sh.join(first, "shingle")
       .groupBy(col("doc_id"))
@@ -498,6 +494,7 @@ object TextAnalysis {
           .otherwise(round(col("n_novel").cast("double") / col("n_shingles"), 6))
           .as("novelty"))
       .orderBy(col("doc_id"))
+      .localCheckpoint(true)
   }
 
   /** Quality-curriculum buckets: every document assigned to a quartile
@@ -519,16 +516,14 @@ object TextAnalysis {
     * … 4 (cleanest); `score <= p25 → 1`, ties resolved by the shared
     * threshold doubles.
     */
-  def curriculumBuckets(docs: DataFrame): DataFrame = {
+  def curriculumBuckets(docs: DataFrame): DataFrame = Scoped { s =>
     // scored feeds BOTH the threshold aggregation and the bucketing
-    // projection; Spark has no cross-branch exchange reuse, so without
-    // the cache the full qualityFlags aggregation chain runs twice
-    // (verified at the 20x probe: 6.1s -> ~halved). Footprint is two
-    // small columns per doc.
-    val scored = qualityFlags(docs).select(col("doc_id"),
+    // projection; without the cache the full qualityFlags aggregation
+    // chain runs twice. Footprint is two small columns per doc, and the
+    // one-row-per-doc result is returned checkpointed.
+    val scored = s.cache(qualityFlags(docs).select(col("doc_id"),
       round(col("stopword_frac") - col("top_word_frac") - col("punct_frac"), 6)
-        .as("score"))
-      .cache()
+        .as("score")))
     val th = scored.agg(
       expr("percentile(score, 0.25D)").as("p25"),
       expr("percentile(score, 0.5D)").as("p50"),
@@ -539,6 +534,7 @@ object TextAnalysis {
           .when(col("score") <= col("p50"), 2)
           .when(col("score") <= col("p75"), 3)
           .otherwise(4).as("bucket"))
+      .localCheckpoint(true)
   }
 
   /** Per-bucket curriculum report: counts and score ranges. The score
@@ -605,15 +601,13 @@ object TextAnalysis {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "query must have at least one term")
     val terms = queryTerms.distinct
-    // base feeds BOTH the corpus-stats aggregate and the tf branch —
-    // cached so the corpus tokenizes once, and cached NARROW: the term
-    // filter applies before the cache, so the footprint is (doc_id, dl,
-    // matched terms), never the full token stream
+    // base feeds BOTH the corpus-stats aggregate and the tf branch; the
+    // term filter applies before either, so only (doc_id, dl, matched
+    // terms) leaves the tokenizer, never the full token stream
     val base = Partitioning.spread(docs)
       .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"), size(col("ws")).cast("long").as("dl"),
         filter(col("ws"), w => terms.map(t => w === t).reduce(_ || _)).as("qs"))
-      .cache()
     val stats = base.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = base
       .select(col("doc_id"), col("dl"), explode(col("qs")).as("w"))
@@ -824,11 +818,7 @@ object TextAnalysis {
     val tok = Partitioning.spread(docs)
       .select(col("doc_id"), explode(words(col("text"))).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-      .cache() // feeds the corpus distribution AND the per-doc fold
-    // one producing pass: the two consumers plan as concurrent stages
-    // and concurrent first-touch of a lazy cache recomputes it once
-    // per scanning stage (round-16 profile)
-    tok.count()
+    // tok feeds the corpus distribution AND the per-doc fold
     val freq = tok.groupBy(col("w")).agg(sum(col("tf")).as("cf"))
     val total = freq.agg(sum(col("cf")).as("n_total"))
     val logp9 = round(-log(col("cf").cast("double") / col("n_total").cast("double")), 9)
@@ -1020,15 +1010,8 @@ object TextAnalysis {
       // (the "training scratch — do not leave it to LRU" discipline;
       // a cache() here had no matching unpersist, round-7 advice)
       .localCheckpoint()
-    // two consumers (the ctx rollup and the per-doc probe join) each
-    // re-aggregated the checkpointed token frame without this cache
-    // (round-16 profile: the duplicated model pass was a third of the
-    // query's task-time); vocabulary-bounded, evictable
+    // two consumers: the ctx rollup and the per-doc probe join
     val model = tok.groupBy(col("w1"), col("w2")).agg(sum(col("tf")).as("c2"))
-      .cache()
-    // one producing pass before the two consumers race (see
-    // unigramSurprisal)
-    model.count()
     val ctx = model.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val logp9 = round(-log(col("c2").cast("double") / col("c1").cast("double")), 9)
     tok.join(model, Seq("w1", "w2")).join(ctx, Seq("w1"))
@@ -1076,14 +1059,13 @@ object TextAnalysis {
     * aggregate on the word key; the top-V cut is orderBy+limit
     * (`TakeOrderedAndProject` — per-partition heaps, no global sort);
     * only the V surviving rows enter the single-partition ranking
-    * window, which is VOCAB-scale, not corpus-scale. The counts frame
-    * is cached for its two consumers (grand total + top-V).
+    * window, which is VOCAB-scale, not corpus-scale. The counts
+    * aggregate feeds two consumers (grand total + top-V).
     */
   def vocabCoverage(docs: DataFrame, topV: Int = 50): DataFrame = {
     val counts = Partitioning.spread(docs)
       .select(explode(words(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .cache()
     val total = counts.agg(sum(col("cnt")).as("total"))
     val ord = Window.orderBy(col("cnt").desc, col("w"))
     counts.orderBy(col("cnt").desc, col("w")).limit(topV)
@@ -1111,7 +1093,7 @@ object TextAnalysis {
     * distinct frame (round-16 profile: the join stage alone was half
     * the query's task-time) — never happens; row-identical output
     * (pairs per shingle = C(set, 2), counted per pair, as before).
-    * Per-source sizes re-read the same vocabulary-sized cached frame.
+    * Per-source sizes re-read the same vocabulary-sized aggregate.
     */
   def sourceOverlap(docs: DataFrame, n: Int = 3): DataFrame = {
     // collect_set absorbs duplicate (source, shingle) rows exactly like
@@ -1121,7 +1103,6 @@ object TextAnalysis {
         explode(graft.operators.Dedup.shingleArray(col("text"), n)).as("shingle"))
       .groupBy(col("shingle"))
       .agg(sort_array(collect_set(col("source"))).as("srcs"))
-      .cache()
     val sizes = bySh.select(explode(col("srcs")).as("source"))
       .groupBy("source").agg(count(lit(1)).as("n_sh"))
     // all ordered pairs (i < j) of the sorted set: transform-with-index

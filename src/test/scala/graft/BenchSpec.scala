@@ -47,6 +47,11 @@ class BenchSpec extends AnyFunSuite {
     assert(walls.head >= 1.5 && walls.head > walls(1), s"walls not in run order: $walls")
   }
 
+  test("every headline name is a contract query") {
+    val missing = Bench.headlineNames.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"headline names with no contract query: $missing")
+  }
+
   test("the stdout line of a 231-query board fits in 2048 bytes and keeps its keys") {
     val names = Bench.headlineNames ++
       (Bench.headlineNames.size until 231).map(i => f"contract_query_with_a_long_name_$i%03d")

@@ -49,4 +49,24 @@ class ContractSpec extends AnyFunSuite {
     assert(releasing == Seq("graft/operators/Scoped.scala"),
       s"unpersist( outside Scoped: $releasing")
   }
+
+  test("cache() is called only by the cache scope") {
+    // a frame cached outside graft.operators.Scoped has no owner to
+    // release it, so a returned plan over it pins it for the session;
+    // comment lines do not count
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val call = """\.cache\(\)|_\.cache\b""".r
+    val caching = java.nio.file.Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) &&
+              call.findFirstIn(line.replaceAll("//.*$", "")).isDefined =>
+            s"${root.relativize(p)}:${i + 1}"
+        }
+      }.toSeq.sorted
+    assert(caching.forall(_.startsWith("graft/operators/Scoped.scala:")),
+      s"cache() outside Scoped: $caching")
+  }
 }

@@ -21,14 +21,10 @@ class DedupSpec extends AnyFunSuite {
       r.getAs[Long]("n_dup_docs") == 1 && r.getAs[Long]("n_dup_groups") == 1)
   }
 
-  test("ngramJaccardPairs finds near-dups; maxDf guard keeps them") {
-    def pairs(maxDf: Option[Int]) =
-      Dedup.ngramJaccardPairs(docs, 0.5, maxDf = maxDf).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(None)
+  test("ngramJaccardPairs finds near-dups") {
+    val exact = Dedup.ngramJaccardPairs(docs, 0.5).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.contains((1L, 4L)) && exact.contains((1L, 2L)))
-    // the guarded variant finds the same pairs here (no boilerplate-only pairs)
-    assert(pairs(Some(3)) == exact)
   }
 
   test("prefix-filtered Jaccard equals brute force on random corpora") {

@@ -3,7 +3,8 @@
 # Usage: tools/ab_lanes.sh <lane-prefix> <comma-query-list>
 # HEAD = working tree (uncommitted changes under src/ required);
 # BASE = the same tree with those changes stashed.
-# Writes bench_ab/<prefix>_{head1,base1,head2,base2}.json.
+# Writes bench_ab/<prefix>_{head1,base1,head2,base2}.json, then prints the
+# per-query verdicts of tools/ab_compare.py over them.
 set -e
 PREFIX="$1"; QS="$2"
 # with nothing to stash, `git stash push` saves nothing and the later
@@ -32,3 +33,4 @@ run base2
 git stash pop
 trap - EXIT
 echo "ABAB lanes done: bench_ab/${PREFIX}_*"
+python3 tools/ab_compare.py "$PREFIX"
