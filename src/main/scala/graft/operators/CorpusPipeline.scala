@@ -43,13 +43,16 @@ object CorpusPipeline {
   def clean(docs: DataFrame, threshold: Double = 0.5): Cleaned = {
     val base = docs.select(col("doc_id"), col("source"), col("text"))
 
-    // stage 1: quality gate. Each stage's survivors are checkpointed as
-    // a doc_id set (one narrow row per doc, never the text), so every
+    // stage 1: quality gate. Each stage's verdict is checkpointed as
+    // narrow doc_id rows (one per doc, never the text), so every
     // later stage and report reads the gate's verdict instead of
-    // re-running its aggregations from the scan.
-    val kept = TextAnalysis.qualityFlags(base)
-      .filter(col("keep")).select(col("doc_id"))
+    // re-running its aggregations from the scan. The verdict is
+    // checkpointed before the filter on it: a filter on `keep` would
+    // be pushed below qualityFlags' spread and run its stats UDF on
+    // every document inside the one scan task, before the spread.
+    val kept = TextAnalysis.qualityFlags(base).select(col("doc_id"), col("keep"))
       .localCheckpoint(true)
+      .filter(col("keep")).select(col("doc_id"))
     val afterQuality = base.join(kept, Seq("doc_id"))
 
     // stage 2: exact dedup, canonical keep (lowest doc_id per digest)

@@ -1229,11 +1229,19 @@ object Dedup {
     * Callers own the cache decision: each scoped operator caches ONE
     * of these; [[lshRecall]] caches one and shares it across BOTH of
     * its sides instead of letting each side scan the corpus again.
+    *
+    * A per-row kernel runs after the spread, once. The empty-set test
+    * reads the word count, not the shingle set: the optimizer pushes a
+    * filter through the projection and the spread's exchange, so a
+    * filter on `size(sh)` would shingle every document inside the one
+    * scan task and again after the exchange. The two tests agree: the
+    * shingle set is non-empty exactly when there are at least `n`
+    * words, and a NULL text fails both.
     */
-  private def docShingles(docs: DataFrame, n: Int): DataFrame =
+  private[graft] def docShingles(docs: DataFrame, n: Int): DataFrame =
     Partitioning.spread(docs)
+      .filter(size(words(col("text"))) >= n)
       .select(col("doc_id"), shingleArray(col("text"), n).as("sh"))
-      .filter(size(col("sh")) >= 1)
 
   /** Prefix-filtered exact-Jaccard pair core over a CACHED
     * [[docShingles]] frame, UNSORTED — see [[ngramJaccardPairs]] for
@@ -1336,12 +1344,7 @@ object Dedup {
       .select(least(col("id_lo"), col("id_hi")).as("doc_a"),
         greatest(col("id_lo"), col("id_hi")).as("doc_b"))
       .distinct()
-    // spread: the shingling for the verify tail is the heavy per-row
-    // work and a single-file source would run it on one task
-    val docSets = Partitioning.spread(docs)
-      .select(col("doc_id"), shingleArray(col("text"), n).as("sh"))
-      .filter(size(col("sh")) >= 1)
-    verifyPairs(cand, docSets, threshold)
+    verifyPairs(cand, docShingles(docs, n), threshold)
   }
 
   import graft.functions.HashUtil.md5Hex
@@ -1728,9 +1731,15 @@ object Dedup {
       .select(col("doc_id").as("hist_id"), sha2(col("text"), 256).as("h"),
         shingleArray(col("text")).as("sh"))
 
+  /** (id, band, band_key) of every row with a non-empty shingle set.
+    * The empty set is skipped inside the explode (a NULL array explodes
+    * to no rows), not by a filter: over a shingle frame computed above a
+    * spread, a filter on `sh` is pushed below the exchange and runs the
+    * shingle UDF there.
+    */
   private def bandKeysOf(df: DataFrame, idCol: String, k: Int, bands: Int) =
-    df.filter(size(col("sh")) >= 1)
-      .select(col(idCol), explode(bandKeysUdf(k, bands)(col("sh"))).as("bk"))
+    df.select(col(idCol),
+        explode(when(size(col("sh")) >= 1, bandKeysUdf(k, bands)(col("sh")))).as("bk"))
       .select(col(idCol), col("bk._1").as("band"), col("bk._2").as("band_key"))
 
   /** The batch-vs-history check against the three index frames a
@@ -2014,6 +2023,16 @@ object Dedup {
     * (pointer-jumping min-label propagation, driver fast path only
     * under its hard edge cap), and the final labeling is a left join
     * keyed on vec_id. No driver materialization anywhere.
+    *
+    * A per-row kernel runs after the spread, once: the cached frame is
+    * spread across the cores before its norm is computed, so the
+    * pair step's tasks follow its partitions; each row's norm is
+    * computed once and cached beside its embedding; a same-cell pair
+    * is scored only in its `l.vec_id < r.vec_id` order, and the 6-dp
+    * round runs only on pairs whose raw cosine is within 1e-6 of the
+    * threshold or above (`round(x, 6) >= t` implies `x >= t - 5e-7`,
+    * so no kept pair is lost). The score is the same double as
+    * `VectorOps.cosineSimilarity`.
     */
   /** The contract query's cosine threshold, shared with its oracle SQL
     * interpolation (the token_budget discipline). 0.4 matches the
@@ -2026,16 +2045,20 @@ object Dedup {
   def semDedup(index: KMeansIndex.Index, threshold: Double): DataFrame = Scoped { s =>
     // three consumers (both join sides + the final labeling) and the
     // cell assignment is k dot-distance expressions per row — cache the
-    // narrow projection so cellExpr evaluates once per vector; the
-    // one-row-per-vector labeling is returned checkpointed
-    val a = s.cache(index.assigned.select(col("vec_id"), col("cell"), col("embedding")))
+    // narrow projection so cellExpr and the norm evaluate once per
+    // vector; the one-row-per-vector labeling is returned checkpointed
+    val a = s.cache(Partitioning.spread(
+        index.assigned.select(col("vec_id"), col("cell"), col("embedding")))
+      .withColumn("norm", VectorOps.l2Norm(col("embedding"))))
+    val cos = VectorOps.dotProduct(col("l.embedding"), col("r.embedding")) /
+      (col("l.norm") * col("r.norm") + lit(1e-12))
+    // one join condition, so its conjuncts keep this order: And
+    // short-circuits, and a filter above the join would be pushed in
+    // AHEAD of the id test and score both orders of every pair
     val pairs = a.as("l").join(a.as("r"),
-        col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
-      .select(col("l.vec_id").as("doc_a"), col("r.vec_id").as("doc_b"),
-        round(graft.functions.VectorOps.cosineSimilarity(
-          col("l.embedding"), col("r.embedding")), 6).as("score"))
-      .filter(col("score") >= threshold)
-      .select(col("doc_a"), col("doc_b"))
+        col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id") &&
+          cos >= lit(threshold - 2 * RoundHalfWidth) && round(cos, 6) >= threshold)
+      .select(col("l.vec_id").as("doc_a"), col("r.vec_id").as("doc_b"))
     val groups = dupGroups(pairs).withColumnRenamed("doc_id", "vec_id")
     a.select(col("vec_id"), col("cell"))
       .join(groups, Seq("vec_id"), "left")
@@ -2272,14 +2295,8 @@ object Dedup {
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must lie in (0, 1], got $threshold")
-    val cSh = Partitioning.spread(corpus)
-      .select(col("doc_id"), shingleArray(col("text")).as("sh"))
-      .filter(size(col("sh")) >= 1)
-      .localCheckpoint()
-    val bSh = Partitioning.spread(benchmark)
-      .select(col("doc_id"), shingleArray(col("text")).as("sh"))
-      .filter(size(col("sh")) >= 1)
-      .localCheckpoint()
+    val cSh = docShingles(corpus, 3).localCheckpoint()
+    val bSh = docShingles(benchmark, 3).localCheckpoint()
     val cand = bandKeysOf(cSh, "doc_id", 16, 4).as("x")
       .join(bandKeysOf(bSh, "doc_id", 16, 4).as("y"),
         col("x.band") === col("y.band") &&

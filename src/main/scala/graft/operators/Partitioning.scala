@@ -2,6 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec,
+  RDDScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, REPARTITION_BY_NUM,
+  ReusedExchangeExec, ShuffleExchangeExec}
 
 /** Parallelism hygiene for CPU-heavy per-row stages. */
 object Partitioning {
@@ -145,26 +151,52 @@ object Partitioning {
     * there would be an extra full shuffle of the base data — so the
     * repartition is gated on the input's width.
     *
-    * Width probe, cheapest first: the input-file count of the underlying
-    * file source — a metadata lookup on the already-listed FileIndex
-    * that costs no planning. Only when the file count is BELOW target
-    * (the ambiguous case: a few large splittable parquet files carry
-    * many row-group splits, and non-file inputs report zero files even
-    * when already wide) does the probe pay for one physical planning via
-    * `df.rdd.getNumPartitions` to read the true partition count. So the
-    * expensive probe runs exactly where the cheap one can't rule out a
-    * needless full reshuffle of the base data, and a genuinely narrow
-    * input costs one extra planning before the repartition it needs
-    * anyway.
+    * A per-row kernel runs after the spread, once: a caller projects
+    * its kernel above the returned frame, and filters on a cheap column
+    * test rather than on the kernel's output (the optimizer pushes a
+    * filter below the exchange, into the scan task).
+    *
+    * The width is read from the physical plan, which is planned but not
+    * executed, so the probe runs no job (see [[width]]).
     */
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val wide =
-      // a streaming frame can't be probed (`.rdd` forces a batch
-      // physical plan and throws); treat as narrow — the repartition
-      // is a plan node the micro-batch planner handles normally
-      if (df.isStreaming) false
-      else df.inputFiles.length >= target || df.rdd.getNumPartitions >= target
+    // a streaming frame has no batch physical plan; treat as narrow —
+    // the repartition is a plan node the micro-batch planner handles
+    val wide = !df.isStreaming && width(df.queryExecution.executedPlan) >= target
     if (wide) df else df.repartition(target)
+  }
+
+  /** The partition count a physical plan will run with, read without
+    * executing it:
+    *  - a file scan has its file splits, and a scan of an RDD (a local
+    *    checkpoint), of local rows or of a cache has that RDD's, those
+    *    rows' or that cache's partitions;
+    *  - a shuffle has its partitioning's count, except that one the
+    *    adaptive executor may coalesce counts as 1: its final count is
+    *    known only after its map stage has run, and the small inputs
+    *    that coalesce are the ones a spread must widen;
+    *  - an adaptive plan reads its current plan, and a query stage
+    *    the plan it wraps;
+    *  - a union sums its children, a broadcast counts 0 (its rows join
+    *    a streamed side), and any other node is as wide as its widest
+    *    child, or its own partitioning when it has no child.
+    */
+  private def width(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => width(a.executedPlan)
+    case q: QueryStageExec => width(q.plan)
+    case r: ReusedExchangeExec => width(r.child)
+    case e: ShuffleExchangeExec =>
+      val coalescible = p.conf.adaptiveExecutionEnabled &&
+        p.conf.coalesceShufflePartitionsEnabled && e.shuffleOrigin != REPARTITION_BY_NUM
+      if (coalescible) 1 else e.numPartitions
+    case _: BroadcastExchangeExec => 0
+    case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    case r: RDDScanExec => r.inputRDDs().head.getNumPartitions
+    case l: LocalTableScanExec => l.execute().getNumPartitions
+    case m: InMemoryTableScanExec => width(m.relation.cachedPlan)
+    case u: UnionExec => u.children.map(width).sum
+    case _ if p.children.isEmpty => p.outputPartitioning.numPartitions
+    case _ => p.children.map(width).max
   }
 }

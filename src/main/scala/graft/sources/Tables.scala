@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.Path
 
 /** Central readers for the driver-provided parquet tables
   * (`/root/repo/TESTDATA.md`). One place owns the quirks: the events
@@ -10,8 +12,39 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** A table read with its schema given. Inferring a parquet schema
+    * reads the footers in a Spark job on every read; the inferred
+    * schema is kept, keyed on the path, every listed file's name,
+    * length and modification time, and the session's parquet reader
+    * settings, so a rewritten table or a changed reader setting infers
+    * again and an unchanged table reads with no job.
+    */
+  def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, listing(s, path), s.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") })
+    val schema = schemas.getOrElseUpdate(key, s.read.parquet(path).schema)
+    s.read.schema(schema).parquet(path)
+  }
+
+  private val schemas = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[(String, Long, Long)], Map[String, String]), StructType]
+
+  /** (name, length, mtime) of every file under `path`, sorted; empty
+    * for a missing path, whose read then fails as Spark reports it.
+    */
+  private def listing(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return Seq.empty
+    val files = fs.listFiles(p, true)
+    val out = Seq.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result().sorted
+  }
 
   /** embeddings, normalized to `array<float>` — the reference's storage
     * type (`types.py:132-136`). The driver has regenerated testdata

@@ -1227,4 +1227,76 @@ class DedupSpec extends AnyFunSuite {
       Dedup.crossCorpusPairs(corpus, bench, 0.0)
     }
   }
+
+  test("semDedup: bit-identical to the unspread all-orders scoring, rounded-to-threshold pairs kept") {
+    import org.apache.spark.sql.functions.{coalesce, round}
+    import graft.functions.VectorOps
+    val rnd = new scala.util.Random(11)
+    val dim = 16
+    def unit(v: Array[Double]) = {
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    // random unit vectors in 3 cells, and 40 near-copies (cosine about
+    // 0.9) each in its source's cell, so every kept pair is its own group
+    val base = (0L until 120L).map(id => (id, unit(Array.fill(dim)(rnd.nextGaussian())), (id % 3).toInt))
+    val copies = base.take(40).map { case (id, v, cell) =>
+      (1000L + id, unit(v.map(_ + 0.12 * rnd.nextGaussian())), cell) }
+    val assigned = (base ++ copies).toDF("vec_id", "embedding", "cell")
+    val index = operators.KMeansIndex.Index(assigned, Seq((0, Array(1.0))).toDF("cell", "centroid"))
+    // the earlier formula, written out: every same-cell pair scored by
+    // cosineSimilarity and rounded, then the same component labeling
+    def earlier(t: Double) = {
+      val a = assigned.select(col("vec_id"), col("cell"), col("embedding"))
+      val pairs = a.as("l").join(a.as("r"),
+          col("l.cell") === col("r.cell") && col("l.vec_id") < col("r.vec_id"))
+        .select(col("l.vec_id").as("doc_a"), col("r.vec_id").as("doc_b"),
+          round(VectorOps.cosineSimilarity(col("l.embedding"), col("r.embedding")), 6).as("score"))
+        .filter(col("score") >= t)
+        .select(col("doc_a"), col("doc_b"))
+      val groups = Dedup.dupGroups(pairs).withColumnRenamed("doc_id", "vec_id")
+      a.select(col("vec_id"), col("cell"))
+        .join(groups, Seq("vec_id"), "left")
+        .select(col("vec_id"), col("cell").cast("int").as("cell"),
+          coalesce(col("group_id"), col("vec_id")).as("group_id"))
+        .withColumn("keep", col("group_id") === col("vec_id"))
+        .orderBy(col("vec_id"))
+    }
+    // planted boundary: a copy whose raw cosine rounds UP onto the
+    // threshold, so the pair sits below t unrounded and exactly at t rounded
+    val scored = copies.map { case (id, v, _) =>
+      val src = base(id.toInt - 1000)._2
+      val dot = (0 until dim).foldLeft(0.0)((s, i) => s + src(i).toDouble * v(i).toDouble)
+      def nrm(x: Array[Float]) = math.sqrt(x.foldLeft(0.0)((s, f) => s + f.toDouble * f.toDouble))
+      val raw = dot / (nrm(src) * nrm(v) + 1e-12)
+      (id, raw, BigDecimal(raw).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+    }.sortBy(_._2)
+    val roundedUp = scored.filter { case (_, raw, r6) => raw < r6 }
+    assert(roundedUp.nonEmpty)
+    val (edgeId, _, t) = roundedUp(roundedUp.size / 2)
+    val got = Dedup.semDedup(index, t).collect().toSeq
+    assert(got == earlier(t).collect().toSeq)
+    val label = got.map(r => r.getLong(0) -> r.getLong(2)).toMap
+    assert(label(edgeId) == edgeId - 1000, "the pair rounded onto the threshold is kept")
+    val kept = scored.count(_._3 >= t)
+    assert(kept > 1 && kept < copies.size, s"threshold splits the copies: $kept kept")
+    assert(got.count(r => !r.getBoolean(3)) == kept)
+  }
+
+  test("docShingles: the word-count filter keeps exactly the rows the shingle-set filter kept") {
+    import org.apache.spark.sql.functions.size
+    val texts = Seq("", "   ", "\t", "a", " a", "\ta", "a b", "a\tb", "a  b", "  a b",
+      "a b c", "a\t\tb c", "\ta b c", "a b c ", "a b c\t", "a   b \t c d", "a b c d",
+      " a b c d e", "x\ty\tz\tw\tv")
+    val docs = ((texts.map(Option(_)) :+ None).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }).toDF("doc_id", "text")
+    for (n <- 1 to 4) {
+      val earlier = operators.Partitioning.spread(docs)
+        .select(col("doc_id"), Dedup.shingleArray(col("text"), n).as("sh"))
+        .filter(size(col("sh")) >= 1)
+      val got = Dedup.docShingles(docs, n)
+      assert(got.orderBy("doc_id").collect().toSeq ==
+        earlier.orderBy("doc_id").collect().toSeq, s"n = $n")
+    }
+  }
 }

@@ -87,6 +87,20 @@ class SourcesSpec extends AnyFunSuite {
       .getAs[scala.collection.Seq[Float]]("embedding") == orig)
   }
 
+  test("Tables.table infers a file's schema once; a rewritten table infers again") {
+    val d = java.nio.file.Files.createTempDirectory("graft-schema").toString
+    val src = base.limit(5)
+    src.write.parquet(s"$d/t.parquet")
+    val first = sources.Tables.table(spark, d, "t")
+    assert(first.schema == src.schema)
+    assert(TestSpark.jobsOf(sources.Tables.table(spark, d, "t")) == 0,
+      "a second read of an unchanged table must not infer its schema again")
+    src.withColumn("extra", lit(1)).write.mode("overwrite").parquet(s"$d/t.parquet")
+    val again = sources.Tables.table(spark, d, "t")
+    assert(again.schema.fieldNames.toSeq == src.schema.fieldNames.toSeq :+ "extra")
+    assert(again.collect().forall(_.getAs[Int]("extra") == 1))
+  }
+
   test("embeddings (nested array column) round-trip via json") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val path = s"$dir/emb_json"

@@ -1,15 +1,19 @@
 #!/bin/bash
 # Interleaved ABAB focused bench lanes: head1, base1, head2, base2.
 # Usage: tools/ab_lanes.sh <lane-prefix> <comma-query-list>
-# HEAD = working tree (uncommitted changes under src/ required);
-# BASE = the same tree with those changes stashed.
+# HEAD = working tree (uncommitted changes under src/ required, new
+# untracked files included); BASE = the same tree with those changes,
+# new files too, stashed.
 # Writes bench_ab/<prefix>_{head1,base1,head2,base2}.json, then prints the
 # per-query verdicts of tools/ab_compare.py over them.
 set -e
 PREFIX="$1"; QS="$2"
 # with nothing to stash, `git stash push` saves nothing and the later
 # `git stash pop` fails (or pops an unrelated older stash into the tree)
-if git diff --quiet HEAD -- src/; then
+# `git diff` and a plain `git stash push` both miss untracked files: a
+# change that only adds files would be refused, and one that also edits
+# tracked files would compile the new files into the base lanes too
+if [ -z "$(git status --porcelain -- src/)" ]; then
   echo "ab_lanes: no uncommitted change under src/ — nothing to compare" >&2
   exit 1
 fi
@@ -21,13 +25,13 @@ run() {
     sbt -batch "runMain graft.Bench" 2>&1 | tail -1
 }
 run head1
-git stash push -- src/
+git stash push -u -- src/
 trap 'git stash pop' EXIT
 run base1
 git stash pop
 trap - EXIT
 run head2
-git stash push -- src/
+git stash push -u -- src/
 trap 'git stash pop' EXIT
 run base2
 git stash pop
