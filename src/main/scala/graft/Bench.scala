@@ -103,27 +103,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE's coalescer merges post-shuffle partitions up to at least
-      // minPartitionSize (default 1 MiB) — at bench scale whole
-      // aggregated frames are under 1 MiB, so CPU-dense post-shuffle
-      // operators (collect_list + array_sort, verify UDFs) were
-      // serialized onto ONE task (round-15 profile). 128 KiB keeps
-      // those stages parallel while still coalescing trivial shuffles;
-      // a 3-way interleaved A/B (32k / 128k / 1m over the affected
-      // families) showed 32k over-splits small aggregates (doc_quality
-      // 1.6× worse) while 1m serializes the containment family
-      // (dedup_containment 1.7× worse) — 128k was best overall. It is a
-      // local-scale floor: partitions at real data sizes are GBs, and
-      // the coalescer never binds there.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val errors = scala.collection.mutable.LinkedHashSet[String]()

@@ -57,17 +57,6 @@ object DeterminismProbe {
     // latest-wins fold)
     "containment_incremental_compacted", "icws_compacted")
 
-  /** Rows rendered to one sorted canonical string: null-safe, stable
-    * across runs iff the values are. Doubles print via toString (exact
-    * shortest repr — any bit flip shows). */
-  private def canon(df: org.apache.spark.sql.DataFrame): String = {
-    val cols = df.columns.sorted
-    df.selectExpr(cols.map(c => s"`$c`"): _*).collect()
-      .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString)
-        .mkString("\t"))
-      .sorted.mkString("\n")
-  }
-
   /** md5 of a canonical result block — what the JSON artifact records
     * per (query, level, rep) so a sweep's "37/37 stable" claim
     * reproduces from the committed file (round-14 verdict #3: sweep
@@ -97,15 +86,11 @@ object DeterminismProbe {
     // (cores, reps): 3 parallelism levels bracket the driver's range
     val levels = Seq(2, 8, 32)
     val runs: Map[String, Seq[(String, String)]] = levels.flatMap { cores =>
-      val spark = SparkSession.builder().master(s"local[$cores]")
-        .config("spark.sql.shuffle.partitions", cores.toString)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = SparkEntry.localSession(cores)
       spark.sparkContext.setLogLevel("ERROR")
       val out =
         for (rep <- 1 to 3; name <- targets) yield {
-          val s = canon(SparkEntry.queries(name)(spark, sfDir))
+          val s = Verify.canonicalRows(SparkEntry.queries(name)(spark, sfDir)).mkString("\n")
           (name, (s"local[$cores] rep$rep", s))
         }
       spark.stop()

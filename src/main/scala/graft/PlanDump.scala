@@ -155,14 +155,8 @@ object PlanDump {
     val outDir = if (args.length > 2) args(2) else "plans/r15"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       sys.error("PlanDump <suffix> ...: set SPARK_GRAFT_SF_DIR to the data directory"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.get("SPARK_GRAFT_CPUS")
+      .fold(Runtime.getRuntime.availableProcessors)(_.toInt))
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
@@ -179,9 +173,7 @@ object PlanDump {
   }
 
   def main(args: Array[String]): Unit = if (args.nonEmpty) snapshot(args) else {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession(8)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val picks = Seq(

@@ -62,6 +62,31 @@ object SparkEntry {
       s"(strpos('0123456789abcdef', substr(lower($hexCol), ${start + i}, 1)) - 1) * $w"
     }.mkString(" + ")
 
+  /** The local session every main and the test suites run on: `cores`
+    * task slots and as many shuffle partitions, the UTC session time
+    * zone, no UI.
+    */
+  def localSession(cores: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      // AQE's coalescer merges post-shuffle partitions up to at least
+      // minPartitionSize (default 1 MiB) — at bench scale whole
+      // aggregated frames are under 1 MiB, so CPU-dense post-shuffle
+      // operators (collect_list + array_sort, verify UDFs) were
+      // serialized onto ONE task (round-15 profile). 128 KiB keeps
+      // those stages parallel while still coalescing trivial shuffles;
+      // a 3-way interleaved A/B (32k / 128k / 1m over the affected
+      // families) showed 32k over-splits small aggregates (doc_quality
+      // 1.6× worse) while 1m serializes the containment family
+      // (dedup_containment 1.7× worse) — 128k was best overall. It is a
+      // local-scale floor: partitions at real data sizes are GBs, and
+      // the coalescer never binds there.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Search.topK(emb(spark, "/root/testdata/sf0.001"), "cosine", 10)

@@ -23,8 +23,9 @@ import graft.operators.Search
   * `vec_phi_sim` — the SAME native codegen expressions the DataFrame
   * API composes, built to the same tree shape, so both forms optimize
   * to the same plan and (SqlSurfaceSpec pins it) the same results,
-  * bit-for-bit. The DataFrame reference forms live in
-  * [[dataFrameForm]] for exactly that comparison.
+  * bit-for-bit. The DataFrame reference form is the contract query
+  * itself ([[SparkEntry.queries]]), or its [[twins]] entry where the
+  * contract form is the SQL.
   */
 object SqlSurface {
 
@@ -4774,13 +4775,6 @@ object SqlSurface {
     val q = sql(name)
     (s, dir) => { Views.register(s, dir); s.sql(q) }
   }
-
-  /** The DataFrame form of a SqlSurface query, the comparison arm of
-    * SqlSurfaceSpec: its twin where the contract form is the SQL, else
-    * the contract query itself.
-    */
-  def dataFrameForm(name: String): (SparkSession, String) => DataFrame =
-    twins.getOrElse(name, SparkEntry.queries(name))
 
   /** DataFrame twins of the queries whose contract form is the SQL
     * ([[SparkEntry.queries]] runs exactly these names through [[query]]),

@@ -1,28 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A result's rows in canonical form: columns sorted by name, each row
+    * rendered null-safe and tab-joined, rows sorted. Doubles print via
+    * toString (the exact shortest repr), so any bit flip shows.
+    */
+  def canonicalRows(df: DataFrame): Seq[String] = {
+    val cols = df.columns.sorted
+    df.selectExpr(cols.map(c => s"`$c`"): _*).collect().toSeq
+      .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString).mkString("\t"))
+      .sorted
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg (local iteration only; the driver passes two):
     // comma-separated query names to run instead of the full set
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Per-query canonical value dump (flat file, NOT inside the
-    // per-query parquet dir, so globbing readers never see it):
-    // columns sorted by name, rows rendered null-safe and sorted —
-    // the same canonical form a hash compare consumes. A driver-side
+    // per-query parquet dir, so globbing readers never see it) of
+    // canonicalRows, the form a hash compare consumes. A driver-side
     // hash mismatch is then diagnosable from the dumped values alone
     // (CORRECTNESS_r09's two unreproducible reds motivated this).
     // Bounded at 40 rows + a count line per query.
@@ -34,11 +38,8 @@ object Verify {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         val back = spark.read.parquet(s"$outDir/$name")
-        val cols = back.columns.sorted
-        val rows = back.selectExpr(cols.map(c => s"`$c`"): _*).collect()
-          .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString)
-            .mkString("\t")).sorted
-        dump ++= s"== $name rows=${rows.length} cols=${cols.mkString(",")}\n"
+        val rows = canonicalRows(back)
+        dump ++= s"== $name rows=${rows.length} cols=${back.columns.sorted.mkString(",")}\n"
         rows.take(40).foreach(r => dump ++= s"$r\n")
       }
       catch { case e: Throwable =>

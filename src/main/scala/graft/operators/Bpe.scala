@@ -142,12 +142,6 @@ object Bpe {
     out.toSeq
   }
 
-  /** Single-quote escaping for interpolated SQL literals (symbols come
-    * from corpus words and may contain quotes) — used by the oracle
-    * SQL builder in SparkEntry.
-    */
-  private[graft] def sqlLit(s: String): String = s.replace("'", "''")
-
   /** Dump the learned merges as ordered (rank, pair, merged) parquet. */
   def dumpMerges(spark: org.apache.spark.sql.SparkSession,
       merges: Seq[(String, String)], path: String = mergesDumpPath): Unit = {

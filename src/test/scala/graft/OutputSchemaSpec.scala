@@ -25,12 +25,10 @@ import org.apache.spark.sql.types._
   * positionally. Decimal arithmetic INSIDE a query (the order-free
   * folds) is untouched: this pins only what crosses the output
   * boundary. Exceptions must be named here with a reason; there are
-  * currently none.
+  * currently none. The schemas come from the shared sf0.001 build of
+  * the board ([[TestSpark.smallSweep]]).
   */
 class OutputSchemaSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  private val dir = "/root/testdata/sf0.001"
-
   private val allowedLeaves: Set[DataType] = Set(
     StringType, BooleanType, IntegerType, LongType, DoubleType,
     DateType, TimestampType)
@@ -50,13 +48,11 @@ class OutputSchemaSpec extends AnyFunSuite {
   }
 
   test("every contract output schema round-trips reader-canonically") {
-    val violations = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, _) if documentedExceptions.contains(name) => Nil
-      case (name, fn) =>
-        val schema = fn(spark, dir).schema
-        schema.fields.toSeq.flatMap(f => badLeaves(f.dataType, f.name))
-          .map(v => s"$name → $v")
-    }
+    val violations = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(documentedExceptions.contains).flatMap { name =>
+        TestSpark.smallSweep(name).schema.fields.toSeq
+          .flatMap(f => badLeaves(f.dataType, f.name)).map(v => s"$name → $v")
+      }
     assert(violations.isEmpty,
       s"reader-sensitive output columns (canonicalize or document):\n  " +
         violations.mkString("\n  "))

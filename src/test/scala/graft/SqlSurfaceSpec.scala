@@ -16,13 +16,6 @@ class SqlSurfaceSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.map {
-      case null => "∅"
-      case d: Double => d.toString
-      case x => x.toString
-    }.mkString("|")).toSeq
-
   test("the SQL-surface partition is total and disjoint") {
     // VERDICT r9 "What's missing" #1: the non-SQL residue is a checked
     // contract, not prose — every contract query is either on the SQL
@@ -41,10 +34,16 @@ class SqlSurfaceSpec extends AnyFunSuite {
   }
 
   test("every SqlSurface query equals its DataFrame form, row for row") {
+    // the contract form's rows come from the shared sf0.001 build; the
+    // other arm is built here: the SQL where the contract is the
+    // DataFrame form, the DataFrame twin where the contract is the SQL
     for (name <- SqlSurface.sql.keys.toSeq.sorted) {
       Views.register(spark, dir)
-      val viaSql = rows(spark.sql(SqlSurface.sql(name)))
-      val viaDf = rows(SqlSurface.dataFrameForm(name)(spark, dir))
+      val contract = TestSpark.smallSweep(name).rows
+      val (viaSql, viaDf) = SqlSurface.twins.get(name) match {
+        case Some(twin) => (contract, ContractSweep.rows(twin(spark, dir)))
+        case None => (ContractSweep.rows(spark.sql(SqlSurface.sql(name))), contract)
+      }
       // ordered queries compare as sequences; the two single-row aggs
       // (stats, membership) trivially so
       assert(viaSql == viaDf, s"$name: SQL and DataFrame results differ")
@@ -70,7 +69,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
     // (vec_cosine_sim is the same VecDot composition Search.topK builds)
     val sqlPlan = spark.sql(SqlSurface.sql("search_dot_topk"))
       .queryExecution.optimizedPlan.canonicalized
-    val dfPlan = SqlSurface.dataFrameForm("search_dot_topk")(spark, dir)
+    val dfPlan = SqlSurface.twins("search_dot_topk")(spark, dir)
       .queryExecution.optimizedPlan.canonicalized
     assert(sqlPlan == dfPlan,
       s"plans diverge:\nSQL:\n$sqlPlan\nDataFrame:\n$dfPlan")
